@@ -2122,11 +2122,6 @@ def sim_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_lists=8,
         n_probe=2,
         n_iters=2,
-        # the shuffle-free fused Lloyd trainer, enabled here per its own
-        # contract (verify equivalence on the deployment's data first):
-        # oracle-exact at sf0.001/0.01/0.1/1 and measured 3.54->2.59 s at
-        # sf0.1, 9.51->7.27 s at sf1 (r16; OPTIMIZATION_r16.md)
-        fused_lloyd=True,
     )
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 

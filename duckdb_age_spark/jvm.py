@@ -106,15 +106,21 @@ def ensure_jar() -> str:
     return JAR_PATH
 
 
-# SecretManager registered into the JVM registry per session id — the col
-# helpers pass NAMES through only when resolving against this exact manager
-# (any other manager falls back to literal resolution, else the executor
-# snapshot would answer for the wrong manager).
-_JVM_REGISTERED: dict[int, object] = {}
-# per-session listener handle, so re-binding a session to a different (or a
-# previously used) manager REMOVES the old listener instead of accumulating
-# guarded no-ops that pin stopped sessions in memory (ADVICE r11)
-_JVM_LISTENERS: dict[int, tuple[object, object]] = {}
+# The SecretManager staged into the JVM registry, and the listener that
+# keeps it staged, live as attributes on the SparkSession object itself (as
+# register.py's marker does), so they die with the session: no module
+# dict pins stopped sessions, and a new session can never alias a stale
+# entry through a reused id().  The col helpers pass NAMES through only
+# when resolving against this exact manager (any other manager falls back
+# to literal resolution, else the executor snapshot would answer for the
+# wrong manager).
+_JVM_MANAGER_ATTR = "_duckdb_age_jvm_manager"
+_JVM_LISTENER_ATTR = "_duckdb_age_jvm_listener"
+
+
+def _staged_manager(spark):
+    """The SecretManager whose snapshot is staged for ``spark``, or None."""
+    return getattr(spark, _JVM_MANAGER_ATTR, None)
 
 
 def _manager_fingerprint(manager) -> str:
@@ -183,18 +189,17 @@ def register_jvm_crypto(spark, manager=None) -> None:
 
     manager = manager or registered_manager(spark) or default_manager
     _stage_and_register(spark, manager)
-    key = id(spark)
-    if _JVM_REGISTERED.get(key) is not manager:
+    if _staged_manager(spark) is not manager:
         # Drop the previous binding's listener first (ADVICE r11): without
         # this, re-binding a session A->B->A would leave a dead guarded
         # listener on each manager per re-bind — duplicated re-stage work
         # per mutation and stopped sessions pinned through the listener
         # list of a long-lived (e.g. process-default) manager.
-        stale = _JVM_LISTENERS.pop(key, None)
+        stale = getattr(spark, _JVM_LISTENER_ATTR, None)
         if stale is not None:
             old_mgr, old_fn = stale
             old_mgr.remove_listener(old_fn)
-        _JVM_REGISTERED[key] = manager
+        setattr(spark, _JVM_MANAGER_ATTR, manager)
 
         def _resync(mgr=manager):
             # Guarded listener (code-review r11): (a) if the session has
@@ -203,7 +208,7 @@ def register_jvm_crypto(spark, manager=None) -> None:
             # re-staging a stale snapshot; (b) never raise out of
             # SecretManager._notify (a stopped session would otherwise
             # break create/drop for listeners queued after this one).
-            if _JVM_REGISTERED.get(key) is not mgr:
+            if _staged_manager(spark) is not mgr:
                 return
             try:
                 _stage_and_register(spark, mgr)
@@ -216,7 +221,7 @@ def register_jvm_crypto(spark, manager=None) -> None:
                 )
 
         manager.add_listener(_resync)
-        _JVM_LISTENERS[key] = (manager, _resync)
+        setattr(spark, _JVM_LISTENER_ATTR, (manager, _resync))
     install_identity_redaction(spark)
 
 
@@ -252,12 +257,8 @@ def _effective_manager(manager=None):
 
     from .secrets import default_manager
 
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        registered = _JVM_REGISTERED.get(id(spark))
-        if registered is not None:
-            return registered
-    return default_manager
+    staged = _staged_manager(SparkSession.getActiveSession())
+    return default_manager if staged is None else staged
 
 
 def _snapshot(manager=None):
@@ -276,7 +277,7 @@ def _named_passthrough_ok(manager=None) -> bool:
     spark = SparkSession.getActiveSession()
     if spark is None:
         return False
-    return _JVM_REGISTERED.get(id(spark)) is _effective_manager(manager)
+    return _staged_manager(spark) is _effective_manager(manager)
 
 
 def _warn_literal_fallback(name: str) -> None:

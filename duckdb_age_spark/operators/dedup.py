@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from .iterate import loop_join_cache, materialize_and_release, truncate_lineage
+from .similarity import cosine_col
 
 # Per-bucket membership bound for the three LSH self-joins below.  A
 # degenerate band key (thousands of near-identical short/empty docs landing
@@ -492,12 +493,10 @@ def embedding_near_dup_pairs(
     e = e.persist()  # self-join below (see minhash_lsh_pairs)
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), "bucket")
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), "bucket")
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(F.transform(F.col(c), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))  # noqa: E731
     out = (
         a.join(b, "bucket")
         .where(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", F.round(dot / (norm("va") * norm("vb")), 4))
+        .withColumn("cosine", F.round(cosine_col(F.col("va"), F.col("vb")), 4))
         .where(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )

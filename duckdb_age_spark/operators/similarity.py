@@ -33,7 +33,9 @@ def _norm(col):
 
 
 def cosine_col(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine of two array<double> columns; a zero norm on either side is
+    NULL (``try_divide``), as DuckDB's ``x / 0.0`` is, not an ANSI error."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def _broadcast_score_topk(
@@ -107,8 +109,8 @@ def _assign(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the (tiny) centroid set, score
     every corpus vector against all centroids partition-locally, and reduce
     to the argmax with ``max_by`` under a lexicographic (cs, -cent_id)
-    ordering — ties break to the smallest cent_id, the same contract as the
-    previous row_number form.
+    ordering — ties break to the smallest cent_id, and a NULL score (zero
+    norm) ranks below every other, as the oracle's ``ORDER BY cs DESC`` does.
 
     Plan shape (pinned in tests/test_plans.py): a hash aggregate with a
     MAP-SIDE PARTIAL, so the exchange carries one row per corpus vector
@@ -126,79 +128,123 @@ def _assign(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _recenter(assigned: DataFrame) -> DataFrame:
-    """Element-wise mean of each cluster's vectors (one Lloyd step).
-    posexplode → (cent_id, pos) partial aggregation (map-side combine) →
-    re-assemble ordered arrays.  Components rounded to 6 dp so the result is
-    bit-stable across engines and partitionings."""
-    return (
-        assigned.select("cent_id", F.posexplode("v").alias("pos", "x"))
-        .groupBy("cent_id", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("cent_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cent_id", F.transform(F.col("pm"), lambda s: F.round(s["m"], 6)).alias("cv"))
-    )
-
-
 def _round_half_up_6(x: float) -> float:
-    """Replicate Spark's F.round(col, 6) for doubles: the JVM Round
+    """Replicate Spark's F.round(col, 6) for one double: the JVM Round
     expression goes through ``BigDecimal.valueOf(double)`` — i.e. the
-    SHORTEST-decimal string form of the double (Double.toString), NOT its
-    exact binary expansion — then setScale(6, HALF_UP).  Python's repr()
-    is the same shortest round-trip decimal, so Decimal(repr(x)) +
-    ROUND_HALF_UP matches bit-for-bit (pinned against F.round in
-    tests/test_operators.py::test_round_half_up_6_matches_spark_round)."""
+    decimal string ``Double.toString`` gives, NOT the double's exact binary
+    expansion — then setScale(6, HALF_UP).  Python's repr() is the SHORTEST
+    round-trip decimal, which is what ``Double.toString`` returns from JDK 19
+    on (JDK-4511638); older JDKs sometimes print extra digits, which can
+    only matter for a value within those digits of a .5e-6 tie.  The
+    equivalence is pinned against the running JVM's F.round, ties included
+    (tests/test_operators.py::test_round_half_up_6_matches_spark_round).
+    ``+ 0.0`` maps -0.0 to 0.0: BigDecimal has no negative zero."""
     import decimal
     import math
 
     if not math.isfinite(x):
         return x
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("0.000001"), decimal.ROUND_HALF_UP
+    return (
+        float(decimal.Decimal(repr(x)).quantize(decimal.Decimal("0.000001"), decimal.ROUND_HALF_UP))
+        + 0.0
+    )
+
+
+def _round6(x):
+    """:func:`_round_half_up_6` over a numpy array: floor(|x|·1e6 + ½) / 1e6
+    with x's sign, which is exact whenever |x|·1e6 is clearly away from a
+    .5 tie (its rounding error is below 1e-3 units for |x| < 1e6); ties,
+    huge and non-finite values take the exact per-element path."""
+    import numpy as np
+
+    a = np.abs(x) * 1e6
+    out = np.copysign(np.floor(a + 0.5), x) / 1e6 + 0.0
+    exact = ~(np.abs(a - np.floor(a) - 0.5) > 1e-3) | (a >= 1e12)
+    for i in np.flatnonzero(exact):
+        out.flat[i] = _round_half_up_6(float(x.flat[i]))
+    return out
+
+
+def _fold_dot(a, b):
+    """``sum(a[..., i] * b[..., i])`` over the last axis (a and b broadcast)
+    as a left fold from 0.0 — the operation order of the JVM's
+    ``aggregate(zip_with(a, b, *), 0.0, +)`` in :func:`_dot`/:func:`_norm`,
+    so every element is bit-identical to it."""
+    acc = 0.0
+    for i in range(a.shape[-1]):
+        acc = acc + a[..., i] * b[..., i]
+    return acc
+
+
+def _nearest(V, C, ids):
+    """The cent_id :func:`_assign` picks for each row of ``V`` (n × dim)
+    among centroids ``C`` (k × dim) with ascending ``ids``: the same IEEE
+    operation sequence — dims folded left to right (:func:`_fold_dot`),
+    sqrt, d / (vn * cn), HALF_UP to 6 dp (:func:`_round6`).  vn * cn == 0
+    is a NULL score (cosine_col's try_divide, DuckDB's x / 0.0): it ranks
+    below every other score, and ties — all-NULL rows included — go to the
+    smallest cent_id."""
+    import numpy as np
+
+    den = np.sqrt(_fold_dot(V, V))[:, None] * np.sqrt(_fold_dot(C, C))[None, :]
+    d = _fold_dot(V[:, None, :], C[None, :, :])
+    cs = np.full(d.shape, -np.inf)  # stand-in for NULL: below any cosine
+    live = den != 0
+    cs[live] = _round6(d[live] / den[live])
+    return ids[np.argmax(cs, axis=1)]  # first max = smallest cent_id
+
+
+def _lloyd_step(corpus: DataFrame, cents: list) -> list:
+    """One Lloyd step (assign + recenter) as ONE shuffle-free pass over
+    ``corpus`` (vec_id, v).  ``cents`` is [(cent_id, cv)] sorted by
+    cent_id; returns the next one.  The centroids ride the task closure;
+    each task assigns its rows and emits per-centroid partial sums; the
+    driver merges the partials and finishes the 6-dp means.  No
+    corpus-sized exchange per iteration — at 100 TB of embeddings that
+    exchange was the dominant Lloyd cost.
+
+    Invariant: each assignment is the one the JVM :func:`_assign` and the
+    DuckDB oracle (contract._kmeans_ivf_sql) make (:func:`_nearest`; the
+    Double.toString assumption is documented at :func:`_round_half_up_6`).
+    Member sums are a fixed left fold: rows in vec_id order inside a task,
+    partials merged in (partition, cent_id) order, so the result depends
+    only on the data and the partitioning, never on shuffle-fetch order.
+    That order differs from the oracle's avg(), and the 6-dp round of the
+    mean absorbs the last-ulp difference (oracle-pinned at sf0.001-sf1)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark import TaskContext
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+
+    ids = np.array([c[0] for c in cents], dtype=np.int64)
+    C = np.array([c[1] for c in cents], dtype=np.float64)
+
+    def step(batches):
+        sums: dict[int, np.ndarray] = {}
+        counts: dict[int, int] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["v"].to_numpy())
+            best = _nearest(V, C, ids)
+            for c in np.unique(best):
+                rows = V[best == c]
+                counts[c] = counts.get(c, 0) + len(rows)
+                if c in sums:
+                    rows = np.vstack([sums[c], rows])
+                sums[c] = np.cumsum(rows, axis=0)[-1]
+        pid = TaskContext.get().partitionId()
+        order = sorted(sums)
+        yield pd.DataFrame(
+            {
+                "pid": [pid] * len(order),
+                "cent_id": order,
+                "n": [counts[c] for c in order],
+                "s": [sums[c].tolist() for c in order],
+            }
         )
-    )
 
-
-def _lloyd_step_fused(corpus: DataFrame, cent_rows: list) -> list:
-    """One Lloyd step (assign + recenter) as a SINGLE corpus pass with NO
-    shuffle (flagged variant — guide §4.5/§2.4): centroids ride the task
-    closure, each task scores its rows in Python floats with the exact
-    per-element operation order of the JVM expression chain (sequential
-    left-fold dot/norm, HALF_UP 6-dp round, (cs, −cent_id) argmax) and
-    emits per-centroid partial sums; the driver merges partials ordered by
-    partition id and finishes the 6-dp means.  vs the default path this
-    removes the corpus-sized groupBy(vec_id) exchange plus the two recenter
-    exchanges per iteration — at 100 TB of embeddings those are the
-    dominant per-iteration shuffles.
-
-    Float caveat (why this is a FLAG, default off): the member-sum order
-    differs from F.avg's partition-merge order, so means can differ in the
-    last ulp before the 6-dp round.  Pinned bit-identical on the test
-    fixtures (tests/test_operators.py::test_kmeans_fused_lloyd_matches_default);
-    flip SPARK_GRAFT_KMEANS_FUSED=1 only where that equivalence has been
-    verified on the deployment's data."""
-    import math
-
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    cents = [(int(r[0]), [float(x) for x in r[1]]) for r in cent_rows]
-    dim = len(cents[0][1])
-    cnorms = []
-    for _, cv in cents:
-        acc = 0.0
-        for x in cv:
-            acc = acc + x * x
-        cnorms.append(math.sqrt(acc))
-
-    out_schema = StructType(
+    schema = StructType(
         [
             StructField("pid", LongType()),
             StructField("cent_id", LongType()),
@@ -206,69 +252,14 @@ def _lloyd_step_fused(corpus: DataFrame, cent_rows: list) -> list:
             StructField("s", ArrayType(DoubleType())),
         ]
     )
-
-    def step(batches):
-        sums: dict[int, list[float]] = {}
-        counts: dict[int, int] = {}
-        pid = None
-        for pdf in batches:
-            if pid is None and len(pdf):
-                pid = int(pdf["pid"].iloc[0])
-            for v in pdf["v"]:
-                v = [float(x) for x in v]
-                vn_acc = 0.0
-                for x in v:
-                    vn_acc = vn_acc + x * x
-                vn = math.sqrt(vn_acc)
-                best_cs, best_cid = None, None
-                for (cid, cv), cn in zip(cents, cnorms):
-                    d = 0.0
-                    for a, b in zip(v, cv):
-                        d = d + a * b
-                    cs = _round_half_up_6(d / (vn * cn))
-                    # argmax by (cs, -cent_id): strictly greater cs wins,
-                    # equal cs keeps the SMALLER cent_id
-                    if best_cs is None or cs > best_cs or (cs == best_cs and cid < best_cid):
-                        best_cs, best_cid = cs, cid
-                s = sums.get(best_cid)
-                if s is None:
-                    sums[best_cid] = list(v)
-                    counts[best_cid] = 1
-                else:
-                    for i in range(dim):
-                        s[i] = s[i] + v[i]
-                    counts[best_cid] += 1
-        import pandas as pd
-
-        yield pd.DataFrame(
-            {
-                "pid": [pid or 0] * len(sums),
-                "cent_id": sorted(sums),
-                "n": [counts[c] for c in sorted(sums)],
-                "s": [sums[c] for c in sorted(sums)],
-            }
-        )
-
-    partials = (
-        corpus.select(F.spark_partition_id().cast("long").alias("pid"), "v")
-        .mapInPandas(step, out_schema)
-        .collect()
-    )
-    merged_s: dict[int, list[float]] = {}
-    merged_n: dict[int, int] = {}
-    for row in sorted(partials, key=lambda r: (r.pid, r.cent_id)):
-        s = merged_s.get(row.cent_id)
-        if s is None:
-            merged_s[row.cent_id] = list(row.s)
-            merged_n[row.cent_id] = int(row.n)
-        else:
-            for i in range(dim):
-                s[i] = s[i] + row.s[i]
-            merged_n[row.cent_id] += int(row.n)
-    return [
-        (cid, [_round_half_up_6(x / merged_n[cid]) for x in merged_s[cid]])
-        for cid in sorted(merged_s)
-    ]
+    sums: dict[int, np.ndarray] = {}
+    counts: dict[int, int] = {}
+    partials = corpus.sortWithinPartitions("vec_id").select("v").mapInPandas(step, schema)
+    for r in sorted(partials.collect(), key=lambda r: (r.pid, r.cent_id)):
+        s = np.array(r.s, dtype=np.float64)
+        sums[r.cent_id] = sums[r.cent_id] + s if r.cent_id in sums else s
+        counts[r.cent_id] = counts.get(r.cent_id, 0) + r.n
+    return [(c, _round6(sums[c] / counts[c]).tolist()) for c in sorted(sums)]
 
 
 def kmeans_ivf_topk(
@@ -278,11 +269,14 @@ def kmeans_ivf_topk(
     n_lists: int = 8,
     n_probe: int = 2,
     n_iters: int = 2,
-    fused_lloyd: bool | None = None,
 ) -> DataFrame:
-    """IVF ANN with *trained* coarse centroids: ``n_iters`` Lloyd (k-means)
-    iterations from a deterministic seed (the first ``n_lists`` corpus
-    vectors), then the standard assign → probe → rescore query path.
+    """IVF approximate top-k: every corpus vector is assigned to the nearest
+    of ``n_lists`` coarse centroids, and a query scores only the vectors in
+    its ``n_probe`` closest lists, so the inverted-list id is the
+    partition key and each query touches ~n_probe/n_lists of the corpus.
+    The centroids start as the first ``n_lists`` corpus vectors
+    (deterministic seed) and get ``n_iters`` Lloyd (k-means) iterations
+    (:func:`_lloyd_step`); ``n_iters=0`` runs no training job at all.
 
     Scale shape: centroids are k×dim doubles — after each iteration they are
     ``collect()``ed to the driver (tiny) and re-broadcast as a literal frame,
@@ -291,44 +285,22 @@ def kmeans_ivf_topk(
     iteration (the classic distributed-Lloyd cost) and never shuffles by
     centroid.  Rounding to 6 dp makes training reproducible engine-to-engine
     (the DuckDB oracle unrolls the identical iterations as CTEs).
-
-    ``fused_lloyd`` (default off; env ``SPARK_GRAFT_KMEANS_FUSED=1``): run
-    each training iteration as ONE shuffle-free mapInPandas pass instead of
-    the assign+recenter aggregate chain — see :func:`_lloyd_step_fused` for
-    the scale rationale and the float-ordering caveat that keeps this
-    opt-in.  The query path after training is identical either way.
     """
-    import os
-
-    if fused_lloyd is None:
-        fused_lloyd = os.environ.get("SPARK_GRAFT_KMEANS_FUSED") == "1"
-    spark = embeddings.sparkSession
     corpus = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     cents = corpus.where(F.col("vec_id") < n_lists).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
-    if fused_lloyd:
-        cent_rows = [(r.cent_id, r.cv) for r in cents.collect()]
-        # spread the training corpus across the cluster's cores (r16, guide
-        # §2.6): a one-split embeddings scan runs every Lloyd pass on ONE
-        # Python worker (sf1 read flat 8-vs-32-core).  Deterministic ONLY
-        # here: the fused merge sums partials sorted by (pid, cent_id), so
-        # the result is a pure function of the hash partitioning — the
-        # default F.avg path's merge follows task completion order, which a
-        # multi-partition layout would make run-to-run nondeterministic at
-        # 6-dp boundaries, so that path keeps the scan layout.
+    if n_iters:
         from .iterate import spread_small_scan
 
-        train_corpus = spread_small_scan(corpus, "vec_id")
+        # spread the training corpus across the cluster's cores (guide
+        # §2.6): a one-split embeddings scan would run every Lloyd pass on
+        # ONE Python worker
+        train = spread_small_scan(corpus, "vec_id")
+        rows = sorted((r.cent_id, r.cv) for r in cents.collect())
         for _ in range(n_iters):
-            cent_rows = _lloyd_step_fused(train_corpus, cent_rows)
-        cents = spark.createDataFrame(cent_rows, "cent_id bigint, cv array<double>")
-    else:
-        for _ in range(n_iters):
-            rows = _recenter(_assign(corpus, cents)).collect()
-            cents = spark.createDataFrame(
-                [(r.cent_id, r.cv) for r in rows], "cent_id bigint, cv array<double>"
-            )
+            rows = _lloyd_step(train, rows)
+        cents = embeddings.sparkSession.createDataFrame(rows, "cent_id bigint, cv array<double>")
 
     assigned = _assign(corpus, cents)
     scored_q = queries.join(F.broadcast(cents)).select(
@@ -357,47 +329,11 @@ def kmeans_ivf_topk(
 def ivf_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5, n_lists: int = 8, n_probe: int = 2
 ) -> DataFrame:
-    """IVF-style approximate top-k: corpus vectors are assigned to the
-    nearest of ``n_lists`` coarse centroids; a query scores only vectors in
-    its ``n_probe`` closest lists.
-
-    Centroids here are the first ``n_lists`` corpus vectors (deterministic,
-    no training step) — a real deployment would k-means them, but the
-    *query path* (assign → probe → rescore) is identical and that's the part
-    that must scale: the inverted-list id becomes the shuffle/partition key,
-    so each query touches ~n_probe/n_lists of the corpus.
-    """
-    cents = (
-        embeddings.where(F.col("vec_id") < n_lists)
-        .select(F.col("vec_id").alias("cent_id"), _as_double(F.col("embedding")).alias("cv"))
-    )
-    corpus = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-
-    # assign every corpus vector to its nearest centroid (broadcast cents;
-    # max_by partial aggregate — see _assign for the scale rationale)
-    assigned = _assign(corpus, cents)
-
-    # queries probe their n_probe nearest lists
-    scored_q = queries.join(F.broadcast(cents)).select(
-        "query_id", "qv", "cent_id", F.round(cosine_col(F.col("qv"), F.col("cv")), 6).alias("cs")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cent_id"))
-    probes = (
-        scored_q.withColumn("rn", F.row_number().over(w_probe)).where(F.col("rn") <= n_probe).select("query_id", "qv", "cent_id")
-    )
-
-    cand = (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.round(cosine_col(F.col("qv"), F.col("v")), 4).alias("cosine"))
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    """IVF approximate top-k over UNTRAINED centroids (the first ``n_lists``
+    corpus vectors): :func:`kmeans_ivf_topk` with no Lloyd iteration — no
+    training job and no centroid collect, only the assign → probe → rescore
+    query path."""
+    return kmeans_ivf_topk(embeddings, queries, k=k, n_lists=n_lists, n_probe=n_probe, n_iters=0)
 
 
 def lsh_topk(
@@ -529,8 +465,9 @@ def label_centroid_cosines(
         norms.select(F.col("label").alias(k), F.col("norm2").alias(v))
         for k, v in (("label_a", "n2a"), ("label_b", "n2b"))
     )
-    cos = F.col("dot").cast("double") / (
-        F.sqrt(F.col("n2a").cast("double")) * F.sqrt(F.col("n2b").cast("double"))
+    cos = F.try_divide(
+        F.col("dot").cast("double"),
+        F.sqrt(F.col("n2a").cast("double")) * F.sqrt(F.col("n2b").cast("double")),
     )
     out = (
         dots.join(F.broadcast(na), "label_a")
@@ -661,8 +598,10 @@ def int8_topk(
             "query_id",
             "vec_id",
             F.round(
-                idot.cast("double")
-                / (F.sqrt(F.col("pnorm2").cast("double")) * F.sqrt(F.col("qnorm2").cast("double"))),
+                F.try_divide(
+                    idot.cast("double"),
+                    F.sqrt(F.col("pnorm2").cast("double")) * F.sqrt(F.col("qnorm2").cast("double")),
+                ),
                 4,
             ).alias("cosine_q8"),
         )

@@ -67,11 +67,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+            .appName("oracle-check"),
+            shuffle_partitions=16,
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()

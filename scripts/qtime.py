@@ -5,10 +5,10 @@ Usage: python scripts/qtime.py <reps> <query> [<query> ...]
 
 Runs the named queries round-robin (rep 1 of each, rep 2 of each, ...) so
 box-weather drift hits all of them equally, then prints per-query medians.
-Same session config as bench.py; the timed action is .count() to match the
-bench's methodology.  Env: SPARK_GRAFT_SF_DIR (default sf0.1),
-SPARK_GRAFT_CPUS (default 32), QTIME_NOOP=1 to time a noop-sink write
-instead of count() (guide §1.4 isolation).
+Same session config as bench.py.  The timed action is a noop-sink write of
+the full result — what a caller receives; a .count() lets Catalyst prune
+UDF stages and exchanges out of the plan.  Env: SPARK_GRAFT_SF_DIR
+(default sf0.1), SPARK_GRAFT_CPUS (default: the machine's core count).
 """
 
 from __future__ import annotations
@@ -20,12 +20,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
 
 def main() -> int:
     reps, names = int(sys.argv[1]), sys.argv[2:]
-    use_noop = os.environ.get("QTIME_NOOP") == "1"
 
     from pyspark.sql import SparkSession
 
@@ -63,19 +62,12 @@ def main() -> int:
     from duckdb_age_spark import contract
 
     samples: dict[str, list[float]] = {n: [] for n in names}
-    rows: dict[str, int] = {}
     for rep in range(reps):
         for name in names:
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
             t0 = time.time()
-            df = contract.QUERIES[name](spark, SF_DIR)
-            if use_noop:
-                df.write.format("noop").mode("overwrite").save()
-                n = -1
-            else:
-                n = df.count()
+            contract.QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             samples[name].append(time.time() - t0)
-            rows[name] = n
             spark.sparkContext.setJobDescription(None)
     print()
     for name in names:
@@ -84,7 +76,6 @@ def main() -> int:
         print(
             f"{name:36s} median {med:7.3f}  min {s[0]:7.3f}  all "
             + " ".join(f"{x:.2f}" for x in samples[name])
-            + f"  rows={rows[name]}"
         )
     spark.stop()
     return 0

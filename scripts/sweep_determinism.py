@@ -58,12 +58,16 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from duckdb_age_spark.conf import apply_recommended_conf
     from scripts.check_oracle import canon
 
+    # the shuffle partition count rotates per iteration (CONFIGS), so the
+    # recipe leaves it unset here
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("determinism-sweep")
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+            .appName("determinism-sweep")
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()

@@ -535,3 +535,39 @@ def test_spark_registered_jvm_udfs_cross_path(jar):
         "NO-MISMATCH-ERROR",
     ):
         assert bad not in proc.stdout, f"expected-error probe did not raise: {bad}"
+
+
+def test_jvm_registration_lives_on_the_session(monkeypatch):
+    """The staged manager and its listener are attributes of the session
+    object: two sessions never share an entry, and a dropped session is
+    not pinned by module state (no JVM needed — staging is stubbed)."""
+    import gc
+    import importlib
+    import weakref
+
+    from duckdb_age_spark import jvm
+    from duckdb_age_spark.secrets import SecretManager
+
+    register_mod = importlib.import_module("duckdb_age_spark.register")
+    monkeypatch.setattr(jvm, "_stage_and_register", lambda spark, manager: None)
+    monkeypatch.setattr(register_mod, "install_identity_redaction", lambda spark: None)
+
+    class _FakeSpark:
+        pass
+
+    a, b, m1, m2 = _FakeSpark(), _FakeSpark(), SecretManager(), SecretManager()
+    jvm.register_jvm_crypto(a, m1)
+    assert jvm._staged_manager(a) is m1
+    assert jvm._staged_manager(b) is None
+    jvm.register_jvm_crypto(b, m2)
+    assert (jvm._staged_manager(a), jvm._staged_manager(b)) == (m1, m2)
+    # re-binding a session moves its one listener to the new manager
+    jvm.register_jvm_crypto(a, m2)
+    assert jvm._staged_manager(a) is m2 and jvm._staged_manager(b) is m2
+
+    # once the caller drops sessions and managers, nothing keeps them alive
+    gone = weakref.ref(a)
+    del a, b, m1, m2
+    gc.collect()
+    assert gone() is None
+    assert jvm._staged_manager(_FakeSpark()) is None

@@ -173,32 +173,125 @@ def test_kmeans_ivf_trains_and_beats_or_matches_untrained(emb):
     assert sorted(map(tuple, approx)) == sorted(map(tuple, again))
 
 
-def test_kmeans_fused_lloyd_matches_default(emb):
-    """VERDICT r15 item 7: the flagged shuffle-free Lloyd training pass
-    (one mapInPandas per iteration, partials merged on the driver) must be
-    BIT-IDENTICAL to the default assign+recenter aggregate chain on the
-    fixtures — same centroids after training, hence same final top-k."""
-    from duckdb_age_spark.operators.similarity import kmeans_ivf_topk, queries_from_ids
+def _contract_vs_oracle(spark, name, sf_dir):
+    """Run contract query ``name`` on Spark and its DuckDB twin over the
+    embeddings parquet in ``sf_dir``; return both canonicalised frames."""
+    import duckdb
 
-    q = queries_from_ids(emb, [0, 1, 2, 3, 4])
-    default = kmeans_ivf_topk(emb, q, k=5, n_iters=2, fused_lloyd=False).collect()
-    fused = kmeans_ivf_topk(emb, q, k=5, n_iters=2, fused_lloyd=True).collect()
-    assert sorted(map(tuple, default)) == sorted(map(tuple, fused))
+    from duckdb_age_spark import contract
+    from scripts.check_oracle import canon
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    got = canon(contract.QUERIES[name](spark, sf_dir).toPandas())
+    want = canon(con.execute(contract.ORACLE_SQL[name]).fetchdf())
+    return got, want
+
+
+def test_kmeans_ivf_matches_oracle(spark, sf_dir):
+    """The one Lloyd trainer (mapInPandas pass, driver-side merge) trains
+    the centroids the oracle's unrolled avg() CTEs train, so the final
+    top-k is identical."""
+    got, want = _contract_vs_oracle(spark, "sim_topk_kmeans", sf_dir)
+    assert len(got) == 25
+    assert got.equals(want)
+
+
+@pytest.fixture(scope="module")
+def zero_planted_dir(tmp_path_factory, sf_dir):
+    """The fixture embeddings with two all-zero vectors planted: vec_id 0
+    (a query, an IVF seed centroid, and — through the near-dup planting —
+    the twin of another zero vector in the same sign bucket) and vec_id 17
+    (a plain corpus row)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    col = t.schema.get_field_index("embedding")
+    vecs = [
+        [0.0] * len(v) if i in (0, 17) else v
+        for i, v in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+    ]
+    t = t.set_column(col, t.schema.field(col), pa.array(vecs, t.schema.field(col).type))
+    d = tmp_path_factory.mktemp("zero_planted")
+    pq.write_table(t, str(d / "embeddings.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sim_topk_bruteforce",
+        "sim_topk_ivf",
+        "sim_topk_kmeans",
+        "sim_range_search",
+        "dedup_embedding_pairs",
+    ],
+)
+def test_cosine_operators_total_on_zero_vectors(spark, zero_planted_dir, name):
+    """A zero-norm vector makes its cosines NULL — never a DIVIDE_BY_ZERO
+    error under ANSI mode — and NULL ranks below every real score with the
+    usual tie-breaks, exactly as in the DuckDB twin (where x / 0.0 is NULL
+    and ORDER BY ... DESC puts NULLs last)."""
+    got, want = _contract_vs_oracle(spark, name, zero_planted_dir)
+    assert got.equals(want)
+
+
+def test_lloyd_scoring_matches_jvm_assign(spark, emb):
+    """The trainer's numpy scorer picks the centroid the JVM ``_assign``
+    picks for every vector: zero-norm vectors and a zero centroid (NULL
+    scores), and a duplicated centroid (exact ties to the smaller id)."""
+    import numpy as np
+
+    from duckdb_age_spark.operators.similarity import _as_double, _assign, _nearest
+
+    rows = sorted(
+        (r.vec_id, list(r.v))
+        for r in emb.select("vec_id", _as_double(F.col("embedding")).alias("v")).collect()
+    )
+    dim = len(rows[0][1])
+    rows[3] = (rows[3][0], [0.0] * dim)
+    rows[40] = (rows[40][0], [0.0] * dim)
+    cents = [(i, rows[i][1]) for i in range(8)] + [(8, rows[5][1]), (9, [0.0] * dim)]
+    corpus = spark.createDataFrame(rows, "vec_id bigint, v array<double>")
+    cdf = spark.createDataFrame(cents, "cent_id bigint, cv array<double>")
+    want = {r.vec_id: r.cent_id for r in _assign(corpus, cdf).collect()}
+    got = _nearest(
+        np.array([v for _, v in rows]),
+        np.array([c for _, c in cents]),
+        np.array([i for i, _ in cents]),
+    )
+    assert dict(zip([i for i, _ in rows], got.tolist())) == want
+    assert want[rows[3][0]] == 0 and want[rows[5][0]] == 5
 
 
 def test_round_half_up_6_matches_spark_round(spark):
-    """The fused Lloyd path's Python rounding must replicate F.round(x, 6)
-    (BigDecimal HALF_UP over the exact binary double) including negatives
-    and exact .5e-6 boundaries."""
-    from duckdb_age_spark.operators.similarity import _round_half_up_6
+    """The Lloyd trainer's Python rounding — scalar and vectorized — must
+    replicate F.round(x, 6) (BigDecimal HALF_UP over Double.toString)
+    bit for bit, including negatives, signed zeros, and adversarial .5e-6
+    ties and their neighbouring doubles."""
+    import math
+    import random
 
+    import numpy as np
+
+    from duckdb_age_spark.operators.similarity import _round6, _round_half_up_6
+
+    rng = random.Random(7)
+    ties = [(rng.randrange(0, 2_000_000) + 0.5) / 1e6 for _ in range(400)]
+    ties += [(n + 0.5) / 1e6 for n in range(200)] + [k + 0.0000005 for k in range(1, 20)]
+    near = [math.nextafter(t, d) for t in ties[:200] for d in (0.0, 2.0)]
     vals = [
         0.1234565, -0.1234565, 0.9999995, -0.9999995, 1.0000004999,
         0.12345649999, -2.5e-6, 2.5e-6, 0.0, 1.0, -1.0, 0.3333333333,
+        -1e-9, -0.0, 4.9999999e-7, -4.9999999e-7, 123456.7890125, 1e13 + 0.5,
     ]
+    vals += ties + near + [rng.uniform(-1.0, 1.0) for _ in range(400)]
+    vals += [-v for v in ties + near]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = [r.r for r in df.select(F.round("x", 6).alias("r")).collect()]
-    assert got == [_round_half_up_6(v) for v in vals]
+    got = [r.r.hex() for r in df.select(F.round("x", 6).alias("r")).collect()]
+    assert got == [_round_half_up_6(v).hex() for v in vals]
+    assert got == [v.hex() for v in _round6(np.array(vals)).tolist()]
 
 
 def test_sessionize_gap_invariant(events):
