@@ -24,11 +24,18 @@ the operators actually find near-dups, not just that they return empty sets.
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegralType, StructField, StructType
 
-from .iterate import loop_join_cache, materialize_and_release, truncate_lineage
+from .iterate import (
+    collect_small_edges,
+    loop_join_cache,
+    materialize_and_release,
+    truncate_if_needed,
+    truncate_lineage,
+)
 from .similarity import cosine_col
 
 # Per-bucket membership bound for the three LSH self-joins below.  A
@@ -511,19 +518,50 @@ def embedding_near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side connected components of the undirected edges (a, b):
+    returns (ids, label) with every touched id labelled by the minimum id
+    of its component.
+
+    Vectorized hook-and-shortcut (Shiloach–Vishkin): ids are factorized to
+    sorted positions, so the minimum position IS the minimum id.  Each
+    round hooks the larger of every edge's two roots onto the smaller
+    (``np.minimum.at``), then pointer-jumps until every node points at a
+    root; ``parent[i] ≤ i`` always holds, so each root is its tree's
+    minimum.  It stops once both ends of every edge share a root; each
+    round merges every unfinished tree with a neighbour, so it takes
+    O(log n) rounds of O(edges) numpy work."""
+    ids, pos = np.unique(np.concatenate([a, b]), return_inverse=True)
+    a, b = pos[: len(a)], pos[len(a) :]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        if (ra == rb).all():
+            return ids, ids[parent]
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while True:
+            nxt = parent[parent]
+            if (nxt == parent).all():
+                break
+            parent = nxt
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    max_driver_edges: int | None = None,
 ) -> DataFrame:
     """Label every node with the MINIMUM node id reachable through ``edges``
     (undirected) — the clustering step that turns near-dup PAIRS into dedup
     GROUPS, so "keep one document per group" is well-defined even when dup
     relations are only pairwise-transitive (a~b, b~c but a≁c directly).
 
-    ``edges``: (src, dst) — direction ignored.  ``nodes``: (id) — must cover
+    ``edges``: (src, dst) — direction ignored; an edge with a NULL endpoint
+    links nothing and is dropped first (in both regimes), so a NULL id is
+    never labelled unless ``nodes`` lists it.  ``nodes``: (id) — must cover
     every endpoint plus any singletons to label.  Returns (id, cluster_id).
 
     Algorithm: distributed min-label propagation.  Each round every node
@@ -544,80 +582,37 @@ def connected_components(
     unchanged sum IS the fixpoint) — a 1-row scalar action moving only a
     decimal to the driver, never data.
 
-    Small-graph regime (r15 optimization round): near-dup pair graphs are
-    SPARSE — every caller in this repo feeds edges from an already-
-    materialized pairs operator, and the edge count is orders of magnitude
-    below the doc count (621 pairs / 11k docs at sf0.1; 31k at sf10).  When
-    the edge list fits comfortably on the driver (``max_driver_edges``,
-    default 100k rows ≈ a few MB, env ``SPARK_GRAFT_CC_DRIVER_EDGES``; 0
-    disables), the min-label fixpoint runs as a driver-side union-find and
-    the (id, label) table ships back — the same move as a broadcast join:
-    collect the provably-small side, skip the iterative shuffles (guide
-    §3.1; the k-centroid kmeans collect adjudicated at r13 is the same
-    class).  One count() probe decides the regime — the edge frame is
-    lineage-truncated first when the caller did not already do so, so the
-    probe's work is reused by whichever regime runs (ADVICE r15: the bare
-    count used to execute span_dedup_clusters' whole banded pipeline an
-    extra time).  Above the cap, the distributed loop below runs unchanged —
-    the sf10 span-CC evidence (33 M edges, 302 s) is loop-regime.  The
-    driver regime additionally requires integral node ids (ADVICE r15: the
-    collect casts to long; non-numeric ids go to the loop, which only needs
-    orderable ids).  Labels are identical by construction: both regimes
-    assign every touched node the exact minimum reachable id.
+    Small-graph regime: near-dup pair graphs are SPARSE — every caller in
+    this repo feeds edges from an already-materialized pairs operator, and
+    the edge count is orders of magnitude below the doc count (621 pairs /
+    11k docs at sf0.1; 31k at sf10).  When the edge list fits under the
+    session's ``autoBroadcastJoinThreshold`` (:func:`~.iterate.
+    collect_small_edges`: an exact row count, then one collect; integral
+    ids only, -1 disables), the fixpoint runs on the driver
+    (:func:`_min_labels`) and the (id, label) table ships back — the same
+    move as a broadcast join.  The edge frame is lineage-truncated first
+    unless the caller handed a checkpoint leaf, and the gate's count
+    materializes it, so over the cap the loop reuses that work (ADVICE r15: span_dedup_clusters feeds an unmaterialized
+    banded-join pipeline — 33 M edges / ~158 s at sf10).  Labels are
+    identical by construction: both regimes assign every touched node the
+    exact minimum reachable id.
     """
-    if max_driver_edges is None:
-        max_driver_edges = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "100000"))
-    # Driver regime requires INTEGRAL node ids (ADVICE r15): the union-find
-    # collects ids cast to long, so a non-numeric id would cast to NULL and
-    # silently label every node a singleton.  Non-integral ids skip the
-    # probe entirely and run the distributed loop, which only needs
-    # orderable ids.
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    _integral = (ByteType, ShortType, IntegerType, LongType)
-    ids_integral = all(
-        isinstance(edges.schema[c].dataType, _integral) for c in ("src", "dst")
+    edges = truncate_if_needed(
+        edges.select("src", "dst").where(F.col("src").isNotNull() & F.col("dst").isNotNull()),
+        checkpoint_dir,
     )
-    if max_driver_edges > 0 and ids_integral:
-        # Materialize edges BEFORE the probe count unless the caller already
-        # handed a checkpoint leaf (ADVICE r15: span_dedup_clusters feeds an
-        # UNmaterialized banded-join pipeline — 33 M edges / ~158 s at sf10 —
-        # which the bare count() executed a whole extra time just to decide
-        # the regime).  The blocks are reused by whichever regime runs: the
-        # driver collect below, or the loop's sym union (which reads edges
-        # TWICE).
-        from .iterate import truncate_if_needed
-
-        edges = truncate_if_needed(edges)
-    if max_driver_edges > 0 and ids_integral and edges.count() <= max_driver_edges:
-        rows = edges.select(
-            F.col("src").cast("long"), F.col("dst").cast("long")
-        ).collect()
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for src, dst in rows:
-            if src not in parent:
-                parent[src] = src
-            if dst not in parent:
-                parent[dst] = dst
-            ra, rb = find(src), find(dst)
-            if ra != rb:
-                # union by MIN root id — the root IS the component label
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        spark = edges.sparkSession
-        labels = spark.createDataFrame(
-            [(n, find(n)) for n in parent], "id long, label long"
+    sym = edges.select(F.col("src").alias("node"), F.col("dst").alias("neigh")).unionAll(
+        edges.select(F.col("dst").alias("node"), F.col("src").alias("neigh"))
+    )
+    small = collect_small_edges(edges, ("src", "dst"))
+    if small is not None:
+        ids, label = _min_labels(*small)
+        # the loop regime's (id, label) types: the widened endpoint type, a
+        # NULL-free id and a min-aggregate (nullable) label
+        id_type = sym.schema["node"].dataType
+        labels = edges.sparkSession.createDataFrame(
+            pa.table({"id": ids, "label": label}),
+            StructType([StructField("id", id_type, False), StructField("label", id_type, True)]),
         )
         singletons = nodes.join(labels.select("id"), "id", "left_anti").select(
             "id", F.col("id").alias("label")
@@ -625,9 +620,6 @@ def connected_components(
         out = labels.unionByName(singletons)
         return out.select("id", F.col("label").alias("cluster_id"))
 
-    sym = edges.select(F.col("src").alias("node"), F.col("dst").alias("neigh")).unionAll(
-        edges.select(F.col("dst").alias("node"), F.col("src").alias("neigh"))
-    )
     # Co-partition + pre-sort the edge table ON THE JOIN KEY before caching
     # (iterate.loop_join_cache).  Each round is its own ACTION (the
     # convergence check), so cross-round exchange reuse never applies: a
@@ -671,7 +663,7 @@ def connected_components(
             )
             return truncate_lineage(nxt, checkpoint_dir)
 
-        if ids_integral:
+        if isinstance(sym.schema["node"].dataType, IntegralType):
             label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
             prev = labels.agg(label_sum).first()[0]
             if prev is not None:  # empty graph: skip the loop, labels is 0-row

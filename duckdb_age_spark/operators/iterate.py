@@ -10,11 +10,17 @@ nests exponentially.  Two modes:
   (HDFS/S3/NFS on a real cluster) — survives executor loss, the setting a
   1000-executor run of a long CC/BFS loop should use.  The dir is set once
   per SparkContext (Spark keeps one global checkpoint dir).
+
+It also holds the small-graph gate (:func:`collect_small_edges`) that lets a
+fixpoint operator run its whole loop on the driver when the edge list is
+small enough to ship to one JVM.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql.types import IntegralType
 
 
 def is_lineage_truncated(df: DataFrame) -> bool:
@@ -201,3 +207,50 @@ def loop_join_cache(
     if n_partitions is None:
         n_partitions = loop_cache_partitions(df.sparkSession)
     return df.repartition(n_partitions, key).sortWithinPartitions(key).persist()
+
+
+def collect_small_edges(edges: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...] | None:
+    """Collect ``edges[cols]`` to the driver as int64 arrays when the list is
+    small, else None.
+
+    This is the one "small graph → iterate on the driver" gate of the
+    fixpoint family (Pregelix's point: one logical superstep, a physical
+    plan chosen by data size).  Small means at most ``budget ÷ (8 B ×
+    len(cols))`` rows, where the byte budget is the session's
+    ``autoBroadcastJoinThreshold`` — its own "small enough to ship to one
+    JVM" setting — clamped to half of ``spark.driver.maxResultSize`` so the
+    collect can never abort the job (655,360 two-column edges at the 10 MiB
+    / 1 GiB defaults).  A threshold of -1 disables the regime.
+
+    The decision is an exact row count, not plan statistics (checkpoint
+    leaves carry inflated size estimates: a 62-row pairs leaf reports
+    ~1.6e20 bytes).  Callers pass a lineage-truncated frame
+    (:func:`truncate_if_needed`), and the count is one shuffle-free job
+    over it that also materializes a lazy checkpoint's blocks — the blocks
+    the driver collect, or the distributed path when the count is over the
+    cap, then reads.  So a graph over the cap pays one count scan of
+    materialized blocks and never ships a row to the driver.
+
+    Returns None without running a job when any column is not integral (a
+    cast to long would turn other ids into NULLs) or the budget is not
+    positive, and after the count when the list is over the cap.  It also
+    returns None when a collected column holds a NULL: the driver kernels
+    assume NULL-free ids and weights, and the distributed loops already
+    give NULLs Spark's semantics.
+    """
+    if not all(isinstance(edges.schema[c].dataType, IntegralType) for c in cols):
+        return None
+    spark = edges.sparkSession
+    budget = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+    max_result = int(
+        spark.sparkContext._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    )
+    if max_result > 0:  # 0 = unlimited
+        budget = min(budget, max_result // 2)
+    cap = budget // (8 * len(cols))
+    if cap <= 0 or edges._jdf.queryExecution().toRdd().count() > cap:
+        return None
+    table = edges.select(*cols).toArrow()
+    if any(table.column(c).null_count for c in cols):
+        return None
+    return tuple(table.column(c).to_numpy().astype(np.int64, copy=False) for c in cols)

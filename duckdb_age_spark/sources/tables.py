@@ -81,19 +81,20 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(events_schema(nanos=False)).parquet(path)
 
 
-_SCHEMA_CACHE: dict[tuple[str, float, int], StructType] = {}
+_SCHEMA_CACHE: dict[str, tuple[tuple[float, int], StructType]] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table; normalizes the events.ts column (see
     :func:`read_events`).
 
-    The parquet schema is cached per (absolute path, mtime, size) — ADVICE
-    r15: a path-only key served a STALE schema when a fixture file was
-    rewritten with different columns (missing/renamed columns silently read
-    back as NULL); the stat triple invalidates on any rewrite while still
-    skipping the expensive part.  Why cache at all (r15 optimization
-    round): schema inference reads the footer on the DRIVER on every
+    The parquet schema is cached per absolute path, stamped with the
+    file's (mtime, size) — ADVICE r15: a path-only key served a STALE
+    schema when a fixture file was rewritten with different columns
+    (missing/renamed columns silently read back as NULL), so a stat change
+    re-infers and REPLACES the path's entry; one entry per file, however
+    often it is rewritten.  Why cache at all (r15 optimization round):
+    schema inference reads the footer on the DRIVER on every
     ``spark.read.parquet`` call (~90 ms here), and the driver contract
     constructs each query fresh per invocation, so across a 193-query
     3-rep bench the repeated inference alone cost tens of seconds; the
@@ -104,9 +105,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     path = os.path.abspath(f"{sf_dir}/{name}.parquet")
     st = os.stat(path)
-    key = (path, st.st_mtime, st.st_size)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    return spark.read.schema(schema).parquet(path)
+    stamp = (st.st_mtime, st.st_size)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = (stamp, spark.read.parquet(path).schema)
+        _SCHEMA_CACHE[path] = hit
+    return spark.read.schema(hit[1]).parquet(path)

@@ -27,6 +27,26 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def broadcast_threshold(spark):
+    """A setter for ``spark.sql.autoBroadcastJoinThreshold`` whose value is
+    restored when the test ends.  -1 turns off broadcast joins and the graph
+    operators' small-graph driver regime
+    (operators/iterate.collect_small_edges), so their distributed loops
+    run."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        yield lambda value: spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.fixture()
+def broadcast_off(broadcast_threshold):
+    """``spark.sql.autoBroadcastJoinThreshold=-1`` for one test."""
+    broadcast_threshold("-1")
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

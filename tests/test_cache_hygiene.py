@@ -258,3 +258,22 @@ def test_every_contract_query_leaves_cache_manager_empty(spark):
             leakers.append(name)
             spark.catalog.clearCache()
     assert not leakers, f"operators leaking CacheManager entries: {leakers}"
+
+
+def test_read_table_schema_cache_keeps_one_entry_per_file(spark, tmp_path):
+    """The parquet schema cache is keyed by path and stamped with (mtime,
+    size): rewriting a fixture file with other columns re-infers its schema
+    and REPLACES the entry, so the cache holds one entry per file instead of
+    one stale entry per rewrite."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_age_spark.sources import tables
+
+    path = os.path.abspath(str(tmp_path / "docs.parquet"))
+    for cols in (["a"], ["a", "b"], ["a", "b", "c"]):
+        pq.write_table(pa.table({c: list(range(5)) for c in cols}), path)
+        df = tables.read_table(spark, str(tmp_path), "docs")
+        assert df.columns == cols
+        assert df.where(F.col(cols[-1]).isNull()).count() == 0
+    assert [k for k in tables._SCHEMA_CACHE if path in str(k)] == [path]

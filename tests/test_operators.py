@@ -867,13 +867,13 @@ def test_connected_components_long_path_converges(spark):
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
-def test_connected_components_driver_and_loop_regimes_agree(spark):
-    """r15 optimization round: below ``max_driver_edges`` the min-label
-    fixpoint runs as a driver-side union-find; above (or with the cap
-    disabled via 0) the distributed loop runs.  Both regimes must assign
-    every node the exact minimum reachable id — pinned on a graph with
-    merging chains (unions arriving in adverse order), a separate
-    component, reversed edge directions, and singletons."""
+def test_connected_components_driver_and_loop_regimes_agree(spark, broadcast_threshold):
+    """Below the session's broadcast threshold the min-label fixpoint runs
+    on the driver (iterate.collect_small_edges); with the threshold at -1
+    the distributed loop runs.  Both regimes must assign every node the
+    exact minimum reachable id — pinned on a graph with merging chains
+    (unions arriving in adverse order), a separate component, reversed
+    edge directions, and singletons."""
     from duckdb_age_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
@@ -886,16 +886,31 @@ def test_connected_components_driver_and_loop_regimes_agree(spark):
         [(i,) for i in (1, 2, 3, 4, 5, 7, 20, 30, 40, 41, 99)], "id long"
     )
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 7: 1, 20: 20, 30: 20, 40: 40, 41: 40, 99: 99}
-    driver = {
-        r.id: r.cluster_id
-        for r in connected_components(edges, nodes, max_driver_edges=100).collect()
-    }
-    loop = {
-        r.id: r.cluster_id
-        for r in connected_components(edges, nodes, max_driver_edges=0).collect()
-    }
+    driver, loop = (
+        dict(rows)
+        for _, rows in _in_both_regimes(
+            broadcast_threshold, lambda: _schema_and_rows(connected_components(edges, nodes))
+        )
+    )
     assert driver == expected
     assert loop == expected
+
+
+def test_connected_components_drops_null_endpoint_edges(spark, broadcast_threshold):
+    """An edge with a NULL endpoint links nothing: both regimes drop it
+    before running, so node 3 (NULL's other neighbour) stays a singleton,
+    no NULL-id row appears, and neither regime raises (the driver
+    union-find used to raise TypeError on NULL < int; the loop used to
+    return a NULL row labelled 1)."""
+    from duckdb_age_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame([(1, 2), (None, 3), (2, None)], "src long, dst long")
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "id long")
+    driver, loop = _in_both_regimes(
+        broadcast_threshold, lambda: _schema_and_rows(connected_components(edges, nodes))
+    )
+    assert driver == loop
+    assert dict(driver[1]) == {1: 1, 2: 1, 3: 3, 4: 4}
 
 
 def test_connected_components_non_integral_ids_use_loop(spark):
@@ -914,7 +929,7 @@ def test_connected_components_non_integral_ids_use_loop(spark):
     )
     got = {
         r.id: r.cluster_id
-        for r in connected_components(edges, nodes, max_driver_edges=100).collect()
+        for r in connected_components(edges, nodes).collect()
     }
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z"}
 
@@ -1227,11 +1242,12 @@ def test_pagerank_exact_properties(spark):
     assert 0 < sum(a.values()) <= SCALE
 
 
-def test_pagerank_checkpoint_every_truncates_lineage(spark):
+def test_pagerank_checkpoint_every_truncates_lineage(spark, broadcast_off):
     """n_iter=20 with checkpoint_every=5: values are bit-identical to the
     unrolled run (fixed-point math is partitioning-independent) and the
     final plan no longer embeds all 20 iterations — lineage is cut at the
-    last checkpoint."""
+    last checkpoint.  ``broadcast_off`` pins the distributed loop (this
+    12-node graph would otherwise run on the driver)."""
     from duckdb_age_spark.operators.graph import pagerank_exact
 
     edges = spark.createDataFrame(
@@ -1248,6 +1264,160 @@ def test_pagerank_checkpoint_every_truncates_lineage(spark):
     # and it is materially smaller than 20 unrolled iterations
     plan_plain = plain._jdf.queryExecution().toString()
     assert len(plan_ckpt) < len(plan_plain) / 2
+
+
+def _in_both_regimes(set_threshold, run):
+    """``run()`` under the session's default broadcast threshold — the
+    small-graph driver regime — then under autoBroadcastJoinThreshold=-1,
+    which pins the distributed loops; ``set_threshold`` is the
+    ``broadcast_threshold`` fixture, which restores the default."""
+    default = run()
+    set_threshold("-1")
+    return default, run()
+
+
+def _schema_and_rows(df):
+    return df.schema, sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _random_graph(seed: int, with_nulls: bool) -> list[tuple]:
+    """(src, dst, w) rows over ids 0..29: duplicate edges (sampling with
+    replacement), self-loops, a dangling sink (99, never a src), and
+    optionally NULL endpoints."""
+    import random
+
+    rng = random.Random(seed)
+    rows = [(rng.randrange(30), rng.randrange(30), rng.randrange(1, 10)) for _ in range(120)]
+    rows += [(7, 7, 3), (7, 7, 3), (4, 99, 5), (12, 99, 1)]
+    if with_nulls:
+        rows += [(None, 5, 2), (6, None, 4)]
+    return rows
+
+
+def _count_driver_runs(monkeypatch) -> dict[str, int]:
+    """Count the small-graph kernels that ran to completion (PageRank's
+    returns None when it declines)."""
+    from duckdb_age_spark.operators import dedup, graph
+
+    ran = {"pagerank": 0, "cc": 0}
+    real_pr, real_cc = graph._pagerank_on_driver, dedup._min_labels
+
+    def spy_pr(*a, **k):
+        out = real_pr(*a, **k)
+        ran["pagerank"] += out is not None
+        return out
+
+    def spy_cc(*a, **k):
+        ran["cc"] += 1
+        return real_cc(*a, **k)
+
+    monkeypatch.setattr(graph, "_pagerank_on_driver", spy_pr)
+    monkeypatch.setattr(dedup, "_min_labels", spy_cc)
+    return ran
+
+
+@pytest.mark.parametrize(
+    "id_type,seed,with_nulls", [("int", 1, False), ("bigint", 2, False), ("int", 3, True)]
+)
+def test_small_graph_regime_matches_distributed(
+    spark, monkeypatch, broadcast_threshold, id_type, seed, with_nulls
+):
+    """The small-graph driver regime (iterate.collect_small_edges + numpy
+    kernels) returns the same rows AND schema as the distributed loops for
+    pagerank_exact, weighted_pagerank and connected_components, on seeded
+    random graphs with duplicate edges, self-loops, a dangling node,
+    isolated nodes and int32 ids.  An edge list with a NULL endpoint sends
+    both PageRanks to the distributed loop in either regime; CC drops those
+    edges first and still runs on the driver."""
+    from duckdb_age_spark.operators import dedup, graph
+
+    ran = _count_driver_runs(monkeypatch)
+    edges = spark.createDataFrame(
+        _random_graph(seed, with_nulls), f"src {id_type}, dst {id_type}, w int"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(40)] + [(99,)], f"id {id_type}")
+
+    def run():
+        return [
+            _schema_and_rows(graph.pagerank_exact(edges.select("src", "dst"), n_iter=4)),
+            _schema_and_rows(graph.weighted_pagerank(edges, n_iter=4)),
+            _schema_and_rows(dedup.connected_components(edges.select("src", "dst"), nodes)),
+        ]
+
+    driver, loop = _in_both_regimes(broadcast_threshold, run)
+    assert driver == loop
+    assert all(rows for _, rows in driver)
+    # the default session took the driver regime, except PageRank on NULLs
+    assert ran == {"pagerank": 0 if with_nulls else 2, "cc": 1}
+
+
+def test_small_graph_cap_honours_max_result_size(spark, monkeypatch):
+    """The gate's byte budget is clamped to half of spark.driver.maxResultSize:
+    with maxResultSize (64 KiB) below the broadcast threshold (10 MiB), a
+    3,000-edge list (48 KB of int64 pairs, over the 32 KiB budget) must run
+    the distributed loops instead of a collect that would abort the job."""
+    from duckdb_age_spark.operators import dedup, graph
+
+    ran = _count_driver_runs(monkeypatch)
+    edges = spark.range(3000).select(
+        (F.col("id") % 100).alias("src"), ((F.col("id") * 7 + 1) % 100).alias("dst")
+    )
+    nodes = spark.range(100)
+    conf = spark.sparkContext._jsc.sc().conf()
+    prev = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", "64k")
+    try:
+        pr = graph.pagerank_exact(edges).collect()
+        cc = dedup.connected_components(edges, nodes).collect()
+    finally:
+        conf.set("spark.driver.maxResultSize", prev)
+    assert ran == {"pagerank": 0, "cc": 0}
+    assert len(pr) == 100 and len(cc) == 100
+    # under the default 1 GiB the same graph takes the driver regime
+    graph.pagerank_exact(edges).collect()
+    dedup.connected_components(edges, nodes).collect()
+    assert ran == {"pagerank": 1, "cc": 1}
+
+
+def test_weighted_pagerank_overflow_takes_distributed_path(spark, monkeypatch, broadcast_threshold):
+    """rank·w beyond int64 (w = 10⁸ against ranks of SCALE/3): numpy would
+    wrap silently, so the driver kernel declines and the distributed loop
+    runs in both regimes — under ANSI both raise the same overflow."""
+    from pyspark.errors import ArithmeticException
+
+    from duckdb_age_spark.operators import graph
+
+    declined = []
+    real = graph._pagerank_on_driver
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        declined.append(out is None)
+        return out
+
+    def run():
+        with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+            graph.weighted_pagerank(edges, n_iter=2).collect()
+
+    monkeypatch.setattr(graph, "_pagerank_on_driver", spy)
+    edges = spark.createDataFrame(
+        [(1, 2, 10**8), (2, 3, 10**8), (3, 1, 10**8)], "src long, dst long, w long"
+    )
+    _in_both_regimes(broadcast_threshold, run)
+    assert declined == [True]
+
+
+def test_pagerank_exact_empty_edge_list(spark, broadcast_threshold):
+    """An empty edge list returns 0 rows of (node bigint, rank bigint) in
+    both regimes, as weighted_pagerank does — not ZeroDivisionError."""
+    from duckdb_age_spark.operators.graph import pagerank_exact
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    for schema, rows in _in_both_regimes(
+        broadcast_threshold, lambda: _schema_and_rows(pagerank_exact(edges))
+    ):
+        assert schema.simpleString() == "struct<node:bigint,rank:bigint>"
+        assert rows == []
 
 
 def test_pii_scrub_counts_and_redacts(spark):

@@ -1046,7 +1046,7 @@ def test_fuzzy_large_probe_regime_shuffles_instead_of_broadcasting(t):
         fuzzy_name_pairs(records, probes, probe_regime="bogus")
 
 
-def test_cc_round_join_reuses_cached_edge_partitioning(spark, monkeypatch):
+def test_cc_round_join_reuses_cached_edge_partitioning(spark, monkeypatch, broadcast_off):
     """r13 sf10 profile finding: every connected-components round is its own
     ACTION (the convergence check), so cross-round exchange reuse never
     applies and a plain persist() of the symmetric edge table re-shuffled
@@ -1063,10 +1063,11 @@ def test_cc_round_join_reuses_cached_edge_partitioning(spark, monkeypatch):
     connected_components ITSELF with a recording wrapper around
     loop_join_cache: the assertion plan is built from the very cached frame
     the operator used (reverting the cache, or changing its key, fails
-    here).  Broadcast is disabled to pin the large-labels (sort-merge)
-    regime that sf10 actually runs - with small labels AQE broadcasts and
-    the edge cache needs no partitioning at all, which is fine but not the
-    regime under test."""
+    here).  ``broadcast_off`` pins the large-labels (sort-merge) regime that
+    sf10 actually runs - with small labels AQE broadcasts and the edge cache
+    needs no partitioning at all, which is fine but not the regime under
+    test - and keeps this 50k-edge graph off the small-graph driver
+    regime."""
     import re
 
     from duckdb_age_spark.operators import dedup as dedup_mod
@@ -1081,38 +1082,31 @@ def test_cc_round_join_reuses_cached_edge_partitioning(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(dedup_mod, "loop_join_cache", recording)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    edges = spark.range(0, 50_000).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    nodes = spark.range(0, 50_001).select(F.col("id"))
+    result = dedup_mod.connected_components(edges, nodes, max_iter=2)
+    # the operator must route its loop table through loop_join_cache
+    # keyed on the per-round join column
+    assert [k for k, _ in calls] == ["neigh"], calls
+    sym = calls[0][1]
+    # the operator unpersists on exit (cache hygiene, r14) — re-persist
+    # the SAME frame to reconstruct the round-join physical plan the
+    # loop executed, then assert the cache side joins with no Exchange
+    # and no Sort (InMemoryTableScan feeds SortMergeJoin directly)
+    sym = sym.persist()
     try:
-        edges = spark.range(0, 50_000).select(
-            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-        )
-        nodes = spark.range(0, 50_001).select(F.col("id"))
-        # max_driver_edges=0 pins the LOOP regime under test (the r15
-        # driver union-find would otherwise swallow this 50k-edge graph)
-        result = dedup_mod.connected_components(edges, nodes, max_iter=2, max_driver_edges=0)
-        # the operator must route its loop table through loop_join_cache
-        # keyed on the per-round join column
-        assert [k for k, _ in calls] == ["neigh"], calls
-        sym = calls[0][1]
-        # the operator unpersists on exit (cache hygiene, r14) — re-persist
-        # the SAME frame to reconstruct the round-join physical plan the
-        # loop executed, then assert the cache side joins with no Exchange
-        # and no Sort (InMemoryTableScan feeds SortMergeJoin directly)
-        sym = sym.persist()
-        try:
-            # materialize the re-registered cache first — exactly what the
-            # operator's round-1 convergence action does; an unmaterialized
-            # AQE cached plan does not expose outputPartitioning yet
-            sym.count()
-            labels = result.select("id", F.col("cluster_id").alias("label"))
-            prop = sym.join(labels, sym.neigh == labels.id).select("node", "label")
-            plan = prop._jdf.queryExecution().executedPlan().toString()
-            assert re.search(r"SortMergeJoin[^\n]*\n\s*:- InMemoryTableScan", plan), plan[:1500]
-        finally:
-            sym.unpersist()
+        # materialize the re-registered cache first — exactly what the
+        # operator's round-1 convergence action does; an unmaterialized
+        # AQE cached plan does not expose outputPartitioning yet
+        sym.count()
+        labels = result.select("id", F.col("cluster_id").alias("label"))
+        prop = sym.join(labels, sym.neigh == labels.id).select("node", "label")
+        plan = prop._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"SortMergeJoin[^\n]*\n\s*:- InMemoryTableScan", plan), plan[:1500]
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        sym.unpersist()
 
 
 def test_exact_rank_stats_use_value_histograms_not_row_windows(t):
