@@ -3887,7 +3887,7 @@ def sim_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_bfs_hops",
     f"""
     WITH {_COPURCHASE_CP_SQL}, {_COPURCHASE_E_SQL},
-    src AS (SELECT min(src) AS s FROM e),
+    src AS (SELECT min(src) AS s FROM e HAVING min(src) IS NOT NULL),
     adj AS (SELECT src AS a, dst AS b FROM e
             UNION ALL SELECT dst, src FROM e),
     bfs AS (
@@ -6092,11 +6092,12 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         copurchase_edges,
         label_propagation,
     )
+    from .operators.iterate import truncate_lineage
 
     _prep(spark)
     orders = load(spark, sf_dir, "orders").where(F.col("o_custkey") % 10 == 0)
     edges = copurchase_edges(orders, load(spark, sf_dir, "lineitem"), min_shared_parts=2)
-    edges = edges.localCheckpoint(eager=False)  # feeds LPA + both modularity sides
+    edges = truncate_lineage(edges)  # feeds LPA + both modularity sides
     return community_modularity(edges, label_propagation(edges, rounds=3), k=10)
 
 
@@ -6556,7 +6557,8 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     u AS MATERIALIZED (
       SELECT src, dst, 1000000 // shared AS w FROM e
       UNION ALL SELECT dst, src, 1000000 // shared FROM e),
-    d0 AS MATERIALIZED (SELECT min(src) AS node, 0::BIGINT AS dist FROM e),
+    d0 AS MATERIALIZED (SELECT min(src) AS node, 0::BIGINT AS dist FROM e
+                        HAVING min(src) IS NOT NULL),
     d1 AS MATERIALIZED (
       SELECT node, min(dist)::BIGINT AS dist FROM (
         SELECT node, dist FROM d0

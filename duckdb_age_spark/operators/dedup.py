@@ -210,7 +210,6 @@ def minhash_lsh_pairs(
     ngram: int = 3,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding + exact signature-overlap
     estimate.
@@ -229,11 +228,6 @@ def minhash_lsh_pairs(
     signature cache pinned — it is exposed as ``result._internal_cache``
     (ADVICE r14) so the caller can ``result._internal_cache.unpersist()``
     after their action instead of a session-wide ``clearCache()``.
-
-    ``checkpoint_dir``: the default materialization is an executor-local
-    checkpoint (NOT executor-loss-safe on a real cluster); pass a durable
-    dir to make it a reliable checkpoint — see
-    :func:`iterate.materialize_and_release` (ADVICE r14 medium).
 
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b, est ≥ 0.5.
     """
@@ -284,7 +278,7 @@ def minhash_lsh_pairs(
     if not materialize:
         out._internal_cache = sig  # caller-releasable handle (ADVICE r14)
         return out
-    return materialize_and_release(out, sig, checkpoint_dir=checkpoint_dir)
+    return materialize_and_release(out, sig)
 
 
 # ---------------------------------------------------------------------------
@@ -382,15 +376,14 @@ def simhash_near_pairs(
     bits: int = SIMHASH_BITS,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ 3, bucketed by the four
     4-bit quarters (pigeonhole: ≤3 flipped bits across 4 quarters ⇒ at least
     one quarter matches exactly — LOSSLESS banding) so the join is
     band-local, not all-pairs.  Quarters holding more than ``max_bucket``
     docs are dropped from candidate generation (DEFAULT_MAX_BUCKET).
-    ``materialize`` / ``checkpoint_dir``: cache-hygiene and
-    fault-tolerance switches, see :func:`minhash_lsh_pairs`."""
+    ``materialize``: the cache-hygiene switch, see
+    :func:`minhash_lsh_pairs`."""
     sh = simhash(corpus, bits=bits).persist()  # self-join below (see minhash_lsh_pairs)
     quarter = bits // 4
     mask = (1 << quarter) - 1
@@ -419,7 +412,7 @@ def simhash_near_pairs(
     if not materialize:
         out._internal_cache = sh  # caller-releasable handle (ADVICE r14)
         return out
-    return materialize_and_release(out, sh, checkpoint_dir=checkpoint_dir)
+    return materialize_and_release(out, sh)
 
 
 # ---------------------------------------------------------------------------
@@ -444,11 +437,10 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     max_bucket: int = DEFAULT_MAX_BUCKET,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-identical vectors by cosine ≥ threshold.
-    ``materialize`` / ``checkpoint_dir``: cache-hygiene and
-    fault-tolerance switches, see :func:`minhash_lsh_pairs`.
+    ``materialize``: the cache-hygiene switch, see
+    :func:`minhash_lsh_pairs`.
 
     Scale path: bucket by sign-pattern of the first 16 dims (a 1-projection
     LSH) so the self-join is bucket-local; the full dot product only runs on
@@ -510,7 +502,7 @@ def embedding_near_dup_pairs(
     if not materialize:
         out._internal_cache = e  # caller-releasable handle (ADVICE r14)
         return out
-    return materialize_and_release(out, e, checkpoint_dir=checkpoint_dir)
+    return materialize_and_release(out, e)
 
 
 # ---------------------------------------------------------------------------
@@ -548,12 +540,7 @@ def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
             parent = nxt
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, nodes: DataFrame, max_iter: int = 25) -> DataFrame:
     """Label every node with the MINIMUM node id reachable through ``edges``
     (undirected) — the clustering step that turns near-dup PAIRS into dedup
     GROUPS, so "keep one document per group" is well-defined even when dup
@@ -568,16 +555,13 @@ def connected_components(
     takes min(own label, neighbors' labels); converges in O(graph diameter)
     rounds — near-dup clusters are shallow (diameter ≤ a few hops), so this
     terminates in 2-4 rounds in practice, bounded by ``max_iter``.
-    ``checkpoint_dir``: pass a reliable (HDFS/S3) path on a real cluster so
-    per-round lineage truncation survives executor loss; None keeps the
-    local[]-friendly localCheckpoint (operators/iterate.py).
 
     Scale shape: each round is ONE join of the label table against the
     symmetric edge list plus ONE min-aggregate keyed by node id; no step
     ever materializes a component's member list on one executor, so a
     10-billion-node pair graph streams through.  Lineage is truncated
-    every round with localCheckpoint (at cluster scale use a checkpoint
-    dir); the loop stops on the first round whose exact label sum equals
+    every round (:func:`~.iterate.truncate_lineage`: durable when the
+    context has a checkpoint dir); the loop stops on the first round whose exact label sum equals
     the previous round's (labels are monotone non-increasing, so an
     unchanged sum IS the fixpoint) — a 1-row scalar action moving only a
     decimal to the driver, never data.
@@ -598,8 +582,7 @@ def connected_components(
     exact minimum reachable id.
     """
     edges = truncate_if_needed(
-        edges.select("src", "dst").where(F.col("src").isNotNull() & F.col("dst").isNotNull()),
-        checkpoint_dir,
+        edges.select("src", "dst").where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
     sym = edges.select(F.col("src").alias("node"), F.col("dst").alias("neigh")).unionAll(
         edges.select(F.col("dst").alias("node"), F.col("src").alias("neigh"))
@@ -651,7 +634,7 @@ def connected_components(
             .agg(F.min("neigh").alias("mn"))
             .select(F.col("node").alias("id"), F.least(F.col("node"), F.col("mn")).alias("label"))
         )
-        labels = truncate_lineage(labels, checkpoint_dir)
+        labels = truncate_lineage(labels)
 
         def _round(cur_labels: DataFrame) -> DataFrame:
             prop = sym.join(cur_labels, sym.neigh == cur_labels.id).select("node", "label")
@@ -661,7 +644,7 @@ def connected_components(
                 .agg(F.min("label").alias("label"))
                 .select(F.col("node").alias("id"), "label")
             )
-            return truncate_lineage(nxt, checkpoint_dir)
+            return truncate_lineage(nxt)
 
         if isinstance(sym.schema["node"].dataType, IntegralType):
             label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
@@ -1195,7 +1178,7 @@ def duplicated_span_pairs(
     # measured at sf0.1; r15 optimization round, guide §1.2/§2.4).  The
     # blocks are the anchor table itself — the same rows the banded join
     # shuffles anyway, so materializing them adds no new scale hazard.
-    w = _span_anchors(docs, k, anchor_mod).localCheckpoint(eager=False)
+    w = truncate_lineage(_span_anchors(docs, k, anchor_mod))
     w = _drop_hot_buckets(w, "h", max_bucket)
     a = w.select(F.col("doc_id").alias("doc_a"), "h")
     b = w.select(F.col("doc_id").alias("doc_b"), "h")

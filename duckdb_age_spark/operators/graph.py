@@ -33,7 +33,7 @@ def _pagerank_on_driver(
     damping_pct: int,
     base_pct: int,
 ) -> DataFrame | None:
-    """numpy twin of the distributed PageRank loops below, bit for bit, on
+    """numpy twin of the distributed PageRank loop below, bit for bit, on
     the NULL-free int64 edge arrays of :func:`~.iterate.collect_small_edges`
     (``w`` None = unweighted: contrib = rank DIV outdeg; else (rank·w) DIV
     Σ_out w).
@@ -85,12 +85,74 @@ def _pagerank_on_driver(
     return spark.createDataFrame(pa.table({"node": ids, "rank": rank}), schema=schema)
 
 
-def pagerank_exact(
-    edges: DataFrame,
-    n_iter: int = 3,
-    damping_pct: int = 85,
-    checkpoint_every: int | None = None,
+# The distributed PageRank loop cuts lineage every this many rounds (lazily,
+# never after the last round), which bounds the plan of a long run.  A cut
+# per round costs more than it saves: on 1M random edges over 300k ids at
+# local[4] it slowed 3 rounds from 5.4 to 7.2 s.
+_PAGERANK_TRUNCATE_EVERY = 10
+
+
+def _pagerank(
+    edges: DataFrame, weighted: bool, n_iter: int, damping_pct: int, base_pct: int
 ) -> DataFrame:
+    """The one PageRank body behind :func:`pagerank_exact` (``weighted``
+    False: contrib = rank DIV outdeg) and :func:`weighted_pagerank` (True:
+    (rank·w) DIV Σ_out w): the small-graph gate, then the distributed loop.
+    ``base_pct`` is the teleport share of SCALE ÷ N added every round."""
+    cols = ("src", "dst", "w") if weighted else ("src", "dst")
+    # edges feeds the node set, the out-degrees, and every iteration's join;
+    # nodes feeds the count, the rank init, and every iteration's left join.
+    # Without truncation each consumer re-executed the caller's edge
+    # derivation (graph_pagerank's lineitem⋈orders+distinct appeared ~6x in
+    # the unrolled plan) — r15 optimization round, guide §1.2/§2.4.  Skipped
+    # when the caller already hands a checkpoint leaf (copurchase_edges
+    # truncates its own output) — re-materializing it is pure overhead
+    # (VERDICT r15 item 4; r16).  The small-graph gate's count materializes
+    # these blocks, so over the cap its work is reused below.
+    edges = truncate_if_needed(edges.select(*cols))
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionAll(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    small = collect_small_edges(edges, cols)
+    if small is not None:
+        src, dst, *w = small
+        out = _pagerank_on_driver(
+            edges.sparkSession, nodes.schema["node"], src, dst, w[0] if w else None,
+            n_iter, damping_pct, base_pct,
+        )
+        if out is not None:
+            return out
+    nodes = truncate_lineage(nodes)
+    n = nodes.count()  # one scalar to the driver; fixed for the run
+    if n == 0:  # empty graph: 0-row result, not a ZeroDivisionError
+        return edges.sparkSession.createDataFrame([], "node bigint, rank bigint")
+    if weighted:
+        denom, contrib = F.sum("w").alias("sw"), "(rank * w) DIV sw"
+    else:
+        denom, contrib = F.count("*").alias("deg"), "rank DIV deg"
+    per_src = edges.groupBy("src").agg(denom)
+    base = SCALE * base_pct // (100 * n)
+    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank"))
+    for it in range(1, n_iter + 1):
+        sums = (
+            edges.join(ranks, edges.src == ranks.node)
+            .join(per_src, "src")
+            .select("dst", F.expr(contrib).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+        )
+        ranks = nodes.join(sums, nodes.node == sums.dst, "left").select(
+            "node",
+            (F.lit(base) + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")).cast("long").alias("rank"),
+        )
+        if it % _PAGERANK_TRUNCATE_EVERY == 0 and it < n_iter:
+            ranks = truncate_lineage(ranks)
+    return ranks
+
+
+def pagerank_exact(edges: DataFrame, n_iter: int = 3, damping_pct: int = 85) -> DataFrame:
     """Fixed-point PageRank over a directed edge list (src, dst).
 
     rank₀(v) = SCALE ÷ N; each iteration
@@ -101,14 +163,11 @@ def pagerank_exact(
 
     Scale shape: per iteration one join (ranks⋈edges, broadcast-or-shuffle
     by AQE) and one map-side-combined sum shuffle keyed by dst — identical
-    to the classic Pregel formulation.  At the default 3 unrolled iterations
-    lineage stays flat with no checkpoint; for long runs (n_iter 20+ at
-    cluster scale) pass ``checkpoint_every`` to truncate lineage every k
-    iterations with a lazy localCheckpoint — the same control pattern as the
-    connected-components loop (dedup.py) — otherwise each iteration's plan
-    embeds all previous ones and Catalyst analysis time grows quadratically.
-    (On a real cluster prefer a reliable checkpoint dir; localCheckpoint
-    trades executor-loss tolerance for speed.)
+    to the classic Pregel formulation.  Lineage is cut lazily every 10
+    iterations (never after the last), so the default 3 unrolled
+    iterations run with no cut and a long run's plan never embeds more
+    than 10 of them (:func:`~.iterate.truncate_lineage`: durable when the
+    context has a checkpoint dir).
     Small-graph regime: when the edge list fits under the session's
     ``autoBroadcastJoinThreshold`` (:func:`~.iterate.collect_small_edges`;
     integral ids only, -1 disables), an exact row count and one collect
@@ -122,53 +181,7 @@ def pagerank_exact(
     Returns (node, rank) with rank in SCALE units; ``node`` keeps the input
     id type.
     """
-    # edges feeds the node set, the out-degrees, and every iteration's join;
-    # nodes feeds the count, the rank init, and every iteration's left join.
-    # Without truncation each consumer re-executed the caller's edge
-    # derivation (graph_pagerank's lineitem⋈orders+distinct appeared ~6x in
-    # the unrolled plan) — r15 optimization round, guide §1.2/§2.4.  Skipped
-    # when the caller already hands a checkpoint leaf (copurchase_edges
-    # truncates its own output) — re-materializing it is pure overhead
-    # (VERDICT r15 item 4; r16).  The small-graph gate's count materializes
-    # these blocks, so over the cap its work is reused below.
-    edges = truncate_if_needed(edges.select("src", "dst"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    small = collect_small_edges(edges, ("src", "dst"))
-    if small is not None:
-        out = _pagerank_on_driver(
-            edges.sparkSession, nodes.schema["node"], *small, None, n_iter, damping_pct, 15
-        )
-        if out is not None:
-            return out
-    nodes = truncate_lineage(nodes)
-    n = nodes.count()  # one scalar to the driver; fixed for the run
-    if n == 0:  # empty graph: 0-row result, not a ZeroDivisionError
-        return edges.sparkSession.createDataFrame([], "node bigint, rank bigint")
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    base = SCALE * 15 // (100 * n)
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank"))
-    for it in range(n_iter):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.node)
-            .join(outdeg, "src")
-            .select("dst", F.expr("rank DIV deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
-                "node",
-                (F.lit(base) + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")).cast("long").alias("rank"),
-            )
-        )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return _pagerank(edges, False, n_iter, damping_pct, 15)
 
 
 def weighted_pagerank(
@@ -184,130 +197,107 @@ def weighted_pagerank(
     Overflow headroom: rank ≤ SCALE (10¹²) and the multiply happens before
     the divide, so weights up to ~9·10⁶ fit int64 — far above any support
     count this graph produces.  Per iteration: one join + one map-side-
-    combined sum, identical shape to the unweighted loop.
+    combined sum, the same loop as the unweighted one.
     Small-graph regime as in :func:`pagerank_exact` (``w`` counts as a
     third collected column); it falls back to the distributed loop when
     rank·w could overflow int64, where Spark raises under ANSI and numpy
     would wrap.
     Returns (node, rank) in SCALE units.
     """
-    # checkpoint once: edges feeds the node set, the weight sums, and every
-    # iteration's join — for a derived graph each consumer would otherwise
-    # re-run the whole upstream derivation (same guard as bfs_hops /
-    # edge_jaccard_similarity); skipped when the input is already a leaf
-    # (VERDICT r15 item 4)
-    edges = truncate_if_needed(edges.select("src", "dst", "w"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    return _pagerank(edges, True, n_iter, damping_pct, 100 - damping_pct)
+
+
+def _frontier_bfs(adj: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
+    """Multi-source frontier BFS over the cached symmetric adjacency ``adj``
+    (src, dst) from every row of ``seeds`` (seed): returns (seed, node,
+    hops) for every node within ``max_hops`` of each seed, the seed itself
+    at hops 0.
+
+    Classic distributed BFS keyed on (seed, node): per round, join the
+    CURRENT frontier (pairs first reached last round — not the whole
+    visited set) against the adjacency, anti-join out already-visited
+    pairs, and union the new frontier in.  Work per round is O(edges
+    touching the frontier × seeds), total O(E · seeds) across all rounds —
+    the reason frontier BFS scales where whole-set relabeling doesn't.
+    Hop counts are exact integers, so a DuckDB recursive CTE (UNION dedup
+    mode) replays it.
+
+    ``seeds`` may derive from ``adj``: it is eagerly checkpointed, as is
+    every round's new frontier, so the returned frame references only
+    checkpoint blocks and the caller can release ``adj`` on return instead
+    of leaking a session-pinned CacheManager entry (ADVICE r13 medium).
+    """
+    visited = truncate_lineage(
+        seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hops")), eager=True
     )
-    small = collect_small_edges(edges, ("src", "dst", "w"))
-    if small is not None:
-        out = _pagerank_on_driver(
-            edges.sparkSession, nodes.schema["node"], *small, n_iter, damping_pct, 100 - damping_pct
+    # explicit broadcast hint (ADVICE r14): the checkpointed seed frame is a
+    # stats-less LogicalRDD whose sizeInBytes defaults huge, so with AQE off
+    # static planning would shuffle the full adjacency probe side in round
+    # 1; the hint costs nothing at a few seed rows.  Later frontiers (seed x
+    # node pairs) can be large — they stay hint-free and let AQE decide from
+    # runtime sizes.
+    frontier = F.broadcast(visited)
+    for hop in range(1, max_hops + 1):
+        # distinct on (seed, node) only, the hops literal attached after the
+        # join: the dedup then hash-partitions by exactly the anti-join key,
+        # so the frontier side of the anti-join reuses its exchange
+        nxt = (
+            frontier.join(adj, frontier.node == adj.src)
+            .select("seed", F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
+            .select("seed", "node", F.lit(hop).alias("hops"))
         )
-        if out is not None:
-            return out
-    # nodes is consumed by the count, the rank init, and every iteration's
-    # left join — truncate so the distinct runs once (r15, guide §1.2)
-    nodes = nodes.localCheckpoint(eager=False)
-    n = nodes.count()
-    if n == 0:  # empty graph: 0-row result, not a ZeroDivisionError
-        return edges.sparkSession.createDataFrame([], "node bigint, rank bigint")
-    sw = edges.groupBy("src").agg(F.sum("w").alias("sw"))
-    base = SCALE * (100 - damping_pct) // (100 * n)
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank"))
-    for _ in range(n_iter):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.node)
-            .join(sw, "src")
-            .select("dst", F.expr("(rank * w) DIV sw").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-            "node",
-            (F.lit(base) + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100"))
-            .cast("long")
-            .alias("rank"),
-        )
-    return ranks
+        # EAGER: the new frontier is consumed twice (unioned into visited
+        # and joined next round), so it computes once and the loop's lineage
+        # stays a flat union of checkpointed rounds
+        nxt = truncate_lineage(nxt, eager=True)
+        visited = visited.unionAll(nxt)
+        frontier = nxt
+    return visited
 
 
-def bfs_hops(
-    edges: DataFrame,
-    source: int | None = None,
-    max_hops: int = 3,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Breadth-first hop distances from ``source`` over an undirected
-    (src < dst) edge list — the frontier-expansion companion to
-    :func:`pagerank_exact` (fixed-point) and connected components
-    (min-label propagation, dedup.py).
+def _symmetric_adjacency(edges: DataFrame) -> DataFrame:
+    """The (src, dst) edge list truncated once and symmetrized, cached
+    co-partitioned and sorted on src — the per-hop join key: each hop
+    materializes its frontier checkpoint, so without the cache the
+    adjacency re-shuffles every hop (iterate.loop_join_cache, r13).
+    Truncating the edges first keeps the union's two branches from
+    deriving a derived graph (copurchase_edges' self-join) twice."""
+    edges = truncate_if_needed(edges.select("src", "dst"))
+    return loop_join_cache(
+        edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))), "src"
+    )
 
-    Classic distributed BFS: per round, join the CURRENT frontier (nodes
-    first reached last round — not the whole visited set) against the
-    adjacency list, anti-join out already-visited nodes, and union the new
-    frontier in.  Work per round is O(edges touching the frontier), total
-    O(E) across all rounds — the reason frontier BFS scales where
-    whole-set relabeling doesn't.  Hop counts are exact integers, so the
-    result is engine-bit-identical and a DuckDB recursive CTE (UNION
-    dedup mode) replays it.  ``max_hops`` bounds the rounds (lineage depth
-    is max_hops joins; for deep traversals add the localCheckpoint pattern
-    from the CC loop).  ``checkpoint_dir``: reliable checkpoint path for
-    real clusters (survives executor loss); None = localCheckpoint
-    (operators/iterate.py).
+
+def _smallest_nodes(adj: DataFrame, n: int) -> DataFrame:
+    """The ``n`` smallest non-NULL node ids of ``adj`` as a (seed) frame,
+    selected in-plan (top-k, then broadcast into the BFS init) — no driver
+    round trip, and 0 rows on an empty graph."""
+    nodes = adj.select(F.col("src").alias("seed")).where(F.col("seed").isNotNull()).distinct()
+    return nodes.orderBy("seed").limit(n)
+
+
+def bfs_hops(edges: DataFrame, source: int | None = None, max_hops: int = 3) -> DataFrame:
+    """Breadth-first hop distances from ``source`` (default: the smallest
+    node id) over an undirected (src < dst) edge list — the
+    frontier-expansion companion to :func:`pagerank_exact` (fixed-point)
+    and connected components (min-label propagation, dedup.py).
+
+    The one-seed case of :func:`harmonic_closeness`'s multi-source BFS
+    (:func:`_frontier_bfs`): the default source is selected in-plan, an
+    explicit one is a one-row seed frame.  ``max_hops`` bounds the rounds.
+    An empty graph returns 0 rows.
     Returns (node, hops) for every node within max_hops.
     """
-    # checkpoint the edge list, then the adjacency, ONCE: adj is joined
-    # every round, and without truncation each round would re-execute the
-    # upstream lineage (for a derived graph like copurchase_edges, the whole
-    # self-join — measured 3× redundant work at max_hops=3); checkpointing
-    # edges first also keeps the union's two branches from deriving it twice
-    edges = truncate_if_needed(edges.select("src", "dst"), checkpoint_dir)
-    # cached co-partitioned+sorted on src (the per-hop join key): each hop
-    # materializes its frontier checkpoint, so without this the adjacency
-    # re-shuffles every hop — see iterate.loop_join_cache (r13).
-    adj = loop_join_cache(
-        edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
-        "src",
-        checkpoint_dir,
-    )
+    adj = _symmetric_adjacency(edges)
     try:
         if source is None:
-            # default source = smallest node id; computed from the CHECKPOINTED
-            # adjacency so the (possibly expensive) edge derivation runs once,
-            # not once for the scalar and again for the rounds
-            source = adj.agg(F.min("src")).collect()[0][0]
-            if source is None:  # empty graph: 0-row result, not a TypeError
-                return edges.sparkSession.createDataFrame([], "node bigint, hops bigint")
-        visited = edges.sparkSession.createDataFrame([(int(source), 0)], "node long, hops int")
-        frontier = visited
-        for hop in range(1, max_hops + 1):
-            # distinct on node ONLY (not (node, hops)): the dedup then hash-
-            # partitions by exactly the anti-join key, so the frontier side of
-            # the anti-join reuses the distinct's exchange instead of
-            # re-shuffling — one fewer exchange per round (the hops literal is
-            # attached after the join, where it costs nothing).
-            nxt = (
-                frontier.join(adj, frontier.node == adj.src)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .select("node", F.lit(hop).alias("hops"))
-            )
-            # EAGERLY checkpoint the NEW frontier (it is consumed twice:
-            # unioned into visited and joined next round) so it computes
-            # once, the loop's lineage stays a flat union of checkpointed
-            # rounds, and — eager since r14 — the returned frame references
-            # only checkpoint blocks, so the adjacency cache can be
-            # released on return instead of leaking a session-pinned
-            # CacheManager entry per invocation (ADVICE r13 medium).
-            nxt = truncate_lineage(nxt, checkpoint_dir, eager=True)
-            visited = visited.unionAll(nxt)
-            frontier = nxt
-        return visited.select("node", F.col("hops").cast("bigint").alias("hops"))
+            seeds = _smallest_nodes(adj, 1)
+        else:
+            seeds = edges.sparkSession.createDataFrame([(int(source),)], "seed long")
+        visited = _frontier_bfs(adj, seeds, max_hops)
+        return visited.select(F.col("node").cast("bigint"), F.col("hops").cast("bigint"))
     finally:
         adj.unpersist()
 
@@ -430,11 +420,11 @@ def copurchase_edges(
         lineitem.join(orders.select("o_orderkey", "o_custkey"), lineitem.l_orderkey == orders.o_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
         .distinct()
-        # both self-join sides consume cp: without truncation the
-        # lineitem⋈orders+distinct derivation executes TWICE per call
-        # (r15 optimization round; guide §1.2/§2.4)
-        .localCheckpoint(eager=False)
     )
+    # both self-join sides consume cp: without truncation the
+    # lineitem⋈orders+distinct derivation executes TWICE per call
+    # (r15 optimization round; guide §1.2/§2.4)
+    cp = truncate_lineage(cp)
     a = cp.select(F.col("cust").alias("src"), "part")
     b = cp.select(F.col("cust").alias("dst"), "part")
     plan = (
@@ -453,7 +443,7 @@ def copurchase_edges(
     # managed — no CacheManager entry, so the bench's cache-hygiene gate
     # stays clean.  The un-truncated plan stays inspectable for the plan
     # tests as ``._pre_checkpoint_plan`` (the _internal_cache precedent).
-    out = plan.localCheckpoint(eager=False)
+    out = truncate_lineage(plan)
     out._pre_checkpoint_plan = plan
     return out
 
@@ -506,7 +496,8 @@ def triangle_stats(edges: DataFrame, orientation: str = "id") -> DataFrame:
             F.when(F.col("rank_src") < F.col("rank_dst"), F.col("src")).otherwise(F.col("dst")).alias("src"),
             F.when(F.col("rank_src") < F.col("rank_dst"), F.col("dst")).otherwise(F.col("src")).alias("dst"),
             F.greatest("rank_src", "rank_dst").alias("rank_head"),
-        ).localCheckpoint(eager=False)  # consumed by both wedge sides + the closing join
+        )
+        d = truncate_lineage(d)  # consumed by both wedge sides + the closing join
         w1 = d.select(F.col("src").alias("a"), F.col("dst").alias("b"), F.col("rank_head").alias("rank_b"))
         w2 = d.select(F.col("src").alias("a"), F.col("dst").alias("c"), F.col("rank_head").alias("rank_c"))
         wedges = w1.join(w2, "a").where(F.col("rank_b") < F.col("rank_c"))
@@ -558,7 +549,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
 
     Per round: one map-side-combined degree count + two semi-joins of the
     edge list against the survivor set, lineage truncated per round with an
-    EAGER localCheckpoint — lazy checkpoints would leave every prior
+    EAGER checkpoint — lazy checkpoints would leave every prior
     round's plan nested inside the next (keep is consumed by two semi-
     joins, so the un-truncated tree doubles per round: measured 169 s → 3 s
     at sf0.01 switching to eager).  O(rounds · E) total.
@@ -569,11 +560,11 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
         und = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         deg = und.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select(F.col("src").alias("node"))
-        e = (
+        e = truncate_lineage(
             e.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
             .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint()
+            .select("src", "dst"),
+            eager=True,
         )
     und = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     return (
@@ -597,7 +588,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     Per round: one join (labels onto the symmetric edge list), one
     (node, label) count aggregate, one per-node argmax window — all keyed
     by node id, map-side combinable, lineage truncated per round with an
-    eager localCheckpoint.  Returns (node, label).
+    eager checkpoint.  Returns (node, label).
     """
     from pyspark.sql import Window
 
@@ -618,18 +609,18 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
             "node", F.col("node").alias("label")
         )
         if rounds <= 0:  # degenerate call: still return a sym-independent frame
-            labels = labels.localCheckpoint()
+            labels = truncate_lineage(labels, eager=True)
         w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("label"))
         for _ in range(rounds):
             neigh = sym.join(labels, sym.dst == labels.node).select(
                 F.col("src").alias("node"), "label"
             )
             counted = neigh.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-            labels = (
+            labels = truncate_lineage(
                 counted.withColumn("rn", F.row_number().over(w))
                 .where(F.col("rn") == 1)
-                .select("node", "label")
-                .localCheckpoint()
+                .select("node", "label"),
+                eager=True,
             )
         return labels.select(F.col("node").cast("bigint"), F.col("label").cast("bigint"))
     finally:
@@ -796,32 +787,26 @@ def clustering_coefficient(edges: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def weighted_sssp(
-    edges: DataFrame,
-    rounds: int = 4,
-    weight_col: str = "w",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def weighted_sssp(edges: DataFrame, rounds: int = 4, weight_col: str = "w") -> DataFrame:
     """Bellman-Ford single-source shortest paths over an undirected weighted
     edge list, ``rounds`` relaxation rounds from the smallest node id (a
     deterministic source needing no driver round-trip: the 1-row min
-    aggregate seeds the frontier via a broadcast).
+    aggregate seeds the frontier via a broadcast; an empty graph has no
+    source and returns 0 rows).
 
     Weights must be INTEGERS — path costs are then exact sums, so the
     per-round ``min`` is engine-identical (no float path-cost ties).  Each
     round is ONE join + ONE map-side-combinable min aggregate (the CC-loop
     shape, dedup.py), with lineage truncated per round
-    (operators/iterate.py; pass ``checkpoint_dir`` on a real cluster).
+    (operators/iterate.py).
     After round t every ≤t-hop shortest path is final, so ``rounds`` bounds
     path length exactly like the kcore/BFS fixed-round contracts.
     Returns (node, dist) for every node reached within ``rounds`` hops.
     """
-    from .iterate import truncate_lineage
-
     e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
     # cached co-partitioned+sorted on src (the per-round relaxation key):
-    # the per-round lazy checkpoints materialize as separate jobs, so
-    # without this the weighted edge list re-shuffles every round — see
+    # the per-round checkpoints materialize as separate jobs, so without
+    # this the weighted edge list re-shuffles every round — see
     # iterate.loop_join_cache (r13).
     und = loop_join_cache(
         e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")),
@@ -830,6 +815,7 @@ def weighted_sssp(
     try:
         dist = (
             e.agg(F.min("src").alias("node"))
+            .where(F.col("node").isNotNull())  # empty graph: no source
             .select("node", F.lit(0).cast("long").alias("dist"))
         )
         for _ in range(rounds):
@@ -848,7 +834,7 @@ def weighted_sssp(
             # eager since r14: the final round's checkpoint blocks back the
             # returned frame, so the edge cache releases on return (ADVICE
             # r13 medium) instead of pinning 2|E| cached rows per call
-            dist = truncate_lineage(dist, checkpoint_dir, eager=True)
+            dist = truncate_lineage(dist, eager=True)
         return dist.select(F.col("node").cast("long"), F.col("dist").cast("long")).orderBy("node")
     finally:
         und.unpersist()
@@ -943,7 +929,7 @@ def link_prediction(edges: DataFrame, k: int = 20) -> DataFrame:
 
     e = edges.select("src", "dst")
     und = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    und = und.localCheckpoint(eager=False)  # feeds wedges + degrees
+    und = truncate_lineage(und)  # feeds wedges + degrees
     w1 = und.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     w2 = und.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     pairs = (
@@ -1051,12 +1037,7 @@ def hits_scores(edges: DataFrame, n_iter: int = 2) -> DataFrame:
     )
 
 
-def harmonic_closeness(
-    edges: DataFrame,
-    n_seeds: int = 4,
-    max_hops: int = 3,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def harmonic_closeness(edges: DataFrame, n_seeds: int = 4, max_hops: int = 3) -> DataFrame:
     """Landmark harmonic-closeness centrality: run ONE multi-source BFS
     from the ``n_seeds`` smallest node ids and score every reached node
     as Σ_seeds 1/d(seed, node) — the landmark estimator used where exact
@@ -1067,53 +1048,14 @@ def harmonic_closeness(
     Per-(seed, node) hop distances are exact integers and the harmonic
     sum is accumulated in micro-units as ``1_000_000 DIV hops`` — exact
     in any engine and any order, so the DuckDB recursive-CTE replay
-    hash-matches.  Seeds are selected IN-PLAN (top-k smallest ids, a
-    WindowGroupLimit, then broadcast into the BFS init) — no driver
-    collect.  Same frontier/visited/checkpoint discipline as
-    :func:`bfs_hops`: anti-join on (seed, node), every round's new
-    frontier checkpointed, ``checkpoint_dir`` for reliable checkpoints
-    on real clusters.
+    hash-matches.  Seeds are selected IN-PLAN (top-k smallest ids, then
+    broadcast into the BFS init) — no driver collect; the BFS is
+    :func:`_frontier_bfs`, shared with :func:`bfs_hops`.
     Returns (node, n_seeds_reaching, harmonic_micro) ordered by node.
     """
-    from .iterate import truncate_lineage
-
-    edges = truncate_if_needed(edges.select("src", "dst"), checkpoint_dir)
-    # same per-hop adjacency cache as bfs_hops (iterate.loop_join_cache, r13)
-    adj = loop_join_cache(
-        edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
-        "src",
-        checkpoint_dir,
-    )
+    adj = _symmetric_adjacency(edges)
     try:
-        nodes = adj.select(F.col("src").alias("node")).distinct()
-        seeds = nodes.orderBy("node").limit(n_seeds).select(F.col("node").alias("seed"))
-        # the seed frame derives from the cached adjacency — eagerly
-        # checkpoint it (n_seeds rows) so the returned plan is independent
-        # of the cache
-        visited = truncate_lineage(
-            seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hops")),
-            checkpoint_dir,
-            eager=True,
-        )
-        # explicit broadcast hint (ADVICE r14): the checkpointed frame is a
-        # stats-less LogicalRDD whose sizeInBytes defaults huge, so with AQE
-        # off static planning would shuffle the full adjacency probe side in
-        # round 1; the hint costs nothing at n_seeds rows.  Later frontiers
-        # (seed x node pairs) can be large — they stay hint-free and let
-        # AQE decide from runtime sizes.
-        frontier = F.broadcast(visited)
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(adj, frontier.node == adj.src)
-                .select("seed", F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-                .select("seed", "node", F.lit(hop).alias("hops"))
-            )
-            # eager since r14 — same cache-release argument as bfs_hops
-            nxt = truncate_lineage(nxt, checkpoint_dir, eager=True)
-            visited = visited.unionAll(nxt)
-            frontier = nxt
+        visited = _frontier_bfs(adj, _smallest_nodes(adj, n_seeds), max_hops)
         return (
             visited.where(F.col("hops") > 0)
             .groupBy("node")

@@ -1,15 +1,19 @@
 """Lineage control for iterative algorithms (CC, BFS, PageRank, Lloyd).
 
 Every fixed-point loop here must truncate lineage each round or the plan
-nests exponentially.  Two modes:
+nests exponentially, and every cut goes through :func:`truncate_lineage`.
+One rule decides durability: the SparkContext's checkpoint dir.
 
-* ``checkpoint_dir=None`` (default): ``localCheckpoint`` — executor-local
-  blocks, zero HDFS/disk configuration, ideal for local[] and tests.  NOT
-  fault-tolerant: a lost executor loses blocks and fails the job.
-* ``checkpoint_dir=<path>``: reliable ``checkpoint()`` to that directory
-  (HDFS/S3/NFS on a real cluster) — survives executor loss, the setting a
-  1000-executor run of a long CC/BFS loop should use.  The dir is set once
-  per SparkContext (Spark keeps one global checkpoint dir).
+* No dir (the default): ``localCheckpoint`` — executor-local blocks, no
+  storage to configure, right for local[] and tests.  NOT fault-tolerant:
+  a lost executor loses blocks and fails the job.
+* A dir (``spark.checkpoint.dir`` at startup, or ``sc.setCheckpointDir``):
+  a reliable ``checkpoint()`` to it (HDFS/S3/NFS on a real cluster), which
+  survives executor loss.  Spark keeps one dir per context, so durability
+  is a property of the job, not of an operator call.  A LAZY reliable
+  checkpoint recomputes its input once when it is written (Spark writes
+  it in a second job after the first action on it); an eager one runs
+  that pair of jobs at once.
 
 It also holds the small-graph gate (:func:`collect_small_edges`) that lets a
 fixpoint operator run its whole loop on the driver when the edge list is
@@ -52,14 +56,12 @@ def is_lineage_truncated(df: DataFrame) -> bool:
         return False
 
 
-def truncate_if_needed(
-    df: DataFrame, checkpoint_dir: str | None = None, eager: bool = False
-) -> DataFrame:
+def truncate_if_needed(df: DataFrame, eager: bool = False) -> DataFrame:
     """:func:`truncate_lineage`, skipped when ``df`` is already a leaf (see
     :func:`is_lineage_truncated`)."""
     if is_lineage_truncated(df):
         return df
-    return truncate_lineage(df, checkpoint_dir, eager=eager)
+    return truncate_lineage(df, eager=eager)
 
 
 def spread_small_scan(df: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -86,21 +88,17 @@ def spread_small_scan(df: DataFrame, key: str = "doc_id") -> DataFrame:
     return df
 
 
-def truncate_lineage(df: DataFrame, checkpoint_dir: str | None = None, eager: bool = False) -> DataFrame:
-    """Cut ``df``'s lineage: reliable checkpoint if a dir is given, else
-    executor-local.  ``eager`` forces materialization now (use when the
-    result is consumed by multiple downstream branches)."""
-    if checkpoint_dir is None:
+def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: a reliable checkpoint when the SparkContext has
+    a checkpoint dir, else executor-local (module docstring).  ``eager``
+    forces materialization now (use when the result is consumed by
+    multiple downstream branches)."""
+    if df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=eager)
 
 
-def materialize_and_release(
-    df: DataFrame, *caches: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
+def materialize_and_release(df: DataFrame, *caches: DataFrame) -> DataFrame:
     """Run ``df`` now (eager checkpoint) and unpersist the operator's
     internal ``caches`` before handing the result to the caller.
 
@@ -116,17 +114,11 @@ def materialize_and_release(
     which are pinned until an explicit unpersist that no caller ever
     issues.  At cluster scale the result of a pairs/top-k/aggregate
     operator is orders of magnitude smaller than the table it released.
-
-    ``checkpoint_dir`` (ADVICE r14 medium / VERDICT r14 item 5): the
-    default ``localCheckpoint`` truncates lineage to EXECUTOR-LOCAL blocks
-    — on a real cluster an executor loss after this returns fails the job
-    instead of recomputing, because the lineage that would recompute the
-    lost blocks is gone.  Pass a durable directory (HDFS/S3/NFS) to route
-    through a reliable ``checkpoint()`` instead (same switch the loop
-    operators expose); results are identical, the blocks merely live on
-    fault-tolerant storage.  local[] runs and tests don't need it.
+    With a context checkpoint dir the result lands on durable storage
+    instead (:func:`truncate_lineage`), so an executor lost after this
+    returns does not fail the job.
     """
-    out = truncate_lineage(df, checkpoint_dir, eager=True)
+    out = truncate_lineage(df, eager=True)
     for c in caches:
         c.unpersist()
     return out
@@ -159,12 +151,7 @@ def loop_cache_partitions(spark) -> int:
     return max(n_shuffle, n_default)
 
 
-def loop_join_cache(
-    df: DataFrame,
-    key: str,
-    checkpoint_dir: str | None = None,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def loop_join_cache(df: DataFrame, key: str) -> DataFrame:
     """Cache ``df`` hash-partitioned AND sorted on ``key`` for a fixed-point
     loop that joins it on ``key`` every round.
 
@@ -182,31 +169,27 @@ def loop_join_cache(
     drops to O(|other side|), and the big table is paid for once.
 
     The repartition uses an EXPLICIT partition count (AQE may not coalesce
-    user-specified counts): ``n_partitions`` if given, else
-    :func:`loop_cache_partitions` — ``max(shuffle.partitions,
-    defaultParallelism)``, so a cluster that left shuffle.partitions at the
-    200 default still parallelizes the loop across the real executor fleet
-    (VERDICT r13 item 5).  The probe side co-partitions to the cache's N
+    user-specified counts): :func:`loop_cache_partitions` —
+    ``max(shuffle.partitions, defaultParallelism)``, so a cluster that left
+    shuffle.partitions at the 200 default still parallelizes the loop
+    across the real executor fleet (VERDICT r13 item 5).  The probe side co-partitions to the cache's N
     via EnsureRequirements, so a later session-conf change cannot silently
     re-Exchange the cached side — Spark shuffles the NON-conforming (probe)
     side to match the side that already satisfies a hash distribution.
 
-    ``checkpoint_dir``: reliably checkpoint FIRST (cut lineage to durable
-    storage — partitioning does not survive a checkpoint, so it composes as
-    checkpoint → repartition → cache); without a dir the lineage above the
-    cache is left intact ON PURPOSE (ADVICE r13, analyzed): if cached
-    blocks are evicted, recompute re-fetches the repartition's retained
-    map outputs (the ShuffleDependency stays alive with the cached RDD) and
-    re-sorts — it does NOT re-derive the upstream union/derivation unless
-    map outputs were also lost, which is exactly the executor-death regime
-    ``checkpoint_dir`` exists for.  An extra lazy localCheckpoint here
-    would double the loop table's block footprint for no recompute win.
+    The lineage above the cache is left intact ON PURPOSE (ADVICE r13,
+    analyzed): if cached blocks are evicted, recompute re-fetches the
+    repartition's retained map outputs (the ShuffleDependency stays alive
+    with the cached RDD) and re-sorts — it does NOT re-derive the upstream
+    union/derivation unless map outputs were also lost; where the caller
+    truncated its edge list first (:func:`truncate_if_needed`, as the CC,
+    BFS and label-propagation loops do), even that case re-reads checkpoint
+    blocks — durable ones when the context has a checkpoint dir.  A
+    checkpoint here would double the loop table's block footprint for no
+    recompute win.
     """
-    if checkpoint_dir is not None:
-        df = truncate_lineage(df, checkpoint_dir)
-    if n_partitions is None:
-        n_partitions = loop_cache_partitions(df.sparkSession)
-    return df.repartition(n_partitions, key).sortWithinPartitions(key).persist()
+    n = loop_cache_partitions(df.sparkSession)
+    return df.repartition(n, key).sortWithinPartitions(key).persist()
 
 
 def collect_small_edges(edges: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...] | None:

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .iterate import truncate_lineage
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -803,7 +805,7 @@ def ahash_dup_pairs(
     quadratic-blow the join; dropped bands only cost recall, and the
     oracle replays the drop exactly).  Returns (a, b, hamming).
     """
-    feats = ahash_features(media).localCheckpoint(eager=False)
+    feats = truncate_lineage(ahash_features(media))
     band_vals = [
         (0, F.expr("ahash_lo & 65535")),
         (1, F.expr("(ahash_lo >> 16) & 65535")),

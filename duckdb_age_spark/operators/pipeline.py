@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .iterate import truncate_lineage
 from .text import doc_stats, token_count
 
 # Per-language md5-prefix thresholds: a doc is sampled iff the first 4 hex
@@ -658,17 +659,14 @@ def importance_weights(docs: DataFrame, target_source: str = "src1") -> DataFram
     """
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     toks = docs.select("doc_id", "source", F.explode(words).alias("tok"))
-    vocab = (
-        toks.groupBy("tok")
-        .agg(
-            F.count("*").alias("cg"),
-            F.sum(F.when(F.col("source") == target_source, 1).otherwise(0)).alias("ct"),
-        )
-        # two consumers (the totals aggregate and the scoring join) —
-        # materialize the vocab ONCE or each re-runs the corpus explode
-        # (same multi-consumer pattern as the boilerplate gram stream)
-        .localCheckpoint(eager=False)
+    vocab = toks.groupBy("tok").agg(
+        F.count("*").alias("cg"),
+        F.sum(F.when(F.col("source") == target_source, 1).otherwise(0)).alias("ct"),
     )
+    # two consumers (the totals aggregate and the scoring join) —
+    # materialize the vocab ONCE or each re-runs the corpus explode
+    # (same multi-consumer pattern as the boilerplate gram stream)
+    vocab = truncate_lineage(vocab)
     totals = vocab.agg(
         F.sum("cg").alias("tg"),
         F.sum("ct").alias("tt"),

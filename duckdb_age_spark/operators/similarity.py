@@ -416,13 +416,11 @@ def label_centroid_cosines(
     embeddings: DataFrame,
     scale: int = 1_000_000,
     materialize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Pairwise cosine similarity between per-label centroid embeddings —
     the class-separability matrix of a labeled embedding table.
-    ``materialize`` / ``checkpoint_dir``: cache-hygiene and
-    fault-tolerance switches (release the internal (label, dim) cell cache
-    on return; durable checkpoint on request), see dedup.minhash_lsh_pairs.
+    ``materialize``: the cache-hygiene switch (release the internal
+    (label, dim) cell cache on return), see dedup.minhash_lsh_pairs.
 
     Cross-engine-exact per the stats.py discipline: each component is
     fixed-pointed to an integer (round(x * scale) — identical IEEE steps in
@@ -480,7 +478,7 @@ def label_centroid_cosines(
         return out
     from .iterate import materialize_and_release
 
-    return materialize_and_release(out, comp, checkpoint_dir=checkpoint_dir)
+    return materialize_and_release(out, comp)
 
 
 def lsh_recall_at_k(embeddings: DataFrame, query_ids: list[int], k: int = 5, n_planes: int = 4) -> DataFrame:

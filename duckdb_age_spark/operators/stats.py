@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .iterate import truncate_lineage
+
 
 def price_histogram(orders: DataFrame, bucket_cents: int = 2_500_000) -> DataFrame:
     """Fixed-width histogram of order totals ($25k buckets by default).
@@ -1291,13 +1293,13 @@ def theil_sen_trend(events: DataFrame, event_type: str = "purchase") -> DataFram
         events.where(F.col("event_type") == event_type)
         .groupBy(F.expr("CAST(CAST(ts AS LONG) DIV 86400 AS LONG)").alias("day"))
         .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-        # three consumers diverge below any exchange (pair sides a/b + the
-        # count aggregate) — without materialization Spark re-plans the
-        # corpus scan for each; the lazy localCheckpoint computes the
-        # ≤|days|-row series ONCE (same multi-consumer pattern as the
-        # boilerplate gram stream, text.py)
-        .localCheckpoint(eager=False)
     )
+    # three consumers diverge below any exchange (pair sides a/b + the
+    # count aggregate) — without materialization Spark re-plans the
+    # corpus scan for each; the lazy checkpoint computes the ≤|days|-row
+    # series ONCE (same multi-consumer pattern as the boilerplate gram
+    # stream, text.py)
+    daily = truncate_lineage(daily)
     t = daily.withColumn("t", F.row_number().over(Window.orderBy("day")))
     a, b = t.alias("a"), t.alias("b")
     pairs = (

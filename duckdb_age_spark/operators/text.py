@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .iterate import spread_small_scan
+from .iterate import spread_small_scan, truncate_lineage
 
 # A small fixed stopword list per language — deterministic, mirrored verbatim
 # in the oracle SQL.  (A real pipeline would broadcast a large dict; the
@@ -598,7 +598,7 @@ def boilerplate_phrase_screen(
     join; without materialization Spark plans two full
     scan→split→array_distinct→explode passes (the consumers diverge before
     any exchange, so ReusedExchange can't kick in — VERDICT r6 item 4).
-    ``localCheckpoint(eager=False)`` computes gram generation ONCE and
+    A lazy ``truncate_lineage`` computes gram generation ONCE and
     both consumers read the materialized blocks — the same multi-consumer
     pattern as the modularity edge list (contract.py) and the LSH
     signature self-joins (dedup.py).  The join keeps the memory-safe shape
@@ -612,10 +612,12 @@ def boilerplate_phrase_screen(
     # measured 2.18->1.89 s at sf0.1, 14.3->4.8 s at sf1.  The cheap plain-
     # word tokenizers measured the same spread a LOSS (the added exchange
     # outweighs a split+explode) and keep their unspread shape.
-    grams = spread_small_scan(docs).select(
-        "doc_id",
-        F.explode(F.array_distinct(_word_ngrams(F.col("text"), ngram))).alias("gram"),
-    ).localCheckpoint(eager=False)
+    grams = truncate_lineage(
+        spread_small_scan(docs).select(
+            "doc_id",
+            F.explode(F.array_distinct(_word_ngrams(F.col("text"), ngram))).alias("gram"),
+        )
+    )
     df_count = grams.groupBy("gram").agg(F.countDistinct("doc_id").alias("nd"))
     boiler = df_count.where(F.col("nd") >= min_docs).select("gram", F.lit(1).alias("is_b"))
     scored = (

@@ -366,31 +366,6 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours", keys: list[str] 
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys or ["event_id"])
 
 
-def _resolve_stream_partitions(shuffle_partitions):
-    """Shared ``"auto"`` policy for drain entry points (run_available_now,
-    backfill_dedup_sliced): ``SPARK_GRAFT_STREAM_PARTITIONS`` or 8, the
-    measured local optimum — per-store commit latency dominates small
-    drains.  Ints pass through; ``None`` means leave the session setting."""
-    import os
-    import warnings
-
-    if shuffle_partitions != "auto":
-        return shuffle_partitions
-    raw = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    try:
-        val = int(raw)
-        if val <= 0:
-            raise ValueError(raw)
-        return val
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_STREAM_PARTITIONS={raw!r} is not a positive "
-            "integer; falling back to 8",
-            stacklevel=3,
-        )
-        return 8
-
-
 def use_rocksdb_state(spark: SparkSession) -> None:
     """Switch this session's streaming state store to RocksDB (bundled with
     Spark 4 — no external deps): state spills to local disk instead of
@@ -412,7 +387,7 @@ def backfill_dedup_sliced(
     watermark: str = "2 hours",
     keys: list[str] | None = None,
     ts_col: str = "ts",
-    shuffle_partitions: int | str | None = "auto",
+    shuffle_partitions: int | None = 8,
 ) -> dict:
     """Backfill-safe streaming dedup (VERDICT r10 item 4): replay a bounded
     HISTORY through :func:`dedup_stream` in event-time-ordered slices so the
@@ -462,13 +437,11 @@ def backfill_dedup_sliced(
     including a failed run's leftovers — is refused up front.  For state that must exceed heap even per-slice,
     combine with :func:`use_rocksdb_state`.  ``shuffle_partitions`` sizes
     state-store parallelism for the drains exactly like
-    :func:`run_available_now` (``"auto"`` → ``SPARK_GRAFT_STREAM_PARTITIONS``
-    or 8; per-store commit latency dominates small drains; the session
-    conf is restored after)."""
+    :func:`run_available_now` (per-store commit latency dominates small
+    drains; the session conf is restored after)."""
     import urllib.parse
 
     spark = history.sparkSession
-    shuffle_partitions = _resolve_stream_partitions(shuffle_partitions)
     staged = work_dir.rstrip("/") + "/staged"
     feed = work_dir.rstrip("/") + "/feed"
     out = work_dir.rstrip("/") + "/out"
@@ -699,7 +672,7 @@ def run_available_now(
     stream_df: DataFrame,
     output_mode: str = "complete",
     query_name: str | None = None,
-    shuffle_partitions: int | str | None = "auto",
+    shuffle_partitions: int | None = 8,
 ):
     """Drain a streaming DataFrame into a memory sink (availableNow trigger)
     and return the bounded result as a batch DataFrame.  ``complete`` suits
@@ -711,20 +684,11 @@ def run_available_now(
     not row throughput — dominates small drains (measured on the interval
     join at sf0.1: 32 partitions → 6.0 s, 8 → 2.4 s for identical output).
     Size it to state volume: small bounded drains want few stores; a
-    production 100 TB/day stream wants hundreds.  The session conf is
-    restored after the drain so batch queries keep their own setting.
-
-    The default ``"auto"`` resolves from ``SPARK_GRAFT_STREAM_PARTITIONS``
-    (falling back to 8, the measured local optimum above) — the config
-    seam that sizes state-store parallelism per deployment without code
-    changes.  Pass an int to pin it, or ``None`` to leave the session's
-    own shuffle-partitions setting untouched.
-
-    NOTE (changelog): before the ``"auto"`` seam the parameter defaulted to
-    ``None`` (leave the session setting).  External callers who relied on
-    that must now pass ``shuffle_partitions=None`` explicitly.
+    production 100 TB/day stream wants hundreds.  The default 8 is the
+    measured local optimum above; ``None`` leaves the session's own
+    shuffle-partitions setting untouched.  The session conf is restored
+    after the drain so batch queries keep their own setting.
     """
-    shuffle_partitions = _resolve_stream_partitions(shuffle_partitions)
     spark = stream_df.sparkSession
     name = query_name or f"mem_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")

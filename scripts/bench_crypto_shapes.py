@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())))
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 # (label, n_partitions, rows_per_partition, payload_bytes)

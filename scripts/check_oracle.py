@@ -71,7 +71,7 @@ def main() -> int:
 
     spark = (
         apply_recommended_conf(
-            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
             .appName("oracle-check"),
             shuffle_partitions=16,
         )

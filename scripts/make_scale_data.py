@@ -51,7 +51,7 @@ def main() -> int:
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
         .appName(f"make-scale-{name}")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "24g")

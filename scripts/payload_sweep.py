@@ -30,7 +30,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())))
 SIZES = [("2KiB", 2048), ("64KiB", 64 * 1024), ("1MiB", 1024 * 1024)]
 TOTAL_BYTES = 512 * 1024 * 1024  # per (size, path) measurement
 REPS = 3

@@ -27,7 +27,7 @@ def main() -> None:
     query = sys.argv[1] if len(sys.argv) > 1 else "pipeline_dedup_report"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)

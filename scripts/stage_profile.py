@@ -35,7 +35,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("stage-profile")

@@ -65,7 +65,7 @@ def main() -> int:
     # recipe leaves it unset here
     spark = (
         apply_recommended_conf(
-            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
             .appName("determinism-sweep")
         )
         .config("spark.ui.enabled", "false")

@@ -52,16 +52,24 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-@pytest.fixture(scope="session")
-def reliable_ckpt_dir(tmp_path_factory) -> str:
-    """ONE checkpoint dir for every reliable-checkpoint test: Spark keeps a
-    single GLOBAL checkpoint dir per SparkContext and truncate_lineage sets
-    it only when unset, so two tests each passing their own tmp_path would
-    race on test order — the first wins and the second's dir stays empty
-    (broke test_iterative_ops_reliable_checkpoint_mode when the r15
-    pairs-operator checkpoint test landed).  Sharing the fixture makes
-    "requested dir == effective dir" hold regardless of ordering."""
-    return str(tmp_path_factory.mktemp("reliable_ckpt"))
+@pytest.fixture()
+def context_checkpoint_dir(spark, tmp_path):
+    """A setter that gives the SparkContext a checkpoint dir under
+    ``tmp_path`` and returns that path; the context is reset to no dir when
+    the test ends.  Spark keeps one dir per context, and with one set every
+    lineage cut becomes a reliable checkpoint
+    (operators/iterate.truncate_lineage)."""
+    sc = spark.sparkContext
+    path = tmp_path / "ckpt"
+
+    def use_dir():
+        sc.setCheckpointDir(str(path))
+        return path
+
+    try:
+        yield use_dir
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
 
 
 @pytest.fixture()

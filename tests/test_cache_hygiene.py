@@ -171,11 +171,11 @@ def test_loop_cache_partitions_rule(spark):
         big = dp * 8
         spark.conf.set("spark.sql.shuffle.partitions", str(big))
         assert loop_cache_partitions(spark) == big
-        # the cache itself lands on the chosen N (explicit count wins over conf)
+        # the cache itself lands on the chosen N
         df = spark.range(0, 100).select(F.col("id").alias("k"))
-        cached = loop_join_cache(df, "k", n_partitions=5)
+        cached = loop_join_cache(df, "k")
         try:
-            assert cached.rdd.getNumPartitions() == 5
+            assert cached.rdd.getNumPartitions() == big
         finally:
             cached.unpersist()
     finally:
@@ -211,24 +211,6 @@ def test_materialize_false_exposes_releasable_cache_handle(clean_cache, docs):
     assert out.count() > 0
     assert not _cache_is_empty(clean_cache)  # the sig cache is pinned, by design
     out._internal_cache.unpersist()
-    assert _cache_is_empty(clean_cache)
-
-
-def test_materialize_and_release_checkpoint_dir_identical_pairs(
-    clean_cache, docs, reliable_ckpt_dir
-):
-    """VERDICT r14 item 5 / ADVICE r14 (medium): the pairs operators'
-    eager materialization accepts a reliable checkpoint_dir (executor-loss
-    safety on real clusters); results must be identical to the default
-    localCheckpoint path and the internal cache still released."""
-    from duckdb_age_spark.operators.dedup import minhash_lsh_pairs, planted_near_dup_corpus
-
-    corpus = planted_near_dup_corpus(docs)
-    local = sorted(map(tuple, minhash_lsh_pairs(corpus).collect()))
-    reliable = sorted(
-        map(tuple, minhash_lsh_pairs(corpus, checkpoint_dir=reliable_ckpt_dir).collect())
-    )
-    assert local == reliable and len(local) > 0
     assert _cache_is_empty(clean_cache)
 
 

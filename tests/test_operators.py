@@ -1242,28 +1242,26 @@ def test_pagerank_exact_properties(spark):
     assert 0 < sum(a.values()) <= SCALE
 
 
-def test_pagerank_checkpoint_every_truncates_lineage(spark, broadcast_off):
-    """n_iter=20 with checkpoint_every=5: values are bit-identical to the
-    unrolled run (fixed-point math is partitioning-independent) and the
-    final plan no longer embeds all 20 iterations — lineage is cut at the
-    last checkpoint.  ``broadcast_off`` pins the distributed loop (this
-    12-node graph would otherwise run on the driver)."""
+def test_pagerank_checkpoint_every_truncates_lineage(spark, broadcast_threshold):
+    """n_iter=20 over the distributed loop: ranks are bit-identical to the
+    driver regime (fixed-point math is partitioning-independent), and the
+    loop cuts lineage every 10 rounds, never after the last — so the
+    returned plan holds the last 10 rounds' joins (3 each) over a checkpoint
+    leaf, not all 20 unrolled."""
+    from duckdb_age_spark.operators import graph
     from duckdb_age_spark.operators.graph import pagerank_exact
 
     edges = spark.createDataFrame(
         [(i, (i * 7) % 12) for i in range(12)] + [(1, 9), (2, 9)], "src long, dst long"
     )
-    plain = pagerank_exact(edges, n_iter=20)
-    ckpt = pagerank_exact(edges, n_iter=20, checkpoint_every=5)
-    a = {r.node: r.rank for r in plain.collect()}
-    b = {r.node: r.rank for r in ckpt.collect()}
-    assert a == b
-    # after the action, the checkpointed plan is rooted in a materialized RDD
-    plan_ckpt = ckpt._jdf.queryExecution().toString()
-    assert "ExistingRDD" in plan_ckpt or "LogicalRDD" in plan_ckpt
-    # and it is materially smaller than 20 unrolled iterations
-    plan_plain = plain._jdf.queryExecution().toString()
-    assert len(plan_ckpt) < len(plan_plain) / 2
+    driver = {r.node: r.rank for r in pagerank_exact(edges, n_iter=20).collect()}
+    broadcast_threshold("-1")
+    loop = pagerank_exact(edges, n_iter=20)
+    assert {r.node: r.rank for r in loop.collect()} == driver
+    plan = loop._jdf.queryExecution().analyzed().toString()
+    joins = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Join ")]
+    assert len(joins) == 3 * graph._PAGERANK_TRUNCATE_EVERY, plan
+    assert "LogicalRDD" in plan
 
 
 def _in_both_regimes(set_threshold, run):
@@ -1418,6 +1416,35 @@ def test_pagerank_exact_empty_edge_list(spark, broadcast_threshold):
     ):
         assert schema.simpleString() == "struct<node:bigint,rank:bigint>"
         assert rows == []
+
+
+def _empty_graph_cases(spark):
+    from duckdb_age_spark.operators import dedup, graph
+
+    e = spark.createDataFrame([], "src long, dst long")
+    ew = spark.createDataFrame([], "src long, dst long, w long")
+    return {
+        "pagerank_exact": lambda: graph.pagerank_exact(e),
+        "weighted_pagerank": lambda: graph.weighted_pagerank(ew),
+        "connected_components": lambda: dedup.connected_components(e, spark.range(0)),
+        "bfs_hops": lambda: graph.bfs_hops(e),
+        "harmonic_closeness": lambda: graph.harmonic_closeness(e),
+        "kcore_peel": lambda: graph.kcore_peel(e),
+        "label_propagation": lambda: graph.label_propagation(e),
+        "hits_scores": lambda: graph.hits_scores(e),
+        "weighted_sssp": lambda: graph.weighted_sssp(ew),
+    }
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["default", "broadcast_off"])
+def test_loop_operators_empty_graph_return_no_rows(spark, broadcast_threshold, threshold):
+    """Every loop operator returns 0 rows on an empty edge list, in both
+    regimes — weighted_sssp used to return one (NULL, 0) row, seeded by
+    the NULL min of no edges."""
+    if threshold is not None:
+        broadcast_threshold(threshold)
+    for name, run in _empty_graph_cases(spark).items():
+        assert run().collect() == [], name
 
 
 def test_pii_scrub_counts_and_redacts(spark):
@@ -2547,39 +2574,6 @@ def test_time_weighted_avg_burst_insensitive(spark):
     )
     r = time_weighted_avg(events, bucket_sec=3600).collect()[0]
     assert r.twap > 9.0  # 10 held for 100 of 101 seconds
-
-
-def test_iterative_ops_reliable_checkpoint_mode(spark, reliable_ckpt_dir):
-    """VERDICT r5 item 7: connected_components and bfs_hops accept a
-    reliable checkpoint_dir (cluster mode, survives executor loss) and
-    produce identical results to the localCheckpoint default.  Uses the
-    session-shared reliable_ckpt_dir: the SparkContext keeps ONE global
-    checkpoint dir, so a per-test tmp_path only takes effect for whichever
-    checkpoint test runs first (conftest fixture docstring)."""
-    from duckdb_age_spark.operators.dedup import connected_components
-    from duckdb_age_spark.operators.graph import bfs_hops
-
-    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
-    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 6, 9)], "id long")
-    ckpt = reliable_ckpt_dir
-
-    local_cc = {r.id: r.cluster_id for r in connected_components(edges, nodes).collect()}
-    rel_cc = {
-        r.id: r.cluster_id
-        for r in connected_components(edges, nodes, checkpoint_dir=ckpt).collect()
-    }
-    assert local_cc == rel_cc == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 9: 9}
-
-    local_bfs = {r.node: r.hops for r in bfs_hops(edges, source=1, max_hops=3).collect()}
-    rel_bfs = {
-        r.node: r.hops
-        for r in bfs_hops(edges, source=1, max_hops=3, checkpoint_dir=ckpt).collect()
-    }
-    assert local_bfs == rel_bfs == {1: 0, 2: 1, 3: 2}
-    # the reliable mode actually wrote checkpoint data
-    import os
-
-    assert any(os.scandir(ckpt))
 
 
 def test_hll_estimate_accuracy_and_exact_ints(spark):

@@ -1076,8 +1076,8 @@ def test_cc_round_join_reuses_cached_edge_partitioning(spark, monkeypatch, broad
     calls: list[tuple] = []
     real = loop_join_cache
 
-    def recording(df, key, checkpoint_dir=None, n_partitions=None):
-        out = real(df, key, checkpoint_dir, n_partitions)
+    def recording(df, key):
+        out = real(df, key)
         calls.append((key, out))
         return out
 

@@ -409,10 +409,10 @@ def test_update_mode_distinct_exact_after_horizon_duplicate(spark, tmp_path):
     assert counts_w0 and max(counts_w0) == 2, rows
 
 
-def test_run_available_now_env_seam(spark, tmp_path, monkeypatch):
-    """VERDICT r5 item 4: state-store parallelism for drains comes from
-    SPARK_GRAFT_STREAM_PARTITIONS (default 8) instead of a hard-coded
-    constant, and the session's own setting is restored afterwards."""
+def test_run_available_now_env_seam(spark, tmp_path):
+    """A drain sizes its state-store parallelism from
+    ``shuffle_partitions`` and restores the session's own setting
+    afterwards."""
     from datetime import datetime
 
     import pyarrow as pa
@@ -437,11 +437,10 @@ def test_run_available_now_env_seam(spark, tmp_path, monkeypatch):
         .groupBy("k")
         .count()
     )
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    out = run_available_now(stream, output_mode="complete")
+    out = run_available_now(stream, output_mode="complete", shuffle_partitions=3)
     assert out.count() == 1
-    # drain ran with the env-resolved setting; session conf restored after
+    # session conf restored after the drain
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
