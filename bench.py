@@ -222,7 +222,7 @@ BENCH_QUERIES = [
 ]
 
 
-def _kernel_bench(all_cores: bool = True) -> dict[str, float]:
+def _kernel_bench() -> dict[str, float]:
     """Single-core crypto kernel throughput, measured in-process with no
     Spark/Arrow/JVM in the loop.
 
@@ -277,258 +277,41 @@ def _kernel_bench(all_cores: bool = True) -> dict[str, float]:
         dec_best = min(dec_best, time.perf_counter() - t0)
     out["kernel_encrypt_mb_per_s_per_core"] = round(n_blocks / enc_best, 1)
     out["kernel_decrypt_mb_per_s_per_core"] = round(n_blocks / dec_best, 1)
-
-    # All-cores control (r12 finding): one r12 run passed load +
-    # single-core bracket + µs/row and still swept uniformly ~17% slow —
-    # the single-core probe is blind to multicore-throughput degradation
-    # (shared-tenant steal, turbo/thermal budgets that only bite with all
-    # cores busy).  The same 2 KiB encrypt loop fanned across CPUS
-    # processes (multiprocessing, NOT threads — the GIL serializes the
-    # Python kernel); gated since r13 via SPARK_GRAFT_BENCH_MAX_US_ROW_MC.
-    # ``all_cores=False`` skips it: the wait-for-clean loop probes the
-    # cheap signals first because this control IS a 32-process load burst
-    # — probing it every 30 s would inflate the very load average the
-    # loop is waiting to decay (self-contention).
-    if all_cores:
-        try:
-            out["kernel_encrypt_us_per_row_all_cores"] = _multicore_control()
-        except Exception:
-            pass  # control must never crash the bench
-        # membw control rides the same all_cores flag: it too is a
-        # deliberate full-box load burst (one triad thread per hardware
-        # thread), so the wait-for-clean loop must not fire it every 30 s
-        try:
-            mc = _membw_probe_mc()
-            if mc > 0:
-                out["membw_mc_gb_per_s"] = mc
-            elif mc == -2.0:
-                # worker death inside the probe — make the vanished gate
-                # VISIBLE in the snapshot: membw_mc_gb_per_s stays absent
-                # (no check fires) but the failure is distinguishable from
-                # "probe skipped" (ADVICE r14)
-                out["membw_mc_probe_failed"] = 1.0
-        except Exception:
-            out["membw_mc_probe_failed"] = 1.0
     return out
 
 
-def _membw_probe() -> float:
-    """Single-threaded large-array triad bandwidth in GB/s — REPORT-ONLY.
-
-    r13 finding (the gate arms race, next blind spot): a run can pass
-    EVERY CPU-bound control — load 0.03, single-core bracket 960→1084,
-    all-cores 194-212 µs/row (best calibration values ever recorded) —
-    and still sweep a uniform +16-19% slow across 193 queries vs both the
-    r12 clean run and a same-code run hours earlier.  The crypto kernel is
-    compute-bound and cache-resident, so co-tenant MEMORY-BANDWIDTH / LLC
-    pressure is invisible to every existing control, while the Spark sweep
-    (scan/shuffle/hash heavy) pays full price.  This probe moves 3×256 MB
-    per rep through a numpy triad (read a, write b, read b — LLC-busting
-    working set), i.e. exactly the resource the crypto controls never
-    touch.  Min-of-reps like the brackets (contention only inflates).
-    STAYS REPORT-ONLY (membw_gb_per_s_start/_end in BENCH_extra): r14
-    calibration showed this single-thread shape cannot discriminate — one
-    core is latency-bound at ~9 GB/s on a >110 GB/s controller, so samples
-    from gate-degraded and calm windows overlap (8.2-9.8 across both).
-    The GATED membw signal is :func:`_membw_probe_mc` (all-threads
-    aggregate), which sees controller-level steal directly.  Kept for
-    round-over-round continuity of the r13 numbers.  NOT in the headline:
-    that line sits at its 1800-byte driver-capture cap.
-    """
-    try:
-        import numpy as np
-    except Exception:
-        return -1.0
-    n = 32 * 1024 * 1024  # 256 MB of float64
-    a = np.ones(n)
-    b = np.empty_like(a)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        np.multiply(a, 1.0000001, out=b)
-        _ = b.sum()
-        best = min(best, time.perf_counter() - t0)
-    del a, b
-    return round(3 * n * 8 / best / 1e9, 2)
-
-
-def _membw_probe_mc(
-    nthreads: int | None = None,
-    n: int = 4 * 1024 * 1024,
-    reps: int = 8,
-    invocations: int = 4,
-) -> float:
-    """ALL-THREADS triad aggregate bandwidth in GB/s — the gated membw
-    signal (r14, VERDICT r13 item 1).
-
-    Why a second membw probe: the single-thread triad above is
-    latency/prefetch-bound, not controller-bound — one core moves ~9 GB/s
-    on a controller this box drives at >110 GB/s aggregate (measured r14),
-    so a co-tenant stealing 20-30% of DRAM bandwidth barely moves the
-    single-thread figure (r13's degraded-day samples, 8.3-8.6 idle, overlap
-    r14 samples taken minutes apart across regimes).  Saturating the
-    controller with one triad worker per hardware thread makes the steal
-    directly visible as a lower aggregate.
-
-    Mechanics: ``nthreads`` numpy triad workers (threads, not processes —
-    numpy releases the GIL inside multiply/sum, and threads share a start
-    barrier tightly), each over its own 3×32 MB arrays (LLC-busting),
-    barrier-released together; aggregate = total bytes / overlapped wall.
-    Best-of-``invocations`` — contention only ever DEFLATES bandwidth, so
-    max is the contention-robust estimator (the dual of the time brackets'
-    min-of-reps).
-
-    Calibration (r14, recorded in ROADMAP): on a window the existing CPU
-    gate itself called degraded (bracket 753-814 MB/s/core) the best-of-4
-    read 88.7; on the calmest window of the same day (load 0.03, minutes
-    before a run that still swept slow) it read 114.3.  Floor default 90
-    (SPARK_GRAFT_BENCH_MIN_MEMBW_MC) — refuses the observed degraded
-    window, clears the best observed window; PROVISIONAL until a
-    certified-clean day (sweep at r12-clean pace) widens the contrast set.
-    """
-    try:
-        import numpy as np
-    except Exception:
-        return -1.0
-    import threading
-
-    if nthreads is None:
-        nthreads = CPUS
-    arrs = [(np.ones(n), np.empty(n)) for _ in range(nthreads)]
-    best = 0.0
-    for _ in range(invocations):
-        barrier = threading.Barrier(nthreads)
-        spans: list[tuple[float, float]] = [None] * nthreads  # type: ignore[list-item]
-
-        def worker(i: int) -> None:
-            a, b = arrs[i]
-            np.multiply(a, 1.0000001, out=b)  # warm/fault the pages
-            barrier.wait()
-            t0 = time.perf_counter()
-            for _ in range(reps):
-                np.multiply(a, 1.0000001, out=b)
-                _ = b.sum()
-            spans[i] = (t0, time.perf_counter())
-
-        threads = [threading.Thread(target=worker, args=(i,)) for i in range(nthreads)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if any(s is None for s in spans):
-            # a worker died (allocation failure, broken barrier) without
-            # recording its span — report PROBE FAILURE (-2.0) rather than
-            # raising, so the caller can record it in the snapshot instead
-            # of the gate silently vanishing (ADVICE r14)
-            return -2.0
-        wall = max(s[1] for s in spans) - min(s[0] for s in spans)
-        # bytes per rep per worker: read a + write b + read b = 24n
-        best = max(best, 24.0 * n * reps * nthreads / wall / 1e9)
-    del arrs
-    return round(best, 2)
-
-
-def _mc_worker(n_rows: int) -> float:
-    """Encrypt ``n_rows`` 2 KiB payloads; return elapsed seconds.  Module
-    scope so multiprocessing can pickle it (spawn-safe)."""
-    import time as _t
-
-    from duckdb_age_spark.contract import KP1
-    from duckdb_age_spark.crypto import format as _fmt
-    from duckdb_age_spark.crypto import keys as _keys
-
-    pub = _keys.parse_recipient(KP1.public_key)
-    pt = b"x" * 2048
-    _fmt.encrypt(pt, [pub])  # warm key cache
-    t0 = _t.perf_counter()
-    for _ in range(n_rows):
-        _fmt.encrypt(pt, [pub])
-    return _t.perf_counter() - t0
-
-
-def _multicore_control(n_rows: int = 900) -> float:
-    """us/row on the SLOWEST worker with EVERY core busy: CPUS processes
-    each encrypt ``n_rows`` 2 KiB payloads and time only their own loop;
-    the figure is max(worker elapsed)/n_rows.  Worker-side timing excludes
-    ProcessPoolExecutor dispatch/IPC stagger (at the old 60-row size ~7 ms
-    of work sat inside a wall clock dominated by scheduler overhead —
-    ADVICE r12), and 900 rows x ~115 us ≈ 100 ms per worker keeps timer
-    noise <1%.  On this SMT box (32 threads / 16 physical cores) healthy is
-    ~2x the single-core us/row because pairs share a core; a larger gap
-    means multicore-only degradation the single-core bracket cannot see."""
-    import concurrent.futures as cf
-    import multiprocessing as mp
-
-    # spawn, not fork: the END bracket runs after spark.stop(), and forking
-    # a process that hosted a JVM can inherit held locks from leftover py4j
-    # threads — a child hang there would stall the whole bench (the
-    # try/except above catches exceptions, not deadlocks).  Spawn starts
-    # clean interpreters; bench.py's __main__ guard keeps re-import safe.
-    with cf.ProcessPoolExecutor(max_workers=CPUS, mp_context=mp.get_context("spawn")) as pool:
-        # warm the pool (interpreter + import cost must not pollute the
-        # measurement; a 1-row task per worker forces full spin-up)
-        list(pool.map(_mc_worker, [1] * CPUS))
-        elapsed = list(pool.map(_mc_worker, [n_rows] * CPUS))
-    return round(max(elapsed) / n_rows * 1e6, 1)
-
-
 def contention_reasons(
-    load_avg: list[float],
-    kernel: dict[str, float],
-    max_load: float,
-    min_kernel: float,
-    max_us_row: float = float("inf"),
-    max_us_row_mc: float = float("inf"),
-    min_membw_mc: float = 0.0,
+    load_start: list[float],
+    load_end: list[float],
+    bracket_start: float | None,
+    bracket_end: float | None,
+    cpus: int,
 ) -> list[str]:
-    """Pure contention rule (unit-tested without running the bench): a
-    snapshot is tainted when the 1-minute load average exceeds
-    ``max_load`` at start, the pre-JVM single-core kernel bracket sits
-    below ``min_kernel`` MB/s/core, or the per-row encrypt kernel costs
-    more than ``max_us_row`` us/row.  This box's healthy envelope is
-    >=950 MB/s/core at ~110-125 us/row across every clean r6-r11 run; the
-    tainted BENCH_r09 started at load 5.46 / 632 MB/s/core, and the r12
-    floor raise exists because the r11 driver snapshot scraped through the
-    old 850 floor at 851 MB/s/core / 191 us/row while ~30% degraded on its
-    own yardstick (VERDICT r11 item 3)."""
+    """Pure contention rule: the run is compared only with itself and the
+    box's core count, never with figures calibrated on other hardware.  A
+    snapshot is tainted when
+
+    * the 1- or 5-minute load average at start exceeds ``cpus / 2`` (the
+      5-minute figure catches a run started seconds after heavy jobs, when
+      the 1-minute one has already decayed);
+    * the 1-minute load at end exceeds ``cpus`` (it includes this run's own
+      just-stopped executors, so only load well beyond them flags);
+    * the pre-JVM and post-stop single-core encrypt brackets (MB/s/core)
+      differ by more than 25 % of the start value, i.e. the box's speed
+      moved under the run.
+
+    A missing load average (``os.getloadavg`` unavailable) or a missing
+    bracket never tags."""
     reasons = []
-    if load_avg and load_avg[0] > max_load:
-        reasons.append(f"load_avg_1m={load_avg[0]}>{max_load}")
-    # 5-minute average too (round 11): a run started seconds after heavy
-    # jobs finish can pass the 1-minute check while page-cache churn and
-    # scheduler backlog still inflate medians — measured +7.7% median /
-    # 31 queries >20% on a run at 1m=0.57, 5m=3.11.
-    if len(load_avg) > 1 and load_avg[1] > max_load:
-        reasons.append(f"load_avg_5m={load_avg[1]}>{max_load}")
-    mbps = kernel.get("kernel_encrypt_mb_per_s_per_core", float("inf"))
-    if mbps < min_kernel:
-        reasons.append(f"start_kernel_mbps={mbps}<{min_kernel}")
-    # The two kernel signals probe different shapes (1 MiB bulk vs 2 KiB
-    # per-row) and a degraded box can pass one while failing the other —
-    # the r11 driver window was exactly such a split at the old floors.
-    us_row = kernel.get("kernel_encrypt_us_per_row", 0.0)
-    if us_row > max_us_row:
-        reasons.append(f"start_kernel_us_row={us_row}>{max_us_row}")
-    # All-cores signal (r13, closes the r12 blind spot): a run can pass
-    # every signal above yet sweep uniformly slow when degradation only
-    # bites with all cores busy (the r12 180.4 s window: load 0.0,
-    # bracket 953, 120 us/row — +17% median across 182 untouched
-    # queries).  The key is absent when the probe skipped the control
-    # (cheap-signals-first wait loop) — no check fires then.
-    us_row_mc = kernel.get("kernel_encrypt_us_per_row_all_cores", 0.0)
-    if us_row_mc > max_us_row_mc:
-        reasons.append(f"start_kernel_us_row_all_cores={us_row_mc}>{max_us_row_mc}")
-    # Memory-bandwidth signal (r14, closes the r13 blind spot): the 171.95 s
-    # r13 window passed EVERY CPU-bound control (load 0.0, bracket 960-1084,
-    # all-cores 194-212 — best values ever) yet swept a uniform 1.10-1.19x
-    # slow across 193 queries — co-tenant DRAM/LLC pressure is invisible to
-    # cache-resident crypto kernels while the scan/shuffle-heavy Spark path
-    # pays full price.  The all-threads triad aggregate sees it directly.
-    # Key absent ⇒ probe skipped (cheap-signals-first wait loop) or numpy
-    # missing — no check fires, mirroring the all-cores control.
-    membw_mc = kernel.get("membw_mc_gb_per_s", float("inf"))
-    if membw_mc < min_membw_mc:
-        reasons.append(f"start_membw_mc_gbps={membw_mc}<{min_membw_mc}")
+    for window, load in zip(("1m", "5m"), load_start[:2]):
+        if load > cpus / 2:
+            reasons.append(f"load_avg_{window}={load}>{cpus / 2}")
+    if load_end and load_end[0] > cpus:
+        reasons.append(f"load_avg_1m_end={load_end[0]}>{cpus}")
+    if bracket_start and bracket_end:
+        drift = (bracket_end - bracket_start) / bracket_start
+        if abs(drift) > 0.25:
+            reasons.append(f"bracket_drift={drift:+.0%}({bracket_start}->{bracket_end})")
     return reasons
 
 
@@ -540,86 +323,6 @@ def main() -> None:
     except OSError:
         load_start = []
     kernel = _kernel_bench()
-
-    # Contention guard (VERDICT r9 item 1): BENCH_r09 was taken at
-    # load_avg 5.46 with a 632 MB/s/core start bracket — five queries
-    # "regressed" >30% with zero code changes.  A dirty snapshot must
-    # never silently become the round's number again: tag the JSON with
-    # the specific contention signals, and under SPARK_GRAFT_BENCH_STRICT=1
-    # refuse outright (exit 3) so an interactive re-measure can't be
-    # fooled.  Thresholds are this box's observed healthy envelope
-    # (pre-JVM bracket ≥900 across r6-r9 clean runs) and env-overridable
-    # for other hardware.
-    # Floors raised r12 (VERDICT r11 item 3): the driver's r11 snapshot
-    # passed the old >=850 bracket floor at 851 MB/s/core while its per-row
-    # kernel ran 191 us/row vs the clean 112 — ~30% degraded end to end.
-    # 950/150 refuse that window; both remain env-overridable.
-    max_load = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "2.0"))
-    min_kernel = float(os.environ.get("SPARK_GRAFT_BENCH_MIN_KERNEL", "950"))
-    max_us_row = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_US_ROW", "150"))
-    # All-cores floor (r13, VERDICT r12 item 2): calibrated from repeated
-    # clean-window samples of the max-of-workers measurement (ROADMAP r13
-    # records the runs) — healthy reads ~2x the single-core us/row on
-    # this SMT box (32 threads / 16 physical cores; observed 213-229),
-    # while the r12 degraded windows read 330-445 on the old noisier
-    # wall-clock metric.  280 = healthy envelope + ~25%, refusing every
-    # observed degraded window while clearing every observed clean one.
-    max_us_row_mc = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_US_ROW_MC", "280"))
-    # Membw floor (r14, VERDICT r13 item 1): calibration points in the
-    # _membw_probe_mc docstring — 88.7 on a CPU-gate-degraded window vs
-    # 114.3 on the same day's calmest window.  90 refuses the former,
-    # clears the latter; provisional until a certified-clean-day contrast.
-    min_membw_mc = float(os.environ.get("SPARK_GRAFT_BENCH_MIN_MEMBW_MC", "90"))
-    contended_reasons = contention_reasons(
-        load_start, kernel, max_load, min_kernel, max_us_row, max_us_row_mc, min_membw_mc
-    )
-    # Wait-for-clean-window (VERDICT r10 item 1): rather than immediately
-    # stamping a tainted snapshot, re-probe for up to
-    # SPARK_GRAFT_BENCH_WAIT_S seconds (default 300; 0 disables) until the
-    # box passes BOTH signals.  The r9/r10 taints were transient external
-    # load — a bounded wait converts "tagged contended" into "clean, a few
-    # minutes later" without changing the refusal/tagging semantics when
-    # the window never opens.
-    wait_budget = float(os.environ.get("SPARK_GRAFT_BENCH_WAIT_S", "300"))
-    waited = 0.0
-    while contended_reasons and waited < wait_budget:
-        step = min(30.0, wait_budget - waited)
-        print(
-            f"bench: contended ({'; '.join(contended_reasons)}); "
-            f"waiting {step:.0f}s for a clean window "
-            f"({waited:.0f}/{wait_budget:.0f}s used)",
-            file=sys.stderr,
-        )
-        time.sleep(step)
-        waited += step
-        try:
-            load_start = [round(x, 2) for x in os.getloadavg()]
-        except OSError:
-            load_start = []
-        # cheap signals first: the all-cores control is itself a
-        # 32-process burst, so probing it every 30 s would keep inflating
-        # the load average this loop is waiting to decay.  Only when the
-        # cheap signals pass does the full bracket (with the control) run.
-        kernel = _kernel_bench(all_cores=False)
-        contended_reasons = contention_reasons(
-            load_start, kernel, max_load, min_kernel, max_us_row, max_us_row_mc, min_membw_mc
-        )
-        if not contended_reasons:
-            kernel = _kernel_bench()
-            contended_reasons = contention_reasons(
-                load_start, kernel, max_load, min_kernel, max_us_row, max_us_row_mc, min_membw_mc
-            )
-    if contended_reasons:
-        msg = "BENCH BOX CONTENDED: " + "; ".join(contended_reasons)
-        print(msg, file=sys.stderr)
-        if os.environ.get("SPARK_GRAFT_BENCH_STRICT") == "1":
-            print(json.dumps({"metric": "bench_refused_contended",
-                              "value": -1, "unit": "sec",
-                              "contended": contended_reasons}))
-            sys.exit(3)
-
-    membw_start = _membw_probe()
-    print(f"bench: membw_gb_per_s_start={membw_start}", file=sys.stderr)
 
     from pyspark.sql import SparkSession, functions as F
 
@@ -869,20 +572,16 @@ def main() -> None:
         pass  # best-effort: bench numbers must not depend on catalog state
     spark.stop()
     kernel_end = _kernel_bench()
-    _end_mbps = kernel_end.get("kernel_encrypt_mb_per_s_per_core", float("inf"))
-    if _end_mbps < min_kernel:
-        contended_reasons.append(f"end_kernel_mbps={_end_mbps}<{min_kernel}")
-    _end_membw_mc = kernel_end.get("membw_mc_gb_per_s", float("inf"))
-    if _end_membw_mc < min_membw_mc:
-        contended_reasons.append(f"end_membw_mc_gbps={_end_membw_mc}<{min_membw_mc}")
-    if load_end and load_end[0] > max_load + CPUS * 0.5:
-        # end load includes our own just-stopped executor threads; only a
-        # figure far above what this process accounts for flags external load
-        contended_reasons.append(f"load_avg_1m_end={load_end[0]}")
-    membw_end = _membw_probe()
-    print(f"bench: membw_gb_per_s_end={membw_end}", file=sys.stderr)
-    extra["membw_gb_per_s_start"] = membw_start
-    extra["membw_gb_per_s_end"] = membw_end
+    # judged once both brackets exist: a tainted run is tagged, not held back
+    contended_reasons = contention_reasons(
+        load_start,
+        load_end,
+        kernel.get("kernel_encrypt_mb_per_s_per_core"),
+        kernel_end.get("kernel_encrypt_mb_per_s_per_core"),
+        CPUS,
+    )
+    if contended_reasons:
+        print("BENCH BOX CONTENDED: " + "; ".join(contended_reasons), file=sys.stderr)
     extra["contended"] = contended_reasons
     extra["load_avg_start"] = load_start
     extra["load_avg_end"] = load_end
@@ -910,7 +609,7 @@ def main() -> None:
     # linear model of CPU-bound drift — good enough to separate
     # "environment" from "code regression" (the r11 driver snapshot's 20
     # phantom regressions all vanish under it), not a substitute for the
-    # contention gate, which still refuses badly degraded windows outright.
+    # ``contended`` tag, which marks runs whose box moved under them.
     bracket_ref = float(os.environ.get("SPARK_GRAFT_BENCH_BRACKET_REF", "1000"))
     brackets = [
         kernel.get("kernel_encrypt_mb_per_s_per_core"),
@@ -953,13 +652,11 @@ def main() -> None:
         # box (BENCH_r02's phantom crypto regression); these are measured
         # pre-JVM with min-of-reps and are the stable round-over-round
         # crypto signal.  load_avg documents how noisy the run was.
-        # membw_mc_gb_per_s lives in BENCH_extra only — the headline sits
-        # at its 1800-byte driver-capture cap (VERDICT r13 item 1)
-        "kernel": {k: v for k, v in kernel.items() if k != "membw_mc_gb_per_s"},
+        "kernel": kernel,
         # the same control re-measured after the sweep: start ≈ end means a
         # quiet box; a gap means drift, and query medians should be read
         # against the bracket, not either endpoint
-        "kernel_end": {k: v for k, v in kernel_end.items() if k != "membw_mc_gb_per_s"},
+        "kernel_end": kernel_end,
         "load_avg": {"start": load_start, "end": load_end},
         # non-empty list = this snapshot was taken on a contended box and
         # must not be read as a round-over-round regression signal

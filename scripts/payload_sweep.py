@@ -48,17 +48,18 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
     import duckdb_age_spark as age
+    from duckdb_age_spark.conf import apply_recommended_conf
 
     spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{CPUS}]").appName("payload-sweep"),
+            shuffle_partitions=CPUS,
+        )
         .config("spark.jars", jar)
         .config("spark.driver.extraClassPath", jar)
         .config("spark.executor.extraClassPath", jar)
-        .config("spark.sql.shuffle.partitions", str(CPUS))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("payload-sweep")
         .getOrCreate()
     )
     age.register(spark)  # python path + the measured arrow batch tuning

@@ -58,6 +58,7 @@ def test_harnesses_consume_the_engine_recipe():
         "scripts/qtime.py",
         "scripts/capture_plans.py",
         "scripts/check_oracle.py",
+        "scripts/payload_sweep.py",
         "scripts/sweep_determinism.py",
     ):
         src = open(os.path.join(REPO, rel)).read()

@@ -3,6 +3,8 @@ test/sql/age.test error cases), without a Spark session."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from duckdb_age_spark import errors
@@ -151,163 +153,102 @@ def test_priority_50_covers_every_operator_family():
     assert all(n in contract.ORACLE_SQL for n in contract._PRIORITY_50)
 
 
-# --- bench contention guard (VERDICT r9 item 1) -------------------------------
+# --- bench contention guard: the run compared only with itself ---------------
 
 
 def test_bench_contention_reasons():
-    """The rule that decides whether a bench snapshot is tainted: BENCH_r09
-    was taken at load 5.46 / 632 MB/s/core and its five phantom regressions
-    cost a round — pin that exact shape as contended, a clean-box shape as
-    not, and each signal independently."""
+    """The rule that decides whether a bench snapshot is tainted, as a
+    table: (load_start, load_end, bracket_start, bracket_end, cpus) ->
+    reasons.  Start load is judged against cpus/2, end load against cpus,
+    and the start/end single-core bracket against a 25 % drift."""
     import bench
 
-    healthy = {"kernel_encrypt_mb_per_s_per_core": 1008.2, "kernel_encrypt_us_per_row": 112.0}
-    tainted = {"kernel_encrypt_mb_per_s_per_core": 632.5, "kernel_encrypt_us_per_row": 240.0}
-    assert bench.contention_reasons([0.02, 0.01, 0.3], healthy, 2.0, 950, 150) == []
-    # the BENCH_r09 shape: all four signals fire (1m, 5m, bulk kernel, per-row)
-    r9 = bench.contention_reasons([5.46, 4.03, 2.57], tainted, 2.0, 950, 150)
-    assert len(r9) == 4 and "load_avg_1m=5.46>2.0" in r9[0] and "632.5" in r9[2]
-    assert "load_avg_5m=4.03>2.0" in r9[1]
-    assert "start_kernel_us_row=240.0>150" in r9[3]
-    # the round-11 shape the 5m signal exists for: 1m decayed below the
-    # threshold seconds after heavy jobs finished, but the box was NOT
-    # quiet (measured +7.7% median across 193 queries)
-    assert bench.contention_reasons([0.57, 3.11, 5.69], healthy, 2.0, 950, 150) == [
-        "load_avg_5m=3.11>2.0"
+    quiet = ([0.3, 0.4, 0.5], [1.2, 0.8, 0.6], 1000.0, 1000.0, 4)
+    cases = [
+        (quiet, []),
+        # start load over cpus/2, on each window independently (the 5m one
+        # catches a run started just after heavy jobs, 1m already decayed)
+        (([2.5, 0.4, 0.5], *quiet[1:]), ["load_avg_1m=2.5>2.0"]),
+        (([0.5, 3.11, 5.69], *quiet[1:]), ["load_avg_5m=3.11>2.0"]),
+        (([2.01, 2.02, 0.5], *quiet[1:]), ["load_avg_1m=2.01>2.0", "load_avg_5m=2.02>2.0"]),
+        # exactly cpus/2 is not over it; the threshold scales with the box
+        (([2.0, 2.0, 2.0], *quiet[1:]), []),
+        (([3.0, 3.0, 3.0], quiet[1], 1000.0, 1000.0, 8), []),
+        # end load over cpus (the run's own executors account for less)
+        ((quiet[0], [4.5, 2.0, 1.0], 1000.0, 1000.0, 4), ["load_avg_1m_end=4.5>4"]),
+        ((quiet[0], [4.0, 2.0, 1.0], 1000.0, 1000.0, 4), []),
+        # bracket drift over 25 % of the start value, in both directions
+        ((*quiet[:2], 1000.0, 740.0, 4), ["bracket_drift=-26%(1000.0->740.0)"]),
+        ((*quiet[:2], 1000.0, 1260.0, 4), ["bracket_drift=+26%(1000.0->1260.0)"]),
+        ((*quiet[:2], 1000.0, 760.0, 4), []),
+        ((*quiet[:2], 1000.0, 1240.0, 4), []),
+        # missing signals never tag: getloadavg raised, or a bracket absent
+        (([], [], 1000.0, 1000.0, 4), []),
+        ((*quiet[:2], None, 500.0, 4), []),
+        ((*quiet[:2], 1000.0, None, 4), []),
+        (([], [], None, None, 4), []),
+        # every signal at once
+        (([5.46, 4.03, 2.57], [10.58, 5.85, 4.07], 1000.0, 600.0, 4), [
+            "load_avg_1m=5.46>2.0",
+            "load_avg_5m=4.03>2.0",
+            "load_avg_1m_end=10.58>4",
+            "bracket_drift=-40%(1000.0->600.0)",
+        ]),
     ]
-    # THE r12 floor-raise case (VERDICT r11 item 3): the r11 driver window
-    # — quiet load, bracket 851.1 MB/s/core at 191.4 us/row — scraped the
-    # old >=850 floor by 0.1% while ~30% degraded and inflated the round's
-    # committed totals.  The raised floors must refuse it on BOTH kernel
-    # signals, and must have refused it at the old floor too via us/row.
-    r11_window = {
-        "kernel_encrypt_mb_per_s_per_core": 851.1,
-        "kernel_encrypt_us_per_row": 191.4,
+    for args, want in cases:
+        assert bench.contention_reasons(*args) == want, args
+
+
+def test_kernel_bench_starts_no_workers(monkeypatch):
+    """The kernel bracket is single-core only: it must start no thread and
+    no process pool, and report exactly its four single-core figures."""
+    import concurrent.futures
+    import threading
+
+    import bench
+
+    def _refuse(*_a, **_k):
+        raise AssertionError("kernel bracket started a worker")
+
+    monkeypatch.setattr(threading.Thread, "start", _refuse)
+    monkeypatch.setattr(concurrent.futures, "ProcessPoolExecutor", _refuse)
+    out = bench._kernel_bench()
+    assert set(out) == {
+        "kernel_encrypt_us_per_row",
+        "kernel_decrypt_us_per_row",
+        "kernel_encrypt_mb_per_s_per_core",
+        "kernel_decrypt_mb_per_s_per_core",
     }
-    got = bench.contention_reasons([0.3, 0.4, 0.5], r11_window, 2.0, 950, 150)
-    assert got == [
-        "start_kernel_mbps=851.1<950",
-        "start_kernel_us_row=191.4>150",
-    ]
-    # each signal alone
-    assert bench.contention_reasons([3.0, 0, 0], healthy, 2.0, 950, 150) == [
-        "load_avg_1m=3.0>2.0"
-    ]
-    assert bench.contention_reasons([0.1, 0, 0], tainted, 2.0, 600, 300) == []
-    # missing signals never false-positive (getloadavg can raise; a kernel
-    # dict without the key means the microbench was skipped); max_us_row
-    # also defaults open for callers that pass only the original four args
-    assert bench.contention_reasons([], {}, 2.0, 950, 150) == []
-    assert bench.contention_reasons([0.1], healthy, 2.0, 950) == []
-    # THE r13 gate addition (VERDICT r12 item 2): the r12 180.4 s window —
-    # load 0.0, bracket 953, 120 us/row — passed every signal above while
-    # sweeping a uniform +17% median across 182 untouched queries; only
-    # the all-cores control saw it (multicore-only degradation).  A
-    # synthetic bracket of that shape must now be refused on exactly the
-    # all-cores signal, and a healthy all-cores reading must pass.
-    r12_blindspot = {
-        "kernel_encrypt_mb_per_s_per_core": 953.0,
-        "kernel_encrypt_us_per_row": 120.0,
-        "kernel_encrypt_us_per_row_all_cores": 367.0,
+    assert all(v > 0 for v in out.values()), out
+
+
+def test_bench_reads_only_its_knobs():
+    """Every SPARK_GRAFT_* environment variable bench.py reads, pinned, so
+    a box-calibrated gate knob cannot creep back in unnoticed."""
+    import ast
+    import pathlib
+
+    import bench
+
+    tree = ast.parse(pathlib.Path(bench.__file__).read_text())
+    knobs = {
+        node.value.removeprefix("SPARK_GRAFT_")
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and re.fullmatch(r"SPARK_GRAFT_\w+", node.value)
     }
-    assert bench.contention_reasons([0.0, 0.1, 0.2], r12_blindspot, 2.0, 950, 150, 280) == [
-        "start_kernel_us_row_all_cores=367.0>280"
-    ]
-    mc_healthy = dict(healthy, kernel_encrypt_us_per_row_all_cores=224.5)
-    assert bench.contention_reasons([0.1, 0.1, 0.1], mc_healthy, 2.0, 950, 150, 280) == []
-    # a kernel dict WITHOUT the all-cores key (the wait loop's cheap
-    # probe skips the 32-process burst) must not fire the new signal
-    assert bench.contention_reasons([0.1, 0.1, 0.1], healthy, 2.0, 950, 150, 280) == []
-    # THE r14 gate addition (VERDICT r13 item 1): the r13 171.95 s window —
-    # load 0.0, bracket 960-1084, all-cores 194-212, the best CPU control
-    # values ever recorded — still swept a uniform 1.10-1.19x slow across
-    # 193 queries: co-tenant MEMORY-BANDWIDTH pressure is invisible to
-    # every cache-resident CPU control.  A synthetic bracket of exactly
-    # that shape with a degraded all-threads membw aggregate must be
-    # refused on exactly the membw signal; the same shape at the calm
-    # calibration value (114.3, r14) must pass.
-    r13_blindspot = {
-        "kernel_encrypt_mb_per_s_per_core": 1084.4,
-        "kernel_encrypt_us_per_row": 120.0,
-        "kernel_encrypt_us_per_row_all_cores": 211.7,
-        "membw_mc_gb_per_s": 62.0,
+    assert knobs == {
+        "CPUS",
+        "SF_DIR",
+        "DRIVER_MEM",
+        "BENCH_REPS",
+        "HYGIENE_DIR",
+        "BENCH_BRACKET_REF",
     }
-    assert bench.contention_reasons([0.0, 0.1, 0.2], r13_blindspot, 2.0, 950, 150, 280, 90) == [
-        "start_membw_mc_gbps=62.0<90"
-    ]
-    membw_healthy = dict(r13_blindspot, membw_mc_gb_per_s=114.3)
-    assert bench.contention_reasons([0.0, 0.1, 0.2], membw_healthy, 2.0, 950, 150, 280, 90) == []
-    # the observed r14 degraded-window value (88.7, sampled while the CPU
-    # gate itself read the box as degraded) sits under the 90 floor
-    membw_degraded = dict(membw_healthy, membw_mc_gb_per_s=88.7)
-    assert bench.contention_reasons([0.0, 0.1, 0.2], membw_degraded, 2.0, 950, 150, 280, 90) == [
-        "start_membw_mc_gbps=88.7<90"
-    ]
-    # key absent (cheap-signals-first wait loop skipped the burst, or
-    # numpy import failed) ⇒ no membw check fires
-    assert bench.contention_reasons([0.1, 0.1, 0.1], mc_healthy, 2.0, 950, 150, 280, 90) == []
 
 
 # --- float-sum determinism guard (VERDICT r6 item 2) --------------------------
-
-
-def test_bench_membw_probe_reports_positive_bandwidth():
-    """r13 gate finding: two clean-gate runs (best bracket/all-cores values
-    ever recorded) still swept uniformly ~1.1-1.2x slower than r12-clean -
-    every gate control is CPU-bound and cache-resident, blind to co-tenant
-    memory-bandwidth/LLC pressure that the scan/shuffle-heavy suite pays
-    for.  bench._membw_probe() is the report-only instrument for that
-    resource (BENCH_extra membw_gb_per_s_start/_end); pin its contract: a
-    positive, plausibly-bounded GB/s figure (a broken probe returning 0/
-    negative/absurd values would silently poison the r14 calibration that
-    is supposed to set the floor)."""
-    import bench
-
-    gbps = bench._membw_probe()
-    # numpy is baked into this environment, so the -1.0 import-guard path
-    # must NOT be what we exercise here
-    assert gbps > 0.5, gbps
-    # single-thread triad on any hardware this could run on sits well
-    # under 1 TB/s; catches unit mistakes (bytes vs GB, per-rep vs total)
-    assert gbps < 1000, gbps
-    # the GATED instrument (r14): all-threads aggregate — same plausibility
-    # contract, and it must exceed the single-thread figure (it saturates
-    # the controller the single-thread probe cannot).  Small shape to keep
-    # the test cheap; the bench runs the full CPUS-thread version.
-    agg = bench._membw_probe_mc(nthreads=4, n=1024 * 1024, reps=4, invocations=2)
-    assert agg > gbps, (agg, gbps)
-    assert agg < 10000, agg
-
-
-def test_kernel_bench_records_membw_probe_failure(monkeypatch):
-    """ADVICE r14 (low): if a probe worker dies (allocation failure, broken
-    barrier), the old code raised TypeError on the None span, _kernel_bench
-    swallowed it, and the membw gate silently vanished — a bandwidth-
-    degraded box would pass as clean with no trace.  Pin the fix: a probe
-    failure (-2.0 sentinel, or an exception) records membw_mc_probe_failed
-    in the kernel snapshot and never sets the gated key."""
-    import bench
-
-    monkeypatch.setattr(bench, "_multicore_control", lambda: 200.0)
-
-    monkeypatch.setattr(bench, "_membw_probe_mc", lambda: -2.0)
-    out = bench._kernel_bench()
-    assert "membw_mc_gb_per_s" not in out
-    assert out["membw_mc_probe_failed"] == 1.0
-
-    def _boom() -> float:
-        raise RuntimeError("worker vanished")
-
-    monkeypatch.setattr(bench, "_membw_probe_mc", _boom)
-    out = bench._kernel_bench()
-    assert "membw_mc_gb_per_s" not in out
-    assert out["membw_mc_probe_failed"] == 1.0
-
-    # the numpy-missing sentinel (-1.0) stays "probe skipped": neither key
-    monkeypatch.setattr(bench, "_membw_probe_mc", lambda: -1.0)
-    out = bench._kernel_bench()
-    assert "membw_mc_gb_per_s" not in out
-    assert "membw_mc_probe_failed" not in out
 
 
 def test_every_rounded_sum_oracle_is_audited():
