@@ -280,13 +280,7 @@ def _kernel_bench() -> dict[str, float]:
     return out
 
 
-def contention_reasons(
-    load_start: list[float],
-    load_end: list[float],
-    bracket_start: float | None,
-    bracket_end: float | None,
-    cpus: int,
-) -> list[str]:
+def contention_reasons(load_start: list[float], load_end: list[float], cpus: int) -> list[str]:
     """Pure contention rule: the run is compared only with itself and the
     box's core count, never with figures calibrated on other hardware.  A
     snapshot is tainted when
@@ -295,23 +289,17 @@ def contention_reasons(
       5-minute figure catches a run started seconds after heavy jobs, when
       the 1-minute one has already decayed);
     * the 1-minute load at end exceeds ``cpus`` (it includes this run's own
-      just-stopped executors, so only load well beyond them flags);
-    * the pre-JVM and post-stop single-core encrypt brackets (MB/s/core)
-      differ by more than 25 % of the start value, i.e. the box's speed
-      moved under the run.
+      just-stopped executors, so only load well beyond them flags).
 
-    A missing load average (``os.getloadavg`` unavailable) or a missing
-    bracket never tags."""
+    The single-core encrypt brackets are reported, not judged: two quiet
+    runs of one tree read +36 % start-to-end drift on the 4-core box.  A
+    missing load average (``os.getloadavg`` unavailable) never tags."""
     reasons = []
     for window, load in zip(("1m", "5m"), load_start[:2]):
         if load > cpus / 2:
             reasons.append(f"load_avg_{window}={load}>{cpus / 2}")
     if load_end and load_end[0] > cpus:
         reasons.append(f"load_avg_1m_end={load_end[0]}>{cpus}")
-    if bracket_start and bracket_end:
-        drift = (bracket_end - bracket_start) / bracket_start
-        if abs(drift) > 0.25:
-            reasons.append(f"bracket_drift={drift:+.0%}({bracket_start}->{bracket_end})")
     return reasons
 
 
@@ -553,10 +541,8 @@ def main() -> None:
         load_end = []
     # Second kernel control AFTER the sweep (VERDICT r6 item 8): the box
     # has drifted hundreds of MB/s/core at idle within one session, so one
-    # pre-run control can't tell box drift from a code regression.  The
-    # bracket pair lets the reader normalize round-over-round comparisons
-    # without forensics: a healthy run has start ≈ end; a drifting box
-    # shows it here.  Stop the Spark session FIRST — the first r7 run
+    # pre-run control can't tell box drift from a code regression; the
+    # pair is reported next to the run.  Stop the Spark session FIRST — the first r7 run
     # measured 610 MB/s/core with executor threads still settling vs 950
     # pre-JVM on the same box; post-stop the control is symmetric with the
     # pre-JVM one (min-of-reps only ever inflates under contention).
@@ -572,14 +558,8 @@ def main() -> None:
         pass  # best-effort: bench numbers must not depend on catalog state
     spark.stop()
     kernel_end = _kernel_bench()
-    # judged once both brackets exist: a tainted run is tagged, not held back
-    contended_reasons = contention_reasons(
-        load_start,
-        load_end,
-        kernel.get("kernel_encrypt_mb_per_s_per_core"),
-        kernel_end.get("kernel_encrypt_mb_per_s_per_core"),
-        CPUS,
-    )
+    # judged once, after the run: a tainted run is tagged, not held back
+    contended_reasons = contention_reasons(load_start, load_end, CPUS)
     if contended_reasons:
         print("BENCH BOX CONTENDED: " + "; ".join(contended_reasons), file=sys.stderr)
     extra["contended"] = contended_reasons
@@ -599,31 +579,6 @@ def main() -> None:
         pass
 
     total = round(sum(timings.values()), 3)
-    # Bracket-normalized times (VERDICT r11 item 3): scale every wall time
-    # to a reference box speed so cross-round diffs stop misfiring on box
-    # drift.  The yardstick is the mean of the pre-JVM and post-stop
-    # single-core encrypt brackets (min-of-reps, so contention only ever
-    # lowers it); REF=1000 MB/s/core is this box's clean-run envelope.  A
-    # degraded box (bracket < REF) has inflated raw times, so normalized =
-    # raw * bracket/REF deflates them to clean-box-equivalent.  This is a
-    # linear model of CPU-bound drift — good enough to separate
-    # "environment" from "code regression" (the r11 driver snapshot's 20
-    # phantom regressions all vanish under it), not a substitute for the
-    # ``contended`` tag, which marks runs whose box moved under them.
-    bracket_ref = float(os.environ.get("SPARK_GRAFT_BENCH_BRACKET_REF", "1000"))
-    brackets = [
-        kernel.get("kernel_encrypt_mb_per_s_per_core"),
-        kernel_end.get("kernel_encrypt_mb_per_s_per_core"),
-    ]
-    brackets = [x for x in brackets if x]
-    bracket_mean = round(sum(brackets) / len(brackets), 1) if brackets else None
-    norm_factor = round(bracket_mean / bracket_ref, 4) if bracket_mean else None
-    if norm_factor:
-        extra["bracket_normalized"] = {
-            k: round(v * norm_factor, 3) for k, v in timings.items()
-        }
-        extra["bracket_norm_factor"] = norm_factor
-    total_normalized = round(total * norm_factor, 3) if norm_factor else None
     # The driver tail-captures stdout and parses the LAST line as JSON: keep
     # that line small (headline only — no per-query row counts).  The full
     # detail (row counts, MB/s figures) goes to stderr and BENCH_extra.json
@@ -639,12 +594,6 @@ def main() -> None:
         "metric": "bench_total",
         "value": total,
         "unit": "sec",
-        # the same total deflated to the REF-bracket box (see
-        # bracket_normalized in BENCH_extra.json for per-query values):
-        # compare THIS field round-over-round, not the raw one
-        "value_normalized": total_normalized,
-        "bracket_mean": bracket_mean,
-        "bracket_ref": bracket_ref,
         "queries": timings,
         "sf": sf,
         # Idle single-core kernel figures as first-class fields: the
@@ -653,9 +602,7 @@ def main() -> None:
         # pre-JVM with min-of-reps and are the stable round-over-round
         # crypto signal.  load_avg documents how noisy the run was.
         "kernel": kernel,
-        # the same control re-measured after the sweep: start ≈ end means a
-        # quiet box; a gap means drift, and query medians should be read
-        # against the bracket, not either endpoint
+        # the same control re-measured after the sweep (stopped session)
         "kernel_end": kernel_end,
         "load_avg": {"start": load_start, "end": load_end},
         # non-empty list = this snapshot was taken on a contended box and

@@ -27,12 +27,13 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import IntegralType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 from .iterate import (
     collect_small_edges,
-    loop_join_cache,
     materialize_and_release,
+    min_superstep,
+    symmetric_adjacency,
     truncate_if_needed,
     truncate_lineage,
 )
@@ -209,7 +210,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     ngram: int = 3,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding + exact signature-overlap
     estimate.
@@ -220,14 +220,10 @@ def minhash_lsh_pairs(
     than ``max_bucket`` are excluded from candidate generation (see
     DEFAULT_MAX_BUCKET — bounds the quadratic per-bucket term).
 
-    ``materialize`` (default True): run the pipeline now and release the
-    internal signature cache before returning
-    (iterate.materialize_and_release — VERDICT r13 item 4: the pinned
-    CacheManager entry otherwise leaks for the session lifetime).  Pass
-    False only to inspect/compose the unexecuted plan; that path leaves the
-    signature cache pinned — it is exposed as ``result._internal_cache``
-    (ADVICE r14) so the caller can ``result._internal_cache.unpersist()``
-    after their action instead of a session-wide ``clearCache()``.
+    The pipeline runs now and the internal signature cache is released
+    before returning (iterate.materialize_and_release — VERDICT r13 item 4:
+    the pinned CacheManager entry otherwise leaks for the session
+    lifetime); the plan that ran is ``result._pre_checkpoint_plan``.
 
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b, est ≥ 0.5.
     """
@@ -275,9 +271,6 @@ def minhash_lsh_pairs(
         .where(F.col("est_jaccard") >= 0.5)
         .select("doc_a", "doc_b", "est_jaccard")
     )
-    if not materialize:
-        out._internal_cache = sig  # caller-releasable handle (ADVICE r14)
-        return out
     return materialize_and_release(out, sig)
 
 
@@ -375,15 +368,13 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     bits: int = SIMHASH_BITS,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ 3, bucketed by the four
     4-bit quarters (pigeonhole: ≤3 flipped bits across 4 quarters ⇒ at least
     one quarter matches exactly — LOSSLESS banding) so the join is
     band-local, not all-pairs.  Quarters holding more than ``max_bucket``
     docs are dropped from candidate generation (DEFAULT_MAX_BUCKET).
-    ``materialize``: the cache-hygiene switch, see
-    :func:`minhash_lsh_pairs`."""
+    Materialized and released as in :func:`minhash_lsh_pairs`."""
     sh = simhash(corpus, bits=bits).persist()  # self-join below (see minhash_lsh_pairs)
     quarter = bits // 4
     mask = (1 << quarter) - 1
@@ -409,9 +400,6 @@ def simhash_near_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-    if not materialize:
-        out._internal_cache = sh  # caller-releasable handle (ADVICE r14)
-        return out
     return materialize_and_release(out, sh)
 
 
@@ -436,11 +424,9 @@ def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Near-identical vectors by cosine ≥ threshold.
-    ``materialize``: the cache-hygiene switch, see
-    :func:`minhash_lsh_pairs`.
+    """Near-identical vectors by cosine ≥ threshold, materialized and
+    released as in :func:`minhash_lsh_pairs`.
 
     Scale path: bucket by sign-pattern of the first 16 dims (a 1-projection
     LSH) so the self-join is bucket-local; the full dot product only runs on
@@ -499,9 +485,6 @@ def embedding_near_dup_pairs(
         .where(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )
-    if not materialize:
-        out._internal_cache = e  # caller-releasable handle (ADVICE r14)
-        return out
     return materialize_and_release(out, e)
 
 
@@ -556,15 +539,19 @@ def connected_components(edges: DataFrame, nodes: DataFrame, max_iter: int = 25)
     rounds — near-dup clusters are shallow (diameter ≤ a few hops), so this
     terminates in 2-4 rounds in practice, bounded by ``max_iter``.
 
-    Scale shape: each round is ONE join of the label table against the
-    symmetric edge list plus ONE min-aggregate keyed by node id; no step
+    Scale shape: iterate only over nodes that appear in an edge — in a
+    dedup corpus most docs are singletons, unioned back (label = self)
+    afterwards.  Round 1 is join-free: label(v) = min(v, N(v)) is one
+    aggregate over the symmetric edge list, which is cached partitioned on
+    the aggregate's key, so it needs no shuffle of the edges.  The later
+    rounds are :func:`~.iterate.min_superstep`: only nodes whose label
+    changed last round send it to their neighbours, one min-aggregate per
+    round keyed by node id, lineage cut every round
+    (:func:`~.iterate.truncate_lineage`: durable when the context has a
+    checkpoint dir), and a one-row probe of the cut finds the fixpoint (no
+    row changed) — for any orderable id type.  No step
     ever materializes a component's member list on one executor, so a
-    10-billion-node pair graph streams through.  Lineage is truncated
-    every round (:func:`~.iterate.truncate_lineage`: durable when the
-    context has a checkpoint dir); the loop stops on the first round whose exact label sum equals
-    the previous round's (labels are monotone non-increasing, so an
-    unchanged sum IS the fixpoint) — a 1-row scalar action moving only a
-    decimal to the driver, never data.
+    10-billion-node pair graph streams through.
 
     Small-graph regime: near-dup pair graphs are SPARSE — every caller in
     this repo feeds edges from an already-materialized pairs operator, and
@@ -584,105 +571,33 @@ def connected_components(edges: DataFrame, nodes: DataFrame, max_iter: int = 25)
     edges = truncate_if_needed(
         edges.select("src", "dst").where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    sym = edges.select(F.col("src").alias("node"), F.col("dst").alias("neigh")).unionAll(
-        edges.select(F.col("dst").alias("node"), F.col("src").alias("neigh"))
-    )
     small = collect_small_edges(edges, ("src", "dst"))
     if small is not None:
         ids, label = _min_labels(*small)
-        # the loop regime's (id, label) types: the widened endpoint type, a
-        # NULL-free id and a min-aggregate (nullable) label
-        id_type = sym.schema["node"].dataType
+        # the loop regime's (id, label) types: the union-widened endpoint
+        # type, a NULL-free id and a min-aggregate (nullable) label
+        id_type = edges.select("src").unionAll(edges.select("dst")).schema[0].dataType
         labels = edges.sparkSession.createDataFrame(
             pa.table({"id": ids, "label": label}),
             StructType([StructField("id", id_type, False), StructField("label", id_type, True)]),
         )
-        singletons = nodes.join(labels.select("id"), "id", "left_anti").select(
-            "id", F.col("id").alias("label")
-        )
-        out = labels.unionByName(singletons)
-        return out.select("id", F.col("label").alias("cluster_id"))
-
-    # Co-partition + pre-sort the edge table ON THE JOIN KEY before caching
-    # (iterate.loop_join_cache).  Each round is its own ACTION (the
-    # convergence check), so cross-round exchange reuse never applies: a
-    # plain persist() left every round's sort-merge join re-shuffling AND
-    # re-sorting the full symmetric edge list (measured at sf10: 66.3M rows
-    # / 526 MB shuffle-written per round, six rounds — the dominant repeated
-    # cost in the report's stage profile; 5.1 MB/round after).  Per-round
-    # shuffle is now O(|labels|) + the aggregate exchange — at
-    # 1000-executor scale the edge list is paid for ONCE, not per round.
-    sym = loop_join_cache(sym, "neigh")
-    # Iterate ONLY over nodes that appear in an edge: in a dedup corpus the
-    # overwhelming majority of docs are singletons, and carrying them through
-    # every round's join+shuffle would dominate the cost at scale.  They are
-    # unioned back (label = self) after convergence.
-    # Round 1 is FUSED into initialization: label(v) = min(v, N(v)) is one
-    # map-side-combined aggregate over the symmetric edge list — no join —
-    # and it doubles as the distinct-touched-nodes computation.  Each later
-    # round is ONE join + ONE aggregate (propagated neighbor labels unioned
-    # with current labels, min per node) instead of the classic
-    # join+agg+join update; convergence is detected by comparing the
-    # monotone non-increasing label SUM (exact decimal) against the
-    # previous round — the scalar action that also materializes the lazy
-    # checkpoint, with no change-flag join.  One fewer shuffle per round at
-    # any scale, ~40% less fixed cost per round at toy scale (VERDICT r4
-    # item 6).
-    try:
-        labels = (
-            sym.groupBy("node")
-            .agg(F.min("neigh").alias("mn"))
-            .select(F.col("node").alias("id"), F.least(F.col("node"), F.col("mn")).alias("label"))
-        )
-        labels = truncate_lineage(labels)
-
-        def _round(cur_labels: DataFrame) -> DataFrame:
-            prop = sym.join(cur_labels, sym.neigh == cur_labels.id).select("node", "label")
-            nxt = (
-                prop.unionByName(cur_labels.select(F.col("id").alias("node"), "label"))
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-                .select(F.col("node").alias("id"), "label")
+    else:
+        adj = symmetric_adjacency(edges)
+        try:
+            first = adj.groupBy("src").agg(F.min("dst").alias("mn")).select(
+                F.col("src").alias("node"), F.least(F.col("src"), F.col("mn")).alias("label")
             )
-            return truncate_lineage(nxt)
-
-        if isinstance(sym.schema["node"].dataType, IntegralType):
-            label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-            prev = labels.agg(label_sum).first()[0]
-            if prev is not None:  # empty graph: skip the loop, labels is 0-row
-                for _ in range(max_iter - 1):
-                    labels = _round(labels)
-                    cur = labels.agg(label_sum).first()[0]
-                    if cur == prev:  # equal sum of non-increasing labels ⇒ fixpoint
-                        break
-                    prev = cur
-        else:
-            # Non-numeric (orderable) ids — ADVICE r15/r16: the decimal-sum
-            # fixpoint check would CAST-error (or silently truncate) here,
-            # so use the exact formulation directly: labels only ever
-            # decrease, so fixpoint ⇔ no (id, label) row changed.  The
-            # anti-join count is also the full action that materializes the
-            # round's lazy checkpoint (take(1)-style probes would leave it
-            # partial).
-            if labels.count() > 0:  # the count also materializes the init
-                for _ in range(max_iter - 1):
-                    old = labels
-                    labels = _round(labels)
-                    changed = labels.join(
-                        old.select("id", "label"), ["id", "label"], "left_anti"
-                    ).count()
-                    if changed == 0:
-                        break
-        singletons = nodes.join(labels.select("id"), "id", "left_anti").select(
-            "id", F.col("id").alias("label")
-        )
-        out = labels.unionByName(singletons)
-    finally:
-        # the per-round convergence actions have already materialized the
-        # final labels checkpoint, so the result never re-reads sym —
-        # release it even if a round raises (cache hygiene, VERDICT r13
-        # item 4)
-        sym.unpersist()
+            # every node started at its own id and round 1 sent it to all
+            # neighbours, so only a lowered label is news
+            first = first.withColumn("changed", F.col("label") != F.col("node"))
+            labels = min_superstep(first, adj, "label", F.col("label"), max_iter - 1)
+        finally:
+            adj.unpersist()
+        labels = labels.select(F.col("node").alias("id"), "label")
+    singletons = nodes.join(labels.select("id"), "id", "left_anti").select(
+        "id", F.col("id").alias("label")
+    )
+    out = labels.unionByName(singletons)
     return out.select("id", F.col("label").alias("cluster_id"))
 
 

@@ -17,7 +17,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .iterate import collect_small_edges, loop_join_cache, truncate_if_needed, truncate_lineage
+from .iterate import (
+    collect_small_edges,
+    min_superstep,
+    symmetric_adjacency,
+    truncate_if_needed,
+    truncate_lineage,
+)
 
 SCALE = 10**12
 _INT64_MAX = np.iinfo(np.int64).max
@@ -207,67 +213,20 @@ def weighted_pagerank(
     return _pagerank(edges, True, n_iter, damping_pct, 100 - damping_pct)
 
 
-def _frontier_bfs(adj: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
-    """Multi-source frontier BFS over the cached symmetric adjacency ``adj``
-    (src, dst) from every row of ``seeds`` (seed): returns (seed, node,
-    hops) for every node within ``max_hops`` of each seed, the seed itself
-    at hops 0.
+def _bfs(adj: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
+    """Multi-source BFS over the cached symmetric adjacency ``adj`` from
+    every row of ``seeds`` (seed): (seed, node, hops) for every node within
+    ``max_hops`` of each seed, the seed itself at hops 0.
 
-    Classic distributed BFS keyed on (seed, node): per round, join the
-    CURRENT frontier (pairs first reached last round — not the whole
-    visited set) against the adjacency, anti-join out already-visited
-    pairs, and union the new frontier in.  Work per round is O(edges
-    touching the frontier × seeds), total O(E · seeds) across all rounds —
-    the reason frontier BFS scales where whole-set relabeling doesn't.
-    Hop counts are exact integers, so a DuckDB recursive CTE (UNION dedup
-    mode) replays it.
-
-    ``seeds`` may derive from ``adj``: it is eagerly checkpointed, as is
-    every round's new frontier, so the returned frame references only
-    checkpoint blocks and the caller can release ``adj`` on return instead
-    of leaking a session-pinned CacheManager entry (ADVICE r13 medium).
-    """
-    visited = truncate_lineage(
-        seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hops")), eager=True
-    )
-    # explicit broadcast hint (ADVICE r14): the checkpointed seed frame is a
-    # stats-less LogicalRDD whose sizeInBytes defaults huge, so with AQE off
-    # static planning would shuffle the full adjacency probe side in round
-    # 1; the hint costs nothing at a few seed rows.  Later frontiers (seed x
-    # node pairs) can be large — they stay hint-free and let AQE decide from
-    # runtime sizes.
-    frontier = F.broadcast(visited)
-    for hop in range(1, max_hops + 1):
-        # distinct on (seed, node) only, the hops literal attached after the
-        # join: the dedup then hash-partitions by exactly the anti-join key,
-        # so the frontier side of the anti-join reuses its exchange
-        nxt = (
-            frontier.join(adj, frontier.node == adj.src)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(hop).alias("hops"))
-        )
-        # EAGER: the new frontier is consumed twice (unioned into visited
-        # and joined next round), so it computes once and the loop's lineage
-        # stays a flat union of checkpointed rounds
-        nxt = truncate_lineage(nxt, eager=True)
-        visited = visited.unionAll(nxt)
-        frontier = nxt
-    return visited
-
-
-def _symmetric_adjacency(edges: DataFrame) -> DataFrame:
-    """The (src, dst) edge list truncated once and symmetrized, cached
-    co-partitioned and sorted on src — the per-hop join key: each hop
-    materializes its frontier checkpoint, so without the cache the
-    adjacency re-shuffles every hop (iterate.loop_join_cache, r13).
-    Truncating the edges first keeps the union's two branches from
-    deriving a derived graph (copurchase_edges' self-join) twice."""
-    edges = truncate_if_needed(edges.select("src", "dst"))
-    return loop_join_cache(
-        edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))), "src"
-    )
+    The min-propagation superstep keyed on (seed, node) with message
+    hops + 1 (:func:`~.iterate.min_superstep`): a pair is first reached at
+    its shortest hop count, so only the pairs reached last round send, and
+    work per round is O(edges touching the frontier × seeds).  Hop counts
+    are exact integers, so a DuckDB recursive CTE (UNION dedup mode,
+    min(hops) per pair) replays it.  The round-1 frontier is the seed rows,
+    hinted as a broadcast."""
+    state = seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hops"))
+    return min_superstep(state, adj, "hops", F.col("hops") + 1, max_hops, broadcast_seeds=True)
 
 
 def _smallest_nodes(adj: DataFrame, n: int) -> DataFrame:
@@ -285,18 +244,19 @@ def bfs_hops(edges: DataFrame, source: int | None = None, max_hops: int = 3) -> 
     and connected components (min-label propagation, dedup.py).
 
     The one-seed case of :func:`harmonic_closeness`'s multi-source BFS
-    (:func:`_frontier_bfs`): the default source is selected in-plan, an
-    explicit one is a one-row seed frame.  ``max_hops`` bounds the rounds.
-    An empty graph returns 0 rows.
+    (:func:`_bfs`): the default source is selected in-plan, an explicit one
+    is a one-row seed frame.  ``max_hops`` bounds the rounds; the loop
+    stops earlier once no node is newly reached.  An empty graph returns 0
+    rows.
     Returns (node, hops) for every node within max_hops.
     """
-    adj = _symmetric_adjacency(edges)
+    adj = symmetric_adjacency(edges)
     try:
         if source is None:
             seeds = _smallest_nodes(adj, 1)
         else:
             seeds = edges.sparkSession.createDataFrame([(int(source),)], "seed long")
-        visited = _frontier_bfs(adj, seeds, max_hops)
+        visited = _bfs(adj, seeds, max_hops)
         return visited.select(F.col("node").cast("bigint"), F.col("hops").cast("bigint"))
     finally:
         adj.unpersist()
@@ -442,7 +402,8 @@ def copurchase_edges(
     # graph_triangles re-derived it 4x).  The blocks are ContextCleaner-
     # managed — no CacheManager entry, so the bench's cache-hygiene gate
     # stays clean.  The un-truncated plan stays inspectable for the plan
-    # tests as ``._pre_checkpoint_plan`` (the _internal_cache precedent).
+    # tests as ``._pre_checkpoint_plan`` (as iterate.materialize_and_release
+    # leaves it).
     out = truncate_lineage(plan)
     out._pre_checkpoint_plan = plan
     return out
@@ -592,18 +553,14 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # skip the defensive truncation when the caller's edge list is already
-    # a checkpoint leaf (copurchase_edges) — the redundant re-copy cost this
-    # single-consumer path ~1.1 s at sf0.1 (VERDICT r15 item 4)
-    e = truncate_if_needed(edges.select("src", "dst"))
-    # cached co-partitioned+sorted on dst (the per-round join key): every
+    # cached co-partitioned+sorted on src (the per-round join key): every
     # round is its own action (the eager per-round checkpoint), so without
     # this the full symmetric edge list re-shuffles every round — see
-    # iterate.loop_join_cache (the CC-loop fix, r13).
-    sym = loop_join_cache(
-        e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
-        "dst",
-    )
+    # iterate.loop_join_cache (the CC-loop fix, r13).  The edge list is
+    # truncated only when the caller did not hand a checkpoint leaf
+    # (copurchase_edges): the redundant re-copy cost this single-consumer
+    # path ~1.1 s at sf0.1 (VERDICT r15 item 4).
+    sym = symmetric_adjacency(edges)
     try:
         labels = sym.select(F.col("src").alias("node")).distinct().select(
             "node", F.col("node").alias("label")
@@ -612,8 +569,8 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
             labels = truncate_lineage(labels, eager=True)
         w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("label"))
         for _ in range(rounds):
-            neigh = sym.join(labels, sym.dst == labels.node).select(
-                F.col("src").alias("node"), "label"
+            neigh = sym.join(labels, sym.src == labels.node).select(
+                F.col("dst").alias("node"), "label"
             )
             counted = neigh.groupBy("node", "label").agg(F.count("*").alias("cnt"))
             labels = truncate_lineage(
@@ -789,55 +746,38 @@ def clustering_coefficient(edges: DataFrame, k: int = 20) -> DataFrame:
 
 def weighted_sssp(edges: DataFrame, rounds: int = 4, weight_col: str = "w") -> DataFrame:
     """Bellman-Ford single-source shortest paths over an undirected weighted
-    edge list, ``rounds`` relaxation rounds from the smallest node id (a
-    deterministic source needing no driver round-trip: the 1-row min
-    aggregate seeds the frontier via a broadcast; an empty graph has no
-    source and returns 0 rows).
+    edge list, ``rounds`` relaxation rounds from the smallest ``src`` id (a
+    deterministic source needing no driver round-trip: a 1-row min
+    aggregate; an empty graph has no source and returns 0 rows).
 
-    Weights must be INTEGERS — path costs are then exact sums, so the
-    per-round ``min`` is engine-identical (no float path-cost ties).  Each
-    round is ONE join + ONE map-side-combinable min aggregate (the CC-loop
-    shape, dedup.py), with lineage truncated per round
-    (operators/iterate.py).
+    Weights must be INTEGERS (cast to long) — path costs are then exact
+    sums, so the per-round ``min`` is engine-identical (no float path-cost
+    ties).  A NULL weight makes every path through that edge NULL, which
+    ``min`` skips: a node reached only over such paths has a NULL dist.
+    The rounds are :func:`~.iterate.min_superstep` with message dist + w
+    (round 1 broadcasts the one-row source): only nodes whose distance
+    changed last round relax their edges, and the loop stops early once no
+    distance changes.
     After round t every ≤t-hop shortest path is final, so ``rounds`` bounds
     path length exactly like the kcore/BFS fixed-round contracts.
     Returns (node, dist) for every node reached within ``rounds`` hops.
     """
-    e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-    # cached co-partitioned+sorted on src (the per-round relaxation key):
-    # the per-round checkpoints materialize as separate jobs, so without
-    # this the weighted edge list re-shuffles every round — see
-    # iterate.loop_join_cache (r13).
-    und = loop_join_cache(
-        e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")),
-        "src",
+    e = truncate_if_needed(
+        edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
     )
+    adj = symmetric_adjacency(e, "w")
     try:
-        dist = (
+        source = (
             e.agg(F.min("src").alias("node"))
             .where(F.col("node").isNotNull())  # empty graph: no source
             .select("node", F.lit(0).cast("long").alias("dist"))
         )
-        for _ in range(rounds):
-            # name-based USING join: dist and und share lineage (both derive
-            # from e), so attribute-based conditions are ambiguous
-            relaxed = (
-                dist.select(F.col("node").alias("src"), "dist")
-                .join(und, "src")
-                .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            )
-            dist = (
-                dist.unionByName(relaxed)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            # eager since r14: the final round's checkpoint blocks back the
-            # returned frame, so the edge cache releases on return (ADVICE
-            # r13 medium) instead of pinning 2|E| cached rows per call
-            dist = truncate_lineage(dist, eager=True)
+        dist = min_superstep(
+            source, adj, "dist", F.col("dist") + F.col("w"), rounds, broadcast_seeds=True
+        )
         return dist.select(F.col("node").cast("long"), F.col("dist").cast("long")).orderBy("node")
     finally:
-        und.unpersist()
+        adj.unpersist()
 
 
 def community_modularity(edges: DataFrame, labels: DataFrame, k: int = 10) -> DataFrame:
@@ -1050,12 +990,12 @@ def harmonic_closeness(edges: DataFrame, n_seeds: int = 4, max_hops: int = 3) ->
     in any engine and any order, so the DuckDB recursive-CTE replay
     hash-matches.  Seeds are selected IN-PLAN (top-k smallest ids, then
     broadcast into the BFS init) — no driver collect; the BFS is
-    :func:`_frontier_bfs`, shared with :func:`bfs_hops`.
+    :func:`_bfs`, shared with :func:`bfs_hops`.
     Returns (node, n_seeds_reaching, harmonic_micro) ordered by node.
     """
-    adj = _symmetric_adjacency(edges)
+    adj = symmetric_adjacency(edges)
     try:
-        visited = _frontier_bfs(adj, _smallest_nodes(adj, n_seeds), max_hops)
+        visited = _bfs(adj, _smallest_nodes(adj, n_seeds), max_hops)
         return (
             visited.where(F.col("hops") > 0)
             .groupBy("node")

@@ -415,12 +415,11 @@ def knn_label_vote(embeddings: DataFrame, query_ids: list[int], k: int = 5) -> D
 def label_centroid_cosines(
     embeddings: DataFrame,
     scale: int = 1_000_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairwise cosine similarity between per-label centroid embeddings —
-    the class-separability matrix of a labeled embedding table.
-    ``materialize``: the cache-hygiene switch (release the internal
-    (label, dim) cell cache on return), see dedup.minhash_lsh_pairs.
+    the class-separability matrix of a labeled embedding table.  It runs
+    now and releases its internal (label, dim) cell cache on return, as
+    dedup.minhash_lsh_pairs does.
 
     Cross-engine-exact per the stats.py discipline: each component is
     fixed-pointed to an integer (round(x * scale) — identical IEEE steps in
@@ -473,9 +472,6 @@ def label_centroid_cosines(
         .select("label_a", "label_b", F.round(cos, 6).alias("centroid_cosine"))
         .orderBy("label_a", "label_b")
     )
-    if not materialize:
-        out._internal_cache = comp  # caller-releasable handle (ADVICE r14)
-        return out
     from .iterate import materialize_and_release
 
     return materialize_and_release(out, comp)

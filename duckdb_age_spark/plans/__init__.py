@@ -35,6 +35,32 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"^\(\d+\) Exchange\s*$", plan, re.MULTILINE))
 
 
+def count_executed_exchanges(df: DataFrame) -> int:
+    """Number of distinct shuffle exchanges in the plan that RAN — for a
+    frame already executed, whose formatted AQE plan prints every stage
+    twice (final and initial plan) and :func:`count_exchanges` would
+    double.  Walks the final plan through query stages and into cached
+    relations; a cache read by several scans counts once."""
+    seen = set()
+
+    def walk(node) -> None:
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(node.plan())
+        if name == "InMemoryTableScan":
+            return walk(node.relation().cachedPlan())
+        if name == "Exchange":
+            seen.add(node.id())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return len(seen)
+
+
 def count_scans(df: DataFrame) -> int:
     """Number of source scans in the plan (parquet or local-relation leafs).
     Counts the detail-section headers so each physical scan counts once.

@@ -3,8 +3,10 @@
 
 Runs each hazard-family query N times under rotating Spark configs
 (shuffle partitions 2..64, small/large scan splits — every knob that
-changes float-sum reduction order) and asserts the canonicalized result
-hash NEVER changes.  With the exact integer-unit sums of
+changes float-sum reduction order — and the broadcast threshold, whose -1
+also moves the graph operators off their small-graph driver regime onto
+the distributed loops) and asserts the canonicalized result hash NEVER
+changes.  With the exact integer-unit sums of
 operators/exact.py the hash is invariant by construction; this sweep is
 the regression gate that proves it (the r5 tpch_q9 driver flake class).
 
@@ -40,14 +42,17 @@ FAMILY = [
     "cube_priority_status",
 ]
 
-# (shuffle.partitions, files.maxPartitionBytes) — small byte splits shatter
-# the parquet scan into many input partitions, changing partial-sum order
+# (shuffle.partitions, files.maxPartitionBytes, autoBroadcastJoinThreshold)
+# — small byte splits shatter the parquet scan into many input partitions,
+# changing partial-sum order; a threshold of -1 turns off broadcast joins
+# and the connected-components / PageRank driver regime
+# (operators/iterate.collect_small_edges), so their distributed loops run
 CONFIGS = [
-    ("2", "134217728"),
-    ("7", "1048576"),
-    ("16", "4194304"),
-    ("32", "134217728"),
-    ("64", "524288"),
+    ("2", "134217728", "10485760"),
+    ("7", "1048576", "-1"),
+    ("16", "4194304", "1048576"),
+    ("32", "134217728", "-1"),
+    ("64", "524288", "10485760"),
 ]
 
 
@@ -81,18 +86,19 @@ def main() -> int:
     misses = 0
     t0 = time.time()
     for i in range(iters):
-        sp, mpb = CONFIGS[i % len(CONFIGS)]
+        sp, mpb, bcast = CONFIGS[i % len(CONFIGS)]
         spark.conf.set("spark.sql.shuffle.partitions", sp)
         spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
         for name in family:
             df = canon(qs[name](spark, sf_dir).toPandas())
             h = hashlib.md5(df.to_csv(index=False).encode()).hexdigest()
             if name not in baseline:
                 baseline[name] = h
             elif baseline[name] != h:
-                print(f"HASH MISS {name} iter={i} conf=({sp},{mpb}): {h} != {baseline[name]}")
+                print(f"HASH MISS {name} iter={i} conf=({sp},{mpb},{bcast}): {h} != {baseline[name]}")
                 misses += 1
-        print(f"iter {i + 1}/{iters} conf=({sp},{mpb}) ok ({time.time() - t0:.0f}s)")
+        print(f"iter {i + 1}/{iters} conf=({sp},{mpb},{bcast}) ok ({time.time() - t0:.0f}s)")
     print(f"\n{misses} hash misses over {iters} iters x {len(family)} queries")
     return 1 if misses else 0
 

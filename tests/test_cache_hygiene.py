@@ -201,19 +201,6 @@ def test_loop_cache_partitions_non_numeric_conf_falls_back(spark):
     assert loop_cache_partitions(_Stub()) == spark.sparkContext.defaultParallelism
 
 
-def test_materialize_false_exposes_releasable_cache_handle(clean_cache, docs):
-    """ADVICE r14 (low): the materialize=False escape hatch must hand the
-    caller the pinned internal cache — unpersisting the exposed handle
-    empties the CacheManager without a session-wide clearCache."""
-    from duckdb_age_spark.operators.dedup import minhash_lsh_pairs, planted_near_dup_corpus
-
-    out = minhash_lsh_pairs(planted_near_dup_corpus(docs), materialize=False)
-    assert out.count() > 0
-    assert not _cache_is_empty(clean_cache)  # the sig cache is pinned, by design
-    out._internal_cache.unpersist()
-    assert _cache_is_empty(clean_cache)
-
-
 @pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_FULL_HYGIENE"),
     reason="full-surface sweep (~7 min) — opt in with SPARK_GRAFT_FULL_HYGIENE=1",

@@ -158,12 +158,11 @@ def test_priority_50_covers_every_operator_family():
 
 def test_bench_contention_reasons():
     """The rule that decides whether a bench snapshot is tainted, as a
-    table: (load_start, load_end, bracket_start, bracket_end, cpus) ->
-    reasons.  Start load is judged against cpus/2, end load against cpus,
-    and the start/end single-core bracket against a 25 % drift."""
+    table: (load_start, load_end, cpus) -> reasons.  Start load is judged
+    against cpus/2 and end load against cpus."""
     import bench
 
-    quiet = ([0.3, 0.4, 0.5], [1.2, 0.8, 0.6], 1000.0, 1000.0, 4)
+    quiet = ([0.3, 0.4, 0.5], [1.2, 0.8, 0.6], 4)
     cases = [
         (quiet, []),
         # start load over cpus/2, on each window independently (the 5m one
@@ -173,26 +172,17 @@ def test_bench_contention_reasons():
         (([2.01, 2.02, 0.5], *quiet[1:]), ["load_avg_1m=2.01>2.0", "load_avg_5m=2.02>2.0"]),
         # exactly cpus/2 is not over it; the threshold scales with the box
         (([2.0, 2.0, 2.0], *quiet[1:]), []),
-        (([3.0, 3.0, 3.0], quiet[1], 1000.0, 1000.0, 8), []),
+        (([3.0, 3.0, 3.0], quiet[1], 8), []),
         # end load over cpus (the run's own executors account for less)
-        ((quiet[0], [4.5, 2.0, 1.0], 1000.0, 1000.0, 4), ["load_avg_1m_end=4.5>4"]),
-        ((quiet[0], [4.0, 2.0, 1.0], 1000.0, 1000.0, 4), []),
-        # bracket drift over 25 % of the start value, in both directions
-        ((*quiet[:2], 1000.0, 740.0, 4), ["bracket_drift=-26%(1000.0->740.0)"]),
-        ((*quiet[:2], 1000.0, 1260.0, 4), ["bracket_drift=+26%(1000.0->1260.0)"]),
-        ((*quiet[:2], 1000.0, 760.0, 4), []),
-        ((*quiet[:2], 1000.0, 1240.0, 4), []),
-        # missing signals never tag: getloadavg raised, or a bracket absent
-        (([], [], 1000.0, 1000.0, 4), []),
-        ((*quiet[:2], None, 500.0, 4), []),
-        ((*quiet[:2], 1000.0, None, 4), []),
-        (([], [], None, None, 4), []),
+        ((quiet[0], [4.5, 2.0, 1.0], 4), ["load_avg_1m_end=4.5>4"]),
+        ((quiet[0], [4.0, 2.0, 1.0], 4), []),
+        # missing signals never tag: getloadavg raised
+        (([], [], 4), []),
         # every signal at once
-        (([5.46, 4.03, 2.57], [10.58, 5.85, 4.07], 1000.0, 600.0, 4), [
+        (([5.46, 4.03, 2.57], [10.58, 5.85, 4.07], 4), [
             "load_avg_1m=5.46>2.0",
             "load_avg_5m=4.03>2.0",
             "load_avg_1m_end=10.58>4",
-            "bracket_drift=-40%(1000.0->600.0)",
         ]),
     ]
     for args, want in cases:
@@ -244,7 +234,6 @@ def test_bench_reads_only_its_knobs():
         "DRIVER_MEM",
         "BENCH_REPS",
         "HYGIENE_DIR",
-        "BENCH_BRACKET_REF",
     }
 
 

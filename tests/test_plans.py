@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from duckdb_age_spark.plans import (
     count_exchanges,
+    count_executed_exchanges,
     formatted_plan,
     has_broadcast_join,
     has_partial_aggregate,
@@ -349,15 +350,13 @@ def test_label_centroids_bounded_shuffles(t, spark, sf_dir):
     from duckdb_age_spark.operators.similarity import label_centroid_cosines
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df = label_centroid_cosines(emb, materialize=False)
+    # the plan the operator ran before checkpointing its result
+    df = label_centroid_cosines(emb)._pre_checkpoint_plan
     # corpus -> (label, dim) cells: one map-side-combined shuffle; the
     # pairwise-dot join runs on the tiny cell table via broadcast
     assert has_partial_aggregate(df)
     assert has_broadcast_join(df)
-    assert count_exchanges(df) <= 6, formatted_plan(df)
-    # materialize=False exposes the pinned cell cache as a handle (ADVICE
-    # r14) — release it directly instead of a session-wide clearCache
-    df._internal_cache.unpersist()
+    assert count_executed_exchanges(df) <= 6, formatted_plan(df)
 
 
 def test_chi_square_marginals_broadcast(t):
@@ -481,14 +480,12 @@ def test_order_concurrency_delta_shape(t):
 def test_hot_bucket_cap_broadcasts_hot_keys(t, spark):
     from duckdb_age_spark.operators.dedup import minhash_lsh_pairs, planted_near_dup_corpus
 
-    # materialize=False exposes the unexecuted plan — the exact plan the
-    # materialize=True default executes before checkpointing (r14)
-    df = minhash_lsh_pairs(planted_near_dup_corpus(t["documents"]), materialize=False)
+    # the plan the operator ran before checkpointing its result
+    df = minhash_lsh_pairs(planted_near_dup_corpus(t["documents"]))._pre_checkpoint_plan
     # the hot-key list joins as a broadcast anti-join — the cap must never
     # introduce a wide shuffle of the banded rows
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    df._internal_cache.unpersist()  # caller-releasable handle (ADVICE r14)
 
 
 def test_embedding_near_dup_join_parallelism_is_aqe_exempt(spark, sf_dir):
@@ -507,12 +504,9 @@ def test_embedding_near_dup_join_parallelism_is_aqe_exempt(spark, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df = embedding_near_dup_pairs(
-        planted_near_dup_embeddings(emb), threshold=0.9, materialize=False
-    )
-    plan = formatted_plan(df)
+    df = embedding_near_dup_pairs(planted_near_dup_embeddings(emb), threshold=0.9)
+    plan = formatted_plan(df._pre_checkpoint_plan)
     assert "REPARTITION_BY_NUM" in plan, plan[:2000]
-    df._internal_cache.unpersist()  # caller-releasable handle (ADVICE r14)
 
 
 def test_embedding_zscore_broadcasts_dim_stats(t, spark, sf_dir):
@@ -1052,61 +1046,60 @@ def test_cc_round_join_reuses_cached_edge_partitioning(spark, monkeypatch, broad
     applies and a plain persist() of the symmetric edge table re-shuffled
     AND re-sorted all 66M rows each round (526 MB shuffle-write x 6 rounds
     at sf10 - the dominant repeated cost in the report's stage profile).
-    The operator now caches repartition(N, neigh) + sortWithinPartitions,
-    so a round's sort-merge join must consume the cache DIRECTLY: no
-    Exchange and no Sort between the join and the InMemoryTableScan on the
-    edge side (the labels side still exchanges - it is the small, shrinking
-    table, O(|labels|) per round instead of O(|edges|)).
+    The loop table is the shared symmetric adjacency
+    (iterate.symmetric_adjacency: repartition(N, src) +
+    sortWithinPartitions, cached), so a round's sort-merge join must
+    consume the cache DIRECTLY: no Exchange and no Sort between the join
+    and the InMemoryTableScan on the edge side (the frontier side still
+    exchanges - it is the small, shrinking table, O(|frontier|) per round
+    instead of O(|edges|)).
 
-    ADVICE r13: the r13 version of this test hand-copied the loop body, so
-    reverting the operator would not have failed it.  Now it drives
-    connected_components ITSELF with a recording wrapper around
-    loop_join_cache: the assertion plan is built from the very cached frame
-    the operator used (reverting the cache, or changing its key, fails
-    here).  ``broadcast_off`` pins the large-labels (sort-merge) regime that
-    sf10 actually runs - with small labels AQE broadcasts and the edge cache
-    needs no partitioning at all, which is fine but not the regime under
-    test - and keeps this 50k-edge graph off the small-graph driver
-    regime."""
+    ADVICE r13: the test drives connected_components ITSELF with a
+    recording wrapper around the adjacency helper, and builds the round
+    join with the superstep's own message step (iterate._messages) over
+    the very cached frame the operator used (reverting the cache, or
+    changing its key, fails here).  ``broadcast_off`` pins the
+    large-frontier (sort-merge) regime that sf10 actually runs - with a
+    small frontier AQE broadcasts and the edge cache needs no partitioning
+    at all, which is fine but not the regime under test - and keeps this
+    50k-edge graph off the small-graph driver regime."""
     import re
 
     from duckdb_age_spark.operators import dedup as dedup_mod
-    from duckdb_age_spark.operators.iterate import loop_join_cache
+    from duckdb_age_spark.operators.iterate import _messages, symmetric_adjacency
 
-    calls: list[tuple] = []
-    real = loop_join_cache
+    calls: list = []
 
-    def recording(df, key):
-        out = real(df, key)
-        calls.append((key, out))
+    def recording(edges, *carry):
+        out = symmetric_adjacency(edges, *carry)
+        calls.append(out)
         return out
 
-    monkeypatch.setattr(dedup_mod, "loop_join_cache", recording)
+    monkeypatch.setattr(dedup_mod, "symmetric_adjacency", recording)
     edges = spark.range(0, 50_000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
     nodes = spark.range(0, 50_001).select(F.col("id"))
     result = dedup_mod.connected_components(edges, nodes, max_iter=2)
-    # the operator must route its loop table through loop_join_cache
-    # keyed on the per-round join column
-    assert [k for k, _ in calls] == ["neigh"], calls
-    sym = calls[0][1]
+    # the operator must route its loop table through the shared helper
+    assert len(calls) == 1, calls
+    adj = calls[0]
     # the operator unpersists on exit (cache hygiene, r14) — re-persist
     # the SAME frame to reconstruct the round-join physical plan the
     # loop executed, then assert the cache side joins with no Exchange
     # and no Sort (InMemoryTableScan feeds SortMergeJoin directly)
-    sym = sym.persist()
+    adj = adj.persist()
     try:
         # materialize the re-registered cache first — exactly what the
-        # operator's round-1 convergence action does; an unmaterialized
-        # AQE cached plan does not expose outputPartitioning yet
-        sym.count()
-        labels = result.select("id", F.col("cluster_id").alias("label"))
-        prop = sym.join(labels, sym.neigh == labels.id).select("node", "label")
+        # operator's join-free first round does; an unmaterialized AQE
+        # cached plan does not expose outputPartitioning yet
+        adj.count()
+        frontier = result.select(F.col("id").alias("node"), F.col("cluster_id").alias("label"))
+        prop = _messages(frontier, adj, "label", F.col("label"))
         plan = prop._jdf.queryExecution().executedPlan().toString()
         assert re.search(r"SortMergeJoin[^\n]*\n\s*:- InMemoryTableScan", plan), plan[:1500]
     finally:
-        sym.unpersist()
+        adj.unpersist()
 
 
 def test_exact_rank_stats_use_value_histograms_not_row_windows(t):
