@@ -6,12 +6,21 @@ Design for 100 TB (this is the module where scale matters most):
 * **Exact dedup** — hash-aggregate on a digest of the content, never on the
   content itself: the shuffle moves 16-byte keys, not documents.  With AQE on,
   skewed hot digests (e.g. empty docs) get split automatically.
-* **MinHash** — signatures are computed per-row with JVM higher-order
-  functions (no Python, no explode of the shingle set into rows), so the
-  pre-LSH stage is a narrow map.  LSH banding then shuffles only
-  (band_id, band_signature, doc_id) tuples — bytes per doc, not the doc.
-  Candidate verification joins happen per-bucket, i.e. the classic
-  O(n²)→O(candidates) cut.
+* **MinHash** — one logical operator, two physical plans picked by data
+  size (as connected components and PageRank do, iterate.py):
+  - *distributed*: signatures are computed per-row in the JVM (an explode
+    of each doc's shingles, md5, a map-side partial min), so the pre-LSH
+    stage is a narrow map.  LSH banding then shuffles only
+    (band_id, band_signature, doc_id) tuples — bytes per doc, not the doc.
+    Candidate verification joins happen per-bucket, i.e. the classic
+    O(n²)→O(candidates) cut.
+  - *small corpus*: when the corpus fits under the session's driver byte
+    budget (iterate.driver_byte_budget), one Arrow collect ships
+    (doc_id, text) to the driver and hashlib md5 + numpy compute the same
+    signatures, buckets and pairs there — two Spark jobs (an exact byte
+    count and the collect) where the distributed plan runs 16 and
+    JIT-compiles Spark's row code for a few thousand docs.  A corpus whose
+    plan estimate is over the budget pays no job for the check.
 * **Cross-engine determinism** — every hash is md5 (identical in DuckDB for
   the oracle); "hash i of shingle s" = md5(i || '|' || s).  Min over hex
   strings is lexicographic in both engines.
@@ -24,20 +33,24 @@ the operators actually find near-dups, not just that they return empty sets.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from .iterate import (
     collect_small_edges,
+    driver_byte_budget,
     materialize_and_release,
     min_superstep,
     symmetric_adjacency,
     truncate_if_needed,
     truncate_lineage,
 )
-from .similarity import cosine_col
+from .similarity import _round_half_up, cosine_col
 
 # Per-bucket membership bound for the three LSH self-joins below.  A
 # degenerate band key (thousands of near-identical short/empty docs landing
@@ -204,6 +217,121 @@ def planted_near_dup_corpus(docs: DataFrame, every: int = 10, keep_words: int = 
     return docs.select("doc_id", "text").unionByName(mutated)
 
 
+# Java's \s without UNICODE_CHARACTER_CLASS — what F.split(text, r"\s+")
+# splits on; NBSP and the other Unicode spaces are word characters
+_JAVA_SPACE = re.compile(rb"[ \t\n\x0b\x0c\r]+")
+
+
+def _shingles(text: bytes, ngram: int) -> list[bytes]:
+    """:func:`_word_ngrams` of one UTF-8 text, byte for byte: Spark's trim
+    strips U+0020 only, and its split keeps leading and trailing empty
+    words.  A text of fewer than ``ngram`` words gives one shingle of all
+    of them."""
+    words = _JAVA_SPACE.split(text.strip(b" "))
+    n = max(ngram, 1)
+    return [b" ".join(words[i : i + n]) for i in range(max(len(words) - n + 1, 1))]
+
+
+def _collect_small_corpus(corpus: DataFrame) -> pa.Table | None:
+    """``corpus`` as an Arrow table (doc_id, text as UTF-8 bytes) on the
+    driver when it fits under :func:`~.iterate.driver_byte_budget`, else
+    None.  The gate has two steps:
+
+    1. the optimized plan's ``sizeInBytes`` estimate is over the budget:
+       None with no job and no scan (a frame without statistics, such as
+       an RDD or checkpoint leaf, estimates Long.MaxValue);
+    2. one aggregate job, in one task, gives the exact
+       ``8 B × count + Σ octet_length(text)``; over the budget: None.
+
+    Then one Arrow collect fetches the rows.  Integral ids and string
+    texts only; anything else runs distributed."""
+    docs = corpus.select("doc_id", "text")
+    if not isinstance(docs.schema["doc_id"].dataType, IntegralType) or not isinstance(
+        docs.schema["text"].dataType, StringType
+    ):
+        return None
+    budget = driver_byte_budget(corpus.sparkSession)
+    if budget <= 0 or docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > budget:
+        return None
+    n, text_bytes = docs.coalesce(1).agg(F.count(F.lit(1)), F.sum(F.octet_length("text"))).first()
+    if 8 * n + (text_bytes or 0) > budget:
+        return None
+    return docs.select("doc_id", F.col("text").cast("binary").alias("text")).toArrow()
+
+
+def _minhash_pairs_on_driver(
+    docs: pa.Table, n_hashes: int, bands: int, ngram: int, max_bucket: int, budget: int
+) -> pa.Table | None:
+    """The distributed plan of :func:`minhash_lsh_pairs` over the collected
+    ``docs``, row for row, or None when the within-bucket pairs of the
+    non-hot buckets would take more than ``budget`` bytes (16 B a pair).
+
+    - A NULL text gives no signature; rows sharing a doc_id merge into one
+      doc (the signature's groupBy min).  A NULL id is one doc too: it
+      counts towards its buckets' sizes, and its pairs fail doc_a < doc_b.
+    - Signature element i is the minimum over the doc's distinct shingles
+      of big-endian word i % 4 of md5("{i // 4}|" + shingle): the minimum
+      of the 8-digit lowercase hex substring, as a number.
+    - A band bucket is (band, its rows_per_band elements); buckets over
+      ``max_bucket`` members give no pairs.
+    - est_jaccard is Spark's round(matches / n_hashes, 4), HALF_UP.
+    """
+    docs = docs.filter(docs["text"].is_valid())
+    if docs.num_rows == 0:
+        ids = docs["doc_id"]
+        return pa.table({"doc_a": ids, "doc_b": ids, "est_jaccard": pa.array([], pa.float64())})
+    null_id = docs["doc_id"].is_null().to_numpy()
+    ids = docs["doc_id"].fill_null(0).to_numpy()
+    order = np.lexsort((ids, null_id))
+    ids, null_id = ids[order], null_id[order]
+    first = np.flatnonzero(np.r_[True, (ids[1:] != ids[:-1]) | (null_id[1:] != null_id[:-1])])
+    texts = docs["text"].to_pylist()
+    prefixes = [f"{d}|".encode() for d in range((n_hashes + 3) // 4)]
+    digests = [bytearray() for _ in prefixes]
+    n_grams = []
+    for rows in np.split(order, first[1:]):
+        grams = set()
+        for row in rows:
+            grams.update(_shingles(texts[row], ngram))
+        for p, out in zip(prefixes, digests):
+            out += b"".join([hashlib.md5(p + g).digest() for g in grams])
+        n_grams.append(len(grams))
+    ids, null_id, n_docs = ids[first], null_id[first], len(first)
+    starts = np.cumsum(n_grams) - n_grams
+    sig = np.hstack(
+        [np.minimum.reduceat(np.frombuffer(d, ">u4").reshape(-1, 4), starts) for d in digests]
+    )[:, :n_hashes].astype(np.uint32)
+
+    r = n_hashes // bands
+    buckets = []
+    for b in range(bands):
+        _, inv, count = np.unique(
+            sig[:, b * r : (b + 1) * r], axis=0, return_inverse=True, return_counts=True
+        )
+        buckets.append((inv.ravel(), count, np.where(count > max_bucket, 0, count)))
+    if 16 * sum(int((size * (size - 1) // 2).sum()) for _, _, size in buckets) > budget:
+        return None
+    lo, hi = [], []
+    for inv, count, size in buckets:
+        # docs sorted by bucket, ascending index (= id) inside one; each
+        # pairs with the members after it
+        by_bucket = np.argsort(inv, kind="stable")
+        k = inv[by_bucket]
+        later = np.maximum(size[k] - 1 - (np.arange(n_docs) - (np.cumsum(count) - count)[k]), 0)
+        left = np.repeat(np.arange(n_docs), later)
+        step = np.arange(len(left)) - np.repeat(np.cumsum(later) - later, later)
+        lo.append(by_bucket[left])
+        hi.append(by_bucket[left + 1 + step])
+    lo, hi = np.concatenate(lo), np.concatenate(hi)
+    keep = ~null_id[hi]  # the NULL id sorts last, so it is always the larger side
+    pair = np.unique(lo[keep] * n_docs + hi[keep])
+    lo, hi = pair // n_docs, pair % n_docs
+    rounded = np.array([_round_half_up(k / n_hashes, 4) for k in range(n_hashes + 1)])
+    est = rounded[(sig[lo] == sig[hi]).sum(axis=1)]
+    keep = est >= 0.5
+    return pa.table({"doc_a": ids[lo[keep]], "doc_b": ids[hi[keep]], "est_jaccard": est[keep]})
+
+
 def minhash_lsh_pairs(
     corpus: DataFrame,
     n_hashes: int = 8,
@@ -220,13 +348,30 @@ def minhash_lsh_pairs(
     than ``max_bucket`` are excluded from candidate generation (see
     DEFAULT_MAX_BUCKET — bounds the quadratic per-bucket term).
 
-    The pipeline runs now and the internal signature cache is released
-    before returning (iterate.materialize_and_release — VERDICT r13 item 4:
-    the pinned CacheManager entry otherwise leaks for the session
-    lifetime); the plan that ran is ``result._pre_checkpoint_plan``.
+    Two regimes, the same rows (tests/test_minhash_regimes.py):
+
+    - *small corpus*: when ``corpus`` fits under the session's driver byte
+      budget (:func:`_collect_small_corpus`: a plan-size check, one exact
+      byte-count job, one Arrow collect) and its pairs do too, the driver
+      computes everything (:func:`_minhash_pairs_on_driver`) and the result
+      is a local DataFrame.  ``autoBroadcastJoinThreshold=-1`` turns it off.
+    - *distributed*: the pipeline runs now and the internal signature cache
+      is released before returning (iterate.materialize_and_release —
+      VERDICT r13 item 4: the pinned CacheManager entry otherwise leaks for
+      the session lifetime); the plan that ran is
+      ``result._pre_checkpoint_plan``.
 
     Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b, est ≥ 0.5.
     """
+    docs = _collect_small_corpus(corpus)
+    if docs is not None:
+        spark = corpus.sparkSession
+        pairs = _minhash_pairs_on_driver(
+            docs, n_hashes, bands, ngram, max_bucket, driver_byte_budget(spark)
+        )
+        if pairs is not None:
+            ids = corpus.schema["doc_id"].dataType.simpleString()
+            return spark.createDataFrame(pairs, f"doc_a {ids}, doc_b {ids}, est_jaccard double")
     rows_per_band = n_hashes // bands
     # persist: the banded self-join would otherwise recompute the whole
     # shingle->hash->min pipeline for BOTH join sides (measured 2x cost)
@@ -861,10 +1006,11 @@ def dedup_retention_report(docs: DataFrame, every: int = 10) -> DataFrame:
     )
     # ONE pair computation feeds both the census and the clustering (the
     # naive compose ran the whole shingle→LSH pipeline twice — measured 2×).
-    # minhash_lsh_pairs materializes its result (executor-local checkpoint
-    # blocks) and releases its own signature cache, so no extra persist
-    # here — the r13 persist was a second, session-pinned copy of the same
-    # rows (VERDICT r13 item 4).  Blocks are ContextCleaner-managed.
+    # minhash_lsh_pairs hands back materialized rows — a local relation
+    # built on the driver, or a checkpoint of the distributed plan's result
+    # taken before it released its signature cache — so no extra persist: the
+    # r13 persist was a second, session-pinned copy of the same rows
+    # (VERDICT r13 item 4).
     pairs = minhash_lsh_pairs(corpus)
     n_pairs = pairs.agg(F.count("*").alias("n_near_pairs"))
     clusters = connected_components(

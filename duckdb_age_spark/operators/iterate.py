@@ -26,7 +26,8 @@ It also holds the two shared pieces of the fixpoint family:
   messages, only active vertices send).
 * :func:`collect_small_edges` — the small-graph gate that lets a fixpoint
   operator run its whole loop on the driver when the edge list is small
-  enough to ship to one JVM.
+  enough to ship to one JVM.  Its byte budget, :func:`driver_byte_budget`,
+  also gates MinHash LSH's small-corpus driver regime (dedup.py).
 """
 
 from __future__ import annotations
@@ -298,6 +299,22 @@ def min_superstep(
     return state.drop("changed")
 
 
+def driver_byte_budget(spark) -> int:
+    """Bytes a driver regime may collect: the session's
+    ``autoBroadcastJoinThreshold`` — its own "small enough to ship to one
+    JVM" setting — clamped to half of ``spark.driver.maxResultSize`` (0 =
+    unlimited) so the collect can never abort the job.  Not positive (a
+    threshold of -1) means every driver regime is off and the distributed
+    plans run."""
+    budget = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+    max_result = int(
+        spark.sparkContext._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    )
+    if max_result > 0:
+        budget = min(budget, max_result // 2)
+    return budget
+
+
 def collect_small_edges(edges: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...] | None:
     """Collect ``edges[cols]`` to the driver as int64 arrays when the list is
     small, else None.
@@ -305,11 +322,9 @@ def collect_small_edges(edges: DataFrame, cols: tuple[str, ...]) -> tuple[np.nda
     This is the one "small graph → iterate on the driver" gate of the
     fixpoint family (Pregelix's point: one logical superstep, a physical
     plan chosen by data size).  Small means at most ``budget ÷ (8 B ×
-    len(cols))`` rows, where the byte budget is the session's
-    ``autoBroadcastJoinThreshold`` — its own "small enough to ship to one
-    JVM" setting — clamped to half of ``spark.driver.maxResultSize`` so the
-    collect can never abort the job (655,360 two-column edges at the 10 MiB
-    / 1 GiB defaults).  A threshold of -1 disables the regime.
+    len(cols))`` rows of :func:`driver_byte_budget` (655,360 two-column
+    edges at the 10 MiB / 1 GiB defaults).  A threshold of -1 disables the
+    regime.
 
     The decision is an exact row count, not plan statistics (checkpoint
     leaves carry inflated size estimates: a 62-row pairs leaf reports
@@ -329,14 +344,7 @@ def collect_small_edges(edges: DataFrame, cols: tuple[str, ...]) -> tuple[np.nda
     """
     if not all(isinstance(edges.schema[c].dataType, IntegralType) for c in cols):
         return None
-    spark = edges.sparkSession
-    budget = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
-    max_result = int(
-        spark.sparkContext._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    )
-    if max_result > 0:  # 0 = unlimited
-        budget = min(budget, max_result // 2)
-    cap = budget // (8 * len(cols))
+    cap = driver_byte_budget(edges.sparkSession) // (8 * len(cols))
     if cap <= 0 or edges._jdf.queryExecution().toRdd().count() > cap:
         return None
     table = edges.select(*cols).toArrow()

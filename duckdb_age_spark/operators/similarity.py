@@ -128,40 +128,40 @@ def _assign(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _round_half_up_6(x: float) -> float:
-    """Replicate Spark's F.round(col, 6) for one double: the JVM Round
+def _round_half_up(x: float, places: int = 6) -> float:
+    """Replicate Spark's F.round(col, places) for one double: the JVM Round
     expression goes through ``BigDecimal.valueOf(double)`` — i.e. the
     decimal string ``Double.toString`` gives, NOT the double's exact binary
-    expansion — then setScale(6, HALF_UP).  Python's repr() is the SHORTEST
-    round-trip decimal, which is what ``Double.toString`` returns from JDK 19
-    on (JDK-4511638); older JDKs sometimes print extra digits, which can
-    only matter for a value within those digits of a .5e-6 tie.  The
+    expansion — then setScale(places, HALF_UP).  Python's repr() is the
+    SHORTEST round-trip decimal, which is what ``Double.toString`` returns
+    from JDK 19 on (JDK-4511638); older JDKs sometimes print extra digits,
+    which can only matter for a value within those digits of a tie.  The
     equivalence is pinned against the running JVM's F.round, ties included
-    (tests/test_operators.py::test_round_half_up_6_matches_spark_round).
-    ``+ 0.0`` maps -0.0 to 0.0: BigDecimal has no negative zero."""
+    (tests/test_operators.py::test_round_half_up_6_matches_spark_round at 6
+    places; tests/test_minhash_regimes.py at 4).  ``+ 0.0`` maps -0.0 to
+    0.0: BigDecimal has no negative zero."""
     import decimal
     import math
 
     if not math.isfinite(x):
         return x
-    return (
-        float(decimal.Decimal(repr(x)).quantize(decimal.Decimal("0.000001"), decimal.ROUND_HALF_UP))
-        + 0.0
-    )
+    step = decimal.Decimal(1).scaleb(-places)
+    return float(decimal.Decimal(repr(x)).quantize(step, decimal.ROUND_HALF_UP)) + 0.0
 
 
 def _round6(x):
-    """:func:`_round_half_up_6` over a numpy array: floor(|x|·1e6 + ½) / 1e6
-    with x's sign, which is exact whenever |x|·1e6 is clearly away from a
-    .5 tie (its rounding error is below 1e-3 units for |x| < 1e6); ties,
-    huge and non-finite values take the exact per-element path."""
+    """:func:`_round_half_up` to 6 places over a numpy array: floor(|x|·1e6
+    + ½) / 1e6 with x's sign, which is exact whenever |x|·1e6 is clearly
+    away from a .5 tie (its rounding error is below 1e-3 units for |x| <
+    1e6); ties, huge and non-finite values take the exact per-element
+    path."""
     import numpy as np
 
     a = np.abs(x) * 1e6
     out = np.copysign(np.floor(a + 0.5), x) / 1e6 + 0.0
     exact = ~(np.abs(a - np.floor(a) - 0.5) > 1e-3) | (a >= 1e12)
     for i in np.flatnonzero(exact):
-        out.flat[i] = _round_half_up_6(float(x.flat[i]))
+        out.flat[i] = _round_half_up(float(x.flat[i]))
     return out
 
 
@@ -205,7 +205,7 @@ def _lloyd_step(corpus: DataFrame, cents: list) -> list:
 
     Invariant: each assignment is the one the JVM :func:`_assign` and the
     DuckDB oracle (contract._kmeans_ivf_sql) make (:func:`_nearest`; the
-    Double.toString assumption is documented at :func:`_round_half_up_6`).
+    Double.toString assumption is documented at :func:`_round_half_up`).
     Member sums are a fixed left fold: rows in vec_id order inside a task,
     partials merged in (partition, cent_id) order, so the result depends
     only on the data and the partitioning, never on shuffle-fetch order.

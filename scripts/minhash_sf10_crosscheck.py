@@ -126,11 +126,16 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
+    # the sf10 corpus is far over the driver byte budget
+    # (iterate.driver_byte_budget), so this checks the distributed plan
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
-        .appName("minhash-sf10-crosscheck")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
+            .appName("minhash-sf10-crosscheck"),
+            shuffle_partitions=32,
+        )
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

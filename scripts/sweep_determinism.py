@@ -4,8 +4,8 @@
 Runs each hazard-family query N times under rotating Spark configs
 (shuffle partitions 2..64, small/large scan splits — every knob that
 changes float-sum reduction order — and the broadcast threshold, whose -1
-also moves the graph operators off their small-graph driver regime onto
-the distributed loops) and asserts the canonicalized result hash NEVER
+also moves the graph operators and MinHash LSH off their driver regimes
+onto the distributed plans) and asserts the canonicalized result hash NEVER
 changes.  With the exact integer-unit sums of
 operators/exact.py the hash is invariant by construction; this sweep is
 the regression gate that proves it (the r5 tpch_q9 driver flake class).
@@ -40,13 +40,21 @@ FAMILY = [
     "tpch_q22",
     "events_tumbling",
     "cube_priority_status",
+    # the MinHash LSH consumers: the threshold rotation moves them between
+    # the small-corpus driver regime and the distributed plan
+    "dedup_minhash_pairs",
+    "dedup_clusters",
+    "pipeline_dedup_report",
+    "dedup_ngram_verify",
+    "dedup_containment",
 ]
 
 # (shuffle.partitions, files.maxPartitionBytes, autoBroadcastJoinThreshold)
 # — small byte splits shatter the parquet scan into many input partitions,
 # changing partial-sum order; a threshold of -1 turns off broadcast joins
-# and the connected-components / PageRank driver regime
-# (operators/iterate.collect_small_edges), so their distributed loops run
+# and the driver regimes (operators/iterate.driver_byte_budget) of
+# connected components, PageRank and MinHash LSH, so their distributed
+# plans run
 CONFIGS = [
     ("2", "134217728", "10485760"),
     ("7", "1048576", "-1"),

@@ -54,12 +54,18 @@ def edges(spark):
     return spark.createDataFrame(rows, "src long, dst long")
 
 
-def test_minhash_lsh_pairs_releases_signature_cache(clean_cache, docs):
+def test_minhash_lsh_pairs_releases_signature_cache(clean_cache, docs, broadcast_threshold):
+    """In both regimes: the small-corpus driver regime (the default budget)
+    caches nothing, and the distributed plan (-1) releases its signature
+    cache."""
     from duckdb_age_spark.operators.dedup import minhash_lsh_pairs, planted_near_dup_corpus
 
-    out = minhash_lsh_pairs(planted_near_dup_corpus(docs))
-    assert out.count() > 0
-    assert _cache_is_empty(clean_cache)
+    for threshold, distributed in (("10485760", False), ("-1", True)):
+        broadcast_threshold(threshold)
+        out = minhash_lsh_pairs(planted_near_dup_corpus(docs))
+        assert hasattr(out, "_pre_checkpoint_plan") == distributed
+        assert out.count() > 0
+        assert _cache_is_empty(clean_cache)
 
 
 def test_simhash_near_pairs_releases_simhash_cache(clean_cache, docs):

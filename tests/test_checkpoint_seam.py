@@ -29,8 +29,8 @@ def _docs(spark, sf_dir):
     return dedup.planted_near_dup_corpus(read_table(spark, sf_dir, "documents"))
 
 
-# name -> (run(spark, sf_dir), whether the distributed loop must be pinned:
-# the small-graph driver regime would otherwise run with no lineage cut)
+# name -> (run(spark, sf_dir), whether the distributed plan must be pinned:
+# the small-input driver regime would otherwise run with no lineage cut)
 CASES = {
     "pagerank_exact": (lambda s, d: graph.pagerank_exact(_edges(s)), True),
     "weighted_pagerank": (lambda s, d: graph.weighted_pagerank(_weighted(s)), True),
@@ -44,7 +44,7 @@ CASES = {
     "bfs_hops": (lambda s, d: graph.bfs_hops(_edges(s)), False),
     "weighted_sssp": (lambda s, d: graph.weighted_sssp(_weighted(s)), False),
     "harmonic_closeness": (lambda s, d: graph.harmonic_closeness(_edges(s), n_seeds=2), False),
-    "minhash_lsh_pairs": (lambda s, d: dedup.minhash_lsh_pairs(_docs(s, d)), False),
+    "minhash_lsh_pairs": (lambda s, d: dedup.minhash_lsh_pairs(_docs(s, d)), True),
     "simhash_near_pairs": (lambda s, d: dedup.simhash_near_pairs(_docs(s, d)), False),
     "embedding_near_dup_pairs": (
         lambda s, d: dedup.embedding_near_dup_pairs(

@@ -275,7 +275,7 @@ def test_round_half_up_6_matches_spark_round(spark):
 
     import numpy as np
 
-    from duckdb_age_spark.operators.similarity import _round6, _round_half_up_6
+    from duckdb_age_spark.operators.similarity import _round6, _round_half_up
 
     rng = random.Random(7)
     ties = [(rng.randrange(0, 2_000_000) + 0.5) / 1e6 for _ in range(400)]
@@ -290,7 +290,7 @@ def test_round_half_up_6_matches_spark_round(spark):
     vals += [-v for v in ties + near]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [r.r.hex() for r in df.select(F.round("x", 6).alias("r")).collect()]
-    assert got == [_round_half_up_6(v).hex() for v in vals]
+    assert got == [_round_half_up(v).hex() for v in vals]
     assert got == [v.hex() for v in _round6(np.array(vals)).tolist()]
 
 

@@ -477,10 +477,11 @@ def test_order_concurrency_delta_shape(t):
     assert plan.count("Generate") <= 1, plan
 
 
-def test_hot_bucket_cap_broadcasts_hot_keys(t, spark):
+def test_hot_bucket_cap_broadcasts_hot_keys(t, spark, broadcast_off):
     from duckdb_age_spark.operators.dedup import minhash_lsh_pairs, planted_near_dup_corpus
 
-    # the plan the operator ran before checkpointing its result
+    # the distributed plan (the small-corpus driver regime is off), as it
+    # ran before checkpointing its result
     df = minhash_lsh_pairs(planted_near_dup_corpus(t["documents"]))._pre_checkpoint_plan
     # the hot-key list joins as a broadcast anti-join — the cap must never
     # introduce a wide shuffle of the banded rows
