@@ -78,8 +78,10 @@ def _result(df):
     [(1, 8, 4, 3), (2, 8, 4, 3), (1, 6, 3, 3), (2, 6, 3, 2), (1, 16, 4, 3), (2, 16, 4, 2)],
 )
 def test_driver_and_distributed_regimes_agree(
-    spark, broadcast_threshold, seed, n_hashes, bands, ngram
+    spark, broadcast_threshold, monkeypatch, seed, n_hashes, bands, ngram
 ):
+    # a few shingles per digest chunk: signatures span many chunks
+    monkeypatch.setattr(dedup, "_DIGEST_CHUNK", 100)
     corpus = _frame(spark, _corpus(seed))
     kwargs = dict(n_hashes=n_hashes, bands=bands, ngram=ngram)
     driver = dedup.minhash_lsh_pairs(corpus, **kwargs)
@@ -145,7 +147,7 @@ def test_pairs_over_budget_fall_back_to_distributed(spark, broadcast_threshold):
     runs and returns the same rows."""
     corpus = _frame(spark, [(i, "lorem ipsum dolor") for i in range(40)])
     broadcast_threshold("2000")
-    assert dedup._collect_small_corpus(corpus) is not None, "the corpus must pass the byte gate"
+    assert dedup._collect_small_corpus(corpus, 2000) is not None, "the corpus must pass the byte gate"
     out = dedup.minhash_lsh_pairs(corpus)
     assert hasattr(out, "_pre_checkpoint_plan"), "the pair bound did not send the call to Spark"
     got = _result(out)
