@@ -331,33 +331,20 @@ def main() -> None:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    # JVM crypto path on the classpath so size-based routing (SCALING.md,
-    # sources/encrypted.py) can engage for the large-payload sink queries
-    # (VERDICT r8 item 7).  Must happen BEFORE the JVM launches; absence of
-    # a JDK degrades to the Python path and the bench still runs.
-    jvm_jar = None
-    try:
-        from duckdb_age_spark.jvm import ensure_jar
-
-        jvm_jar = ensure_jar()
-        builder = (
-            builder.config("spark.jars", jvm_jar)
-            .config("spark.driver.extraClassPath", jvm_jar)
-            .config("spark.executor.extraClassPath", jvm_jar)
-        )
-    except Exception:
-        pass
+    # The recipe put the JVM jar on the classpath (absent without a JDK), so
+    # size-based routing (SCALING.md, sources/encrypted.py) can engage for
+    # the large-payload sink queries; without it the bench runs the Python
+    # path.
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     jvm_registered = False
-    if jvm_jar is not None:
-        try:
-            from duckdb_age_spark.jvm import register_jvm_crypto
+    try:
+        from duckdb_age_spark.jvm import register_jvm_crypto
 
-            register_jvm_crypto(spark)
-            jvm_registered = True
-        except Exception:
-            pass
+        register_jvm_crypto(spark)
+        jvm_registered = True
+    except Exception:
+        pass
 
     import __spark_entry__ as entry_mod
 

@@ -22,6 +22,21 @@ runtime sizes — or explicitly parameterised:
 * ``spark.sql.session.timeZone=UTC``: determinism for timestamp-bucketing
   operators (the oracle pins UTC); not a performance knob.
 
+:func:`apply_recommended_conf` also makes ``file://`` fork-free.  Without
+``libhadoop.so``, Hadoop's stock local filesystem starts a ``chmod`` process
+for every file and directory it creates and a ``readlink`` process for
+every checkpoint and state-store rename (135 and 176 per warm
+``operator_jobs`` pass of perfbench; most of a stateful drain's state
+commit).  The
+``agespark.NioLocalFileSystem`` / ``agespark.NioLocalFs`` classes of the
+JVM jar (``jvm/src/agespark``) set the same modes and answer the same link
+queries through ``java.nio``, and keep the ``.crc`` checksum files.  The jar
+goes on ``spark.jars`` and both ``extraClassPath`` entries; a caller that
+later replaces ``spark.driver.extraClassPath`` must keep the jar on it, or
+Hadoop cannot load the ``file://`` class.  Without ``javac`` the jar cannot
+be built, no entry is added, and the session runs Hadoop's stock classes,
+which write the same files with the same modes.
+
 ``shuffle_partitions`` is deliberately a PARAMETER, not a constant: local
 benches pass the core count (AQE coalescing owns the rest); a cluster
 deployment sizes it to fleet parallelism / target partition bytes
@@ -48,9 +63,28 @@ def recommended_session_conf(shuffle_partitions: int | None = None) -> dict[str,
     return conf
 
 
+def local_fs_conf() -> dict[str, str]:
+    """The fork-free ``file://`` entries: the JVM jar on the classpath and
+    the two Hadoop filesystem classes; empty when the jar cannot be built."""
+    from .jvm import ensure_jar
+
+    try:
+        jar = ensure_jar()
+    except (RuntimeError, OSError):
+        return {}
+    return {
+        "spark.jars": jar,
+        "spark.driver.extraClassPath": jar,
+        "spark.executor.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": "agespark.NioLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": "agespark.NioLocalFs",
+    }
+
+
 def apply_recommended_conf(builder, shuffle_partitions: int | None = None):
-    """Apply the recommended conf to a ``SparkSession.Builder`` (returns the
-    builder for chaining)."""
-    for k, v in recommended_session_conf(shuffle_partitions).items():
+    """Apply the recommended conf and the fork-free ``file://`` entries to a
+    ``SparkSession.Builder`` (returns the builder for chaining)."""
+    conf = {**recommended_session_conf(shuffle_partitions), **local_fs_conf()}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder

@@ -11,11 +11,9 @@ ChaCha20-Poly1305, HmacSHA256 — no external deps), wire-compatible with
 
 Usage::
 
-    jar = ensure_jar()                       # javac+jar once, mtime-cached
-    spark = (SparkSession.builder
-             .config("spark.jars", jar)
-             .config("spark.driver.extraClassPath", jar)
-             .getOrCreate())
+    # the recipe puts ensure_jar()'s jar (javac+jar once, mtime-cached) on
+    # spark.jars and the driver and executor classpaths
+    spark = apply_recommended_conf(SparkSession.builder).getOrCreate()
     register_jvm_crypto(spark)               # age_encrypt_jvm / age_decrypt_jvm
 
 The jar must be on the DRIVER classpath at JVM launch for

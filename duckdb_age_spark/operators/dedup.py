@@ -235,6 +235,8 @@ def _shingles(text: bytes, ngram: int) -> list[bytes]:
 # bytes of md5 digests per hash word the driver regime buffers before it
 # min-reduces them into signatures (64 Ki shingles)
 _DIGEST_CHUNK = 1 << 20
+# Long.MaxValue: the sizeInBytes Spark gives a leaf without statistics
+_UNKNOWN_SIZE = (1 << 63) - 1
 
 
 def _collect_small_corpus(corpus: DataFrame, budget: int) -> pa.Table | None:
@@ -244,8 +246,11 @@ def _collect_small_corpus(corpus: DataFrame, budget: int) -> pa.Table | None:
     steps:
 
     1. the optimized plan's ``sizeInBytes`` estimate is over the budget:
-       None with no job and no scan (a frame without statistics, such as
-       an RDD or checkpoint leaf, estimates Long.MaxValue);
+       None with no job and no scan.  An estimate of exactly Long.MaxValue
+       is no estimate — Spark's figure for a leaf without statistics, such
+       as ``createDataFrame`` from a Python list or a checkpoint leaf — and
+       goes on to step 2, so an over-budget corpus of that kind pays one
+       scan with no exchange before it runs distributed;
     2. one job gives the exact ``8 B × count + Σ octet_length(text)``:
        the count and sum are observed metrics of a noop write, so every
        task scans in parallel and nothing shuffles (a global aggregate
@@ -262,7 +267,10 @@ def _collect_small_corpus(corpus: DataFrame, budget: int) -> pa.Table | None:
         docs.schema["text"].dataType, StringType
     ):
         return None
-    if budget <= 0 or docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > budget:
+    if budget <= 0:
+        return None
+    estimate = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if estimate > budget and estimate != _UNKNOWN_SIZE:
         return None
     size = Observation()
     docs.observe(

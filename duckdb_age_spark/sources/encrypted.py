@@ -46,17 +46,21 @@ def _jvm_registered(spark: SparkSession, fn: str) -> bool:
 
 
 def _median_payload_bytes(df: DataFrame, columns: list[str]) -> dict[str, int]:
-    """Bounded probe: median octet_length per column over the first
-    ``_PROBE_ROWS`` rows.  ``limit`` keeps the probe to a prefix scan of
-    one input split — O(probe), not O(table) — which is the whole point:
-    the routing decision must cost ~nothing next to the write itself."""
-    sample = df.limit(_PROBE_ROWS).select(
-        *[F.octet_length(F.col(c).cast("binary")).alias(f"_n{i}") for i, c in enumerate(columns)]
-    )
-    row = sample.agg(
-        *[F.percentile_approx(f"_n{i}", 0.5).alias(f"_n{i}") for i in range(len(columns))]
-    ).first()
-    return {c: int(row[f"_n{i}"] or 0) for i, c in enumerate(columns)}
+    """Bounded probe: the lower median octet_length per column over the
+    first ``_PROBE_ROWS`` rows, NULLs dropped (0 when none is left), which
+    is what ``percentile_approx(_, 0.5)`` returns on so few values.
+    ``take`` keeps the probe to a prefix scan of one input split — O(probe),
+    not O(table) — which is the whole point: the routing decision must cost
+    ~nothing next to the write itself.  The median is taken on the driver
+    because a ``limit(...).agg`` plan compiles new classes on every call:
+    its generated code names the limit counter after a global plan id, so
+    Spark's codegen cache never hits."""
+    rows = df.select(*[F.octet_length(F.col(c).cast("binary")) for c in columns]).take(_PROBE_ROWS)
+    medians = {}
+    for i, c in enumerate(columns):
+        sizes = sorted(r[i] for r in rows if r[i] is not None)
+        medians[c] = sizes[(len(sizes) - 1) // 2] if sizes else 0
+    return medians
 
 
 def choose_crypto_path(

@@ -685,7 +685,13 @@ def run_available_now(
     join at sf0.1: 32 partitions → 6.0 s, 8 → 2.4 s for identical output).
     Size it to state volume: small bounded drains want few stores; a
     production 100 TB/day stream wants hundreds.  The default 8 is the
-    measured local optimum above; ``None`` leaves the session's own
+    measured local optimum above.  Re-measured once the recipe's fork-free
+    ``file://`` classes made each store commit cheap (conf.py): the five
+    stateful contract drains at sf0.1, recipe session on 4 cores, 8 vs 4
+    stores interleaved, 5 reps each — windowed 0.70 vs 0.79 s, dedup 1.70
+    vs 1.88 s, join 1.60 vs 1.62 s, distinct users 1.24 vs 0.99 s, OHLC
+    1.08 vs 1.10 s; 4 stores was faster in 11 of 25 pairs, so the default
+    stays 8.  ``None`` leaves the session's own
     shuffle-partitions setting untouched.  The session conf is restored
     after the drain so batch queries keep their own setting.
     """

@@ -1,6 +1,7 @@
 #!/bin/sh
-# Compile the JVM-side age crypto UDFs into jvm/age-spark-udf.jar.
-# Pure JDK 17 + the Spark jars shipped with pyspark (UDF2 interface only).
+# Compile the JVM-side age crypto UDFs and the fork-free file:// filesystem
+# classes into jvm/age-spark-udf.jar.  Pure JDK 17 + the Spark jars shipped
+# with pyspark (the UDF2 interface and Hadoop's filesystem classes).
 # Idempotent; duckdb_age_spark.jvm.ensure_jar() invokes this lazily under a
 # build lock and caches on source mtime.
 set -e

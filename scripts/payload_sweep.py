@@ -41,9 +41,7 @@ PRIV = "AGE-SECRET-KEY-1DMYUTPVUSD3M7HMU4K5KXNZ65JZVC9J04MSVV2J8Y4NE8GZCVU6ST7DR
 
 def main() -> int:
     from bench import _kernel_bench
-    from duckdb_age_spark.jvm import ensure_jar
 
-    jar = ensure_jar()
     kernel_start = _kernel_bench()
 
     from pyspark.sql import SparkSession, functions as F
@@ -55,9 +53,6 @@ def main() -> int:
             SparkSession.builder.master(f"local[{CPUS}]").appName("payload-sweep"),
             shuffle_partitions=CPUS,
         )
-        .config("spark.jars", jar)
-        .config("spark.driver.extraClassPath", jar)
-        .config("spark.executor.extraClassPath", jar)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -39,17 +39,6 @@ def main() -> int:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    try:
-        from duckdb_age_spark.jvm import ensure_jar
-
-        jar = ensure_jar()
-        builder = (
-            builder.config("spark.jars", jar)
-            .config("spark.driver.extraClassPath", jar)
-            .config("spark.executor.extraClassPath", jar)
-        )
-    except Exception:
-        pass
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try:

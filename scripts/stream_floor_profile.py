@@ -3,11 +3,8 @@
 
 Times a minimal STATELESS drain (readStream over the events parquet →
 projection → memory sink) and one stateful drain (windowed counts,
-complete), under combinations of:
+complete), with
 
-  * checkpoint location: Spark temp dir (java.io.tmpdir, disk) vs tmpfs
-    (/dev/shm) — ephemeral drains have no durability requirement, the
-    temp checkpoint is force-deleted on completion anyway;
   * spark.sql.streaming.noDataMicroBatches.enabled: true (default) vs
     false — the trailing no-data batch only exists to advance the
     watermark for operators that emit on watermark-pass; bounded drains
@@ -16,7 +13,11 @@ complete), under combinations of:
 
 Prints per-variant medians plus the per-batch durationMs breakdown from
 query progress, so the floor decomposes into planning / walCommit /
-addBatch / state commit.
+addBatch / state commit.  The session is the recipe's
+(``apply_recommended_conf``), so checkpoint and state-store files go
+through the fork-free ``file://`` classes; a checkpoint on tmpfs would
+change nothing, since the stock classes' cost was starting ``chmod`` and
+``readlink`` processes, not disk I/O.
 
 Usage: python scripts/stream_floor_profile.py [reps]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as usual.
@@ -26,7 +27,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 import uuid
@@ -37,7 +37,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
 
-def drain(stream_df, output_mode, ckpt_dir=None):
+def drain(stream_df, output_mode):
     spark = stream_df.sparkSession
     name = f"prof_{uuid.uuid4().hex[:8]}"
     w = (
@@ -46,10 +46,6 @@ def drain(stream_df, output_mode, ckpt_dir=None):
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    loc = None
-    if ckpt_dir is not None:
-        loc = os.path.join(ckpt_dir, name)
-        w = w.option("checkpointLocation", loc)
     t0 = time.perf_counter()
     q = w.start()
     t_start = time.perf_counter() - t0
@@ -57,8 +53,6 @@ def drain(stream_df, output_mode, ckpt_dir=None):
     t_total = time.perf_counter() - t0
     prog = [json.loads(p.json) for p in q.recentProgress]
     spark.sql(f"DROP VIEW IF EXISTS {name}")
-    if loc:
-        shutil.rmtree(loc, ignore_errors=True)
     return t_start, t_total, prog
 
 
@@ -82,29 +76,21 @@ def main() -> int:
 
     from duckdb_age_spark.streaming import stream_events, windowed_counts_stream
 
-    shm = "/dev/shm/age_stream_prof"
-    os.makedirs(shm, exist_ok=True)
-
-    variants = [
-        ("tmp+nodata", None, "true"),
-        ("shm+nodata", shm, "true"),
-        ("tmp-nodata", None, "false"),
-        ("shm-nodata", shm, "false"),
-    ]
+    variants = [("+nodata", "true"), ("-nodata", "false")]
 
     # INTERLEAVED: rep 1 of every (variant, kind), then rep 2, ... so JVM
     # warmup and box weather hit all variants equally (the first, sequential
     # version of this script produced a monotone 0.84->0.53 "improvement"
     # that tracked run ORDER, not the knobs).
-    cells = [(label, ckpt, nodata, kind) for label, ckpt, nodata in variants
+    cells = [(label, nodata, kind) for label, nodata in variants
              for kind in ("stateless", "stateful")]
-    totals = {c[:4]: [] for c in cells}
-    breakdowns = {c[:4]: [] for c in cells}
+    totals = {c: [] for c in cells}
+    breakdowns = {c: [] for c in cells}
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         for _ in range(reps):
-            for label, ckpt, nodata, kind in cells:
+            for label, nodata, kind in cells:
                 spark.conf.set(
                     "spark.sql.streaming.noDataMicroBatches.enabled", nodata
                 )
@@ -115,15 +101,16 @@ def main() -> int:
                 else:
                     df = windowed_counts_stream(ev, window="1 hour")
                     mode = "complete"
-                _t_start, t_total, prog = drain(df, mode, ckpt)
-                totals[(label, ckpt, nodata, kind)].append(t_total)
-                breakdowns[(label, ckpt, nodata, kind)].append(prog)
+                _t_start, t_total, prog = drain(df, mode)
+                totals[(label, nodata, kind)].append(t_total)
+                breakdowns[(label, nodata, kind)].append(prog)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    for label, ckpt, nodata, kind in cells:
-        ts = sorted(totals[(label, ckpt, nodata, kind)])
+    for cell in cells:
+        label, _nodata, kind = cell
+        ts = sorted(totals[cell])
         med = ts[len(ts) // 2]
-        bks = breakdowns[(label, ckpt, nodata, kind)]
+        bks = breakdowns[cell]
         n_batches = [len(p) for p in bks]
         rep = bks[len(bks) // 2]
         dur: dict[str, int] = {}
@@ -132,11 +119,10 @@ def main() -> int:
                 dur[k] = dur.get(k, 0) + int(v)
         print(
             f"{label:12s} {kind:9s} median {med:6.3f}s  all "
-            + " ".join(f"{x:.2f}" for x in totals[(label, ckpt, nodata, kind)])
+            + " ".join(f"{x:.2f}" for x in totals[cell])
             + f"  batches {n_batches}  durationMs {json.dumps(dur, sort_keys=True)}"
         )
     spark.stop()
-    shutil.rmtree(shm, ignore_errors=True)
     return 0
 
 

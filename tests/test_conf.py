@@ -31,18 +31,19 @@ def test_recommended_conf_contents():
     assert "spark.sql.shuffle.partitions" not in recommended_session_conf(None)
 
 
+class _Builder:
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+
 def test_apply_recommended_conf_chains_builder():
     from duckdb_age_spark.conf import apply_recommended_conf
 
-    class FakeBuilder:
-        def __init__(self):
-            self.conf: dict[str, str] = {}
-
-        def config(self, k, v):
-            self.conf[k] = v
-            return self
-
-    b = apply_recommended_conf(FakeBuilder(), shuffle_partitions=8)
+    b = apply_recommended_conf(_Builder(), shuffle_partitions=8)
     assert b.conf["spark.sql.join.preferSortMergeJoin"] == "false"
     assert b.conf["spark.sql.shuffle.partitions"] == "8"
 
@@ -70,3 +71,28 @@ def test_harnesses_consume_the_engine_recipe():
         assert not re.search(
             r"\.config\(\s*[\"']spark\.sql\.adaptive\.enabled", src
         ), rel
+
+
+def test_recipe_installs_fork_free_local_fs_when_the_jar_builds(monkeypatch):
+    """With the JVM jar the recipe puts it on the classpath and selects the
+    fork-free file:// classes; without it (no javac) it adds neither, and
+    the session runs Hadoop's stock classes."""
+    import shutil
+
+    from duckdb_age_spark import jvm
+    from duckdb_age_spark.conf import apply_recommended_conf
+
+    fs_keys = ("spark.hadoop.fs.file.impl", "spark.hadoop.fs.AbstractFileSystem.file.impl")
+    jar_keys = ("spark.jars", "spark.driver.extraClassPath", "spark.executor.extraClassPath")
+    if shutil.which("javac") is not None:
+        conf = apply_recommended_conf(_Builder()).conf
+        assert [conf[k] for k in fs_keys] == ["agespark.NioLocalFileSystem", "agespark.NioLocalFs"]
+        assert {conf[k] for k in jar_keys} == {jvm.JAR_PATH}
+
+    def no_javac():
+        raise RuntimeError("jvm build failed: javac: not found")
+
+    monkeypatch.setattr(jvm, "ensure_jar", no_javac)
+    conf = apply_recommended_conf(_Builder(), shuffle_partitions=4).conf
+    assert not set(fs_keys + jar_keys) & set(conf)
+    assert conf["spark.sql.shuffle.partitions"] == "4"

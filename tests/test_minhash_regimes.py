@@ -154,3 +154,30 @@ def test_pairs_over_budget_fall_back_to_distributed(spark, broadcast_threshold):
     assert len(got[1]) == 40 * 39 // 2
     broadcast_threshold("-1")
     assert got == _result(dedup.minhash_lsh_pairs(corpus))
+
+
+def test_list_built_corpus_without_size_estimate_takes_driver_regime(spark, broadcast_threshold):
+    """``createDataFrame`` from a Python list has no size statistics (its
+    plan estimates Long.MaxValue): the exact byte count decides, so the
+    62 docs of test_operators.py::test_hot_bucket_cap_minhash run on the
+    driver and return the distributed plan's rows."""
+    junk = [(i, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do") for i in range(60)]
+    base = (
+        "quick brown fox jumps over the lazy dog while seven wizards brew "
+        "strong black coffee at midnight near the old lighthouse"
+    )
+    corpus = spark.createDataFrame(
+        junk + [(1000, base), (1001, base + " tonight")], "doc_id long, text string"
+    )
+    plan = corpus.select("doc_id", "text")._jdf.queryExecution().optimizedPlan()
+    assert plan.stats().sizeInBytes() == dedup._UNKNOWN_SIZE
+    driver = dedup.minhash_lsh_pairs(corpus)
+    capped = dedup.minhash_lsh_pairs(corpus, max_bucket=10)
+    assert not hasattr(driver, "_pre_checkpoint_plan"), "the driver regime did not run"
+    assert not hasattr(capped, "_pre_checkpoint_plan"), "the driver regime did not run"
+    broadcast_threshold("-1")
+    dist = dedup.minhash_lsh_pairs(corpus)
+    assert hasattr(dist, "_pre_checkpoint_plan"), "the distributed regime did not run"
+    assert _result(driver) == _result(dist)
+    assert _result(capped) == _result(dedup.minhash_lsh_pairs(corpus, max_bucket=10))
+    assert [tuple(r)[:2] for r in capped.collect()] == [(1000, 1001)]
