@@ -14,13 +14,11 @@ Design for 100 TB (this is the module where scale matters most):
     (band_id, band_signature, doc_id) tuples — bytes per doc, not the doc.
     Candidate verification joins happen per-bucket, i.e. the classic
     O(n²)→O(candidates) cut.
-  - *small corpus*: when the corpus fits under the session's driver byte
-    budget (iterate.driver_byte_budget), one Arrow collect ships
-    (doc_id, text) to the driver and hashlib md5 + numpy compute the same
-    signatures, buckets and pairs there — two Spark jobs (an exact byte
-    count and the collect) where the distributed plan runs 16 and
-    JIT-compiles Spark's row code for a few thousand docs.  A corpus whose
-    plan estimate is over the budget pays no job for the check.
+  - *small corpus*: when (doc_id, text) passes the driver regimes' one
+    small-input gate (iterate.collect_small), hashlib md5 + numpy compute
+    the same signatures, buckets and pairs on the driver — at most two
+    Spark jobs where the distributed plan runs 16 and JIT-compiles Spark's
+    row code for a few thousand docs.
 * **Cross-engine determinism** — every hash is md5 (identical in DuckDB for
   the oracle); "hash i of shingle s" = md5(i || '|' || s).  Min over hex
   strings is lexicographic in both engines.
@@ -38,11 +36,11 @@ import re
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, functions as F
-from pyspark.sql.types import IntegralType, StringType, StructField, StructType
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .iterate import (
-    collect_small_edges,
+    collect_small,
     driver_byte_budget,
     materialize_and_release,
     min_superstep,
@@ -235,50 +233,6 @@ def _shingles(text: bytes, ngram: int) -> list[bytes]:
 # bytes of md5 digests per hash word the driver regime buffers before it
 # min-reduces them into signatures (64 Ki shingles)
 _DIGEST_CHUNK = 1 << 20
-# Long.MaxValue: the sizeInBytes Spark gives a leaf without statistics
-_UNKNOWN_SIZE = (1 << 63) - 1
-
-
-def _collect_small_corpus(corpus: DataFrame, budget: int) -> pa.Table | None:
-    """``corpus`` as an Arrow table (doc_id, text as UTF-8 bytes) on the
-    driver when it fits under ``budget`` bytes
-    (:func:`~.iterate.driver_byte_budget`), else None.  The gate has two
-    steps:
-
-    1. the optimized plan's ``sizeInBytes`` estimate is over the budget:
-       None with no job and no scan.  An estimate of exactly Long.MaxValue
-       is no estimate — Spark's figure for a leaf without statistics, such
-       as ``createDataFrame`` from a Python list or a checkpoint leaf — and
-       goes on to step 2, so an over-budget corpus of that kind pays one
-       scan with no exchange before it runs distributed;
-    2. one job gives the exact ``8 B × count + Σ octet_length(text)``:
-       the count and sum are observed metrics of a noop write, so every
-       task scans in parallel and nothing shuffles (a global aggregate
-       under AQE is two jobs; coalesce(1) would scan in one task); over
-       the budget: None.  Text that dictionary-encodes well can be several
-       times its parquet estimate, so a corpus may pay this scan and still
-       go distributed.
-
-    Then one Arrow collect fetches the rows; it scans the corpus plan a
-    second time.  Integral ids and string texts only; anything else runs
-    distributed."""
-    docs = corpus.select("doc_id", "text")
-    if not isinstance(docs.schema["doc_id"].dataType, IntegralType) or not isinstance(
-        docs.schema["text"].dataType, StringType
-    ):
-        return None
-    if budget <= 0:
-        return None
-    estimate = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if estimate > budget and estimate != _UNKNOWN_SIZE:
-        return None
-    size = Observation()
-    docs.observe(
-        size, F.count(F.lit(1)).alias("n"), F.sum(F.octet_length("text")).alias("b")
-    ).write.format("noop").mode("overwrite").save()
-    if 8 * size.get["n"] + (size.get["b"] or 0) > budget:
-        return None
-    return docs.select("doc_id", F.col("text").cast("binary").alias("text")).toArrow()
 
 
 def _minhash_pairs_on_driver(
@@ -381,11 +335,10 @@ def minhash_lsh_pairs(
 
     Two regimes, the same rows (tests/test_minhash_regimes.py):
 
-    - *small corpus*: when ``corpus`` fits under the session's driver byte
-      budget (:func:`_collect_small_corpus`: a plan-size check, one exact
-      byte-count job, one Arrow collect) and its pairs do too, the driver
-      computes everything (:func:`_minhash_pairs_on_driver`) and the result
-      is a local DataFrame.  ``autoBroadcastJoinThreshold=-1`` turns it off.
+    - *small corpus*: when (doc_id, text) passes
+      :func:`~.iterate.collect_small` and its pairs fit the same budget,
+      the driver computes everything (:func:`_minhash_pairs_on_driver`)
+      and the result is a local DataFrame.
       The whole budget is admitted because no crossover was found under
       it: on a planted corpus at 93 % of the 10 MiB default (33,000 docs,
       104k pairs, 4 cores) the driver regime still took 3.2× less process
@@ -400,7 +353,7 @@ def minhash_lsh_pairs(
     """
     spark = corpus.sparkSession
     budget = driver_byte_budget(spark)
-    docs = _collect_small_corpus(corpus, budget)
+    docs = collect_small(corpus, budget, ("doc_id",), ("text",))
     if docs is not None:
         pairs = _minhash_pairs_on_driver(docs, n_hashes, bands, ngram, max_bucket, budget)
         if pairs is not None:
@@ -735,24 +688,23 @@ def connected_components(edges: DataFrame, nodes: DataFrame, max_iter: int = 25)
     Small-graph regime: near-dup pair graphs are SPARSE — every caller in
     this repo feeds edges from an already-materialized pairs operator, and
     the edge count is orders of magnitude below the doc count (621 pairs /
-    11k docs at sf0.1; 31k at sf10).  When the edge list fits under the
-    session's ``autoBroadcastJoinThreshold`` (:func:`~.iterate.
-    collect_small_edges`: an exact row count, then one collect; integral
-    ids only, -1 disables), the fixpoint runs on the driver
+    11k docs at sf0.1; 31k at sf10).  When the edge list passes
+    :func:`~.iterate.collect_small`, the fixpoint runs on the driver
     (:func:`_min_labels`) and the (id, label) table ships back — the same
     move as a broadcast join.  The edge frame is lineage-truncated first
-    unless the caller handed a checkpoint leaf, and the gate's count
-    materializes it, so over the cap the loop reuses that work (ADVICE r15: span_dedup_clusters feeds an unmaterialized
-    banded-join pipeline — 33 M edges / ~158 s at sf10).  Labels are
-    identical by construction: both regimes assign every touched node the
-    exact minimum reachable id.
+    unless the caller handed a checkpoint leaf, so over the budget the
+    loop reuses the blocks the gate materialized (ADVICE r15:
+    span_dedup_clusters feeds an unmaterialized banded-join pipeline —
+    33 M edges / ~158 s at sf10).  Labels are identical by construction:
+    both regimes assign every touched node the exact minimum reachable id.
     """
     edges = truncate_if_needed(
         edges.select("src", "dst").where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    small = collect_small_edges(edges, ("src", "dst"))
+    small = collect_small(edges, driver_byte_budget(edges.sparkSession), ("src", "dst"))
     if small is not None:
-        ids, label = _min_labels(*small)
+        src, dst = (c.to_numpy().astype(np.int64, copy=False) for c in small.columns)
+        ids, label = _min_labels(src, dst)
         # the loop regime's (id, label) types: the union-widened endpoint
         # type, a NULL-free id and a min-aggregate (nullable) label
         id_type = edges.select("src").unionAll(edges.select("dst")).schema[0].dataType

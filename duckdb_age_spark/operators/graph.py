@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .iterate import (
-    collect_small_edges,
+    collect_small,
+    driver_byte_budget,
     min_superstep,
     symmetric_adjacency,
     truncate_if_needed,
@@ -40,9 +41,8 @@ def _pagerank_on_driver(
     base_pct: int,
 ) -> DataFrame | None:
     """numpy twin of the distributed PageRank loop below, bit for bit, on
-    the NULL-free int64 edge arrays of :func:`~.iterate.collect_small_edges`
-    (``w`` None = unweighted: contrib = rank DIV outdeg; else (rank·w) DIV
-    Σ_out w).
+    NULL-free int64 edge arrays (``w`` None = unweighted: contrib = rank DIV
+    outdeg; else (rank·w) DIV Σ_out w).
 
     The distributed arithmetic it reproduces: every DIV has non-negative
     operands, so it is ``floor_divide``; per-dst sums accumulate in int64
@@ -121,9 +121,9 @@ def _pagerank(
         .unionAll(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    small = collect_small_edges(edges, cols)
-    if small is not None:
-        src, dst, *w = small
+    small = collect_small(edges, driver_byte_budget(edges.sparkSession), cols)
+    if small is not None and not any(c.null_count for c in small.columns):
+        src, dst, *w = (c.to_numpy().astype(np.int64, copy=False) for c in small.columns)
         out = _pagerank_on_driver(
             edges.sparkSession, nodes.schema["node"], src, dst, w[0] if w else None,
             n_iter, damping_pct, base_pct,
@@ -174,16 +174,14 @@ def pagerank_exact(edges: DataFrame, n_iter: int = 3, damping_pct: int = 85) -> 
     iterations run with no cut and a long run's plan never embeds more
     than 10 of them (:func:`~.iterate.truncate_lineage`: durable when the
     context has a checkpoint dir).
-    Small-graph regime: when the edge list fits under the session's
-    ``autoBroadcastJoinThreshold`` (:func:`~.iterate.collect_small_edges`;
-    integral ids only, -1 disables), an exact row count and one collect
-    ship it to the driver and a numpy int64 kernel runs every iteration
-    there, bit for bit the same arithmetic (:func:`_pagerank_on_driver`) —
-    two Spark jobs before the caller's action instead of one per iteration
-    plus the node count.  Anything else runs the distributed loop,
-    including any edge list with a NULL endpoint (a NULL is a node of N
-    there).  An empty edge list returns 0 rows of (node bigint, rank
-    bigint).
+    Small-graph regime: when the edge list passes
+    :func:`~.iterate.collect_small`, a numpy int64 kernel runs every
+    iteration on the driver, bit for bit the same arithmetic
+    (:func:`_pagerank_on_driver`) — at most two Spark jobs before the
+    caller's action instead of one per iteration plus the node count.
+    Anything else runs the distributed loop, including any edge list with
+    a NULL endpoint (a NULL is a node of N there).  An empty edge list
+    returns 0 rows of (node bigint, rank bigint).
     Returns (node, rank) with rank in SCALE units; ``node`` keeps the input
     id type.
     """

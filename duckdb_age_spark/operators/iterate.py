@@ -15,7 +15,7 @@ One rule decides durability: the SparkContext's checkpoint dir.
   it in a second job after the first action on it); an eager one runs
   that pair of jobs at once.
 
-It also holds the two shared pieces of the fixpoint family:
+It also holds the two pieces the fixpoint family shares:
 
 * :func:`min_superstep` — the one min-propagation loop (connected
   components, weighted SSSP, BFS and harmonic closeness) over the one
@@ -24,17 +24,18 @@ It also holds the two shared pieces of the fixpoint family:
   adjacency, takes the minimum per key over state ∪ messages, and halts
   once no row changed (Pregelix, VLDB 2014: a superstep is vertex-state ⋈
   messages, only active vertices send).
-* :func:`collect_small_edges` — the small-graph gate that lets a fixpoint
-  operator run its whole loop on the driver when the edge list is small
-  enough to ship to one JVM.  Its byte budget, :func:`driver_byte_budget`,
-  also gates MinHash LSH's small-corpus driver regime (dedup.py).
+* :func:`collect_small` — the one small-input gate of the driver regimes
+  (PageRank, connected components and MinHash LSH pairs): when the input
+  fits under :func:`driver_byte_budget` it ships to the driver in one
+  Arrow collect, and the operator computes there with numpy (Pregelix:
+  one logical plan, a physical plan chosen by data size).
 """
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import IntegralType
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 
 def is_lineage_truncated(df: DataFrame) -> bool:
@@ -315,39 +316,55 @@ def driver_byte_budget(spark) -> int:
     return budget
 
 
-def collect_small_edges(edges: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...] | None:
-    """Collect ``edges[cols]`` to the driver as int64 arrays when the list is
-    small, else None.
+def collect_small(
+    df: DataFrame, budget: int, ints: tuple[str, ...], texts: tuple[str, ...] = ()
+) -> pa.Table | None:
+    """``df[ints + texts]`` as an Arrow table on the driver when it fits
+    under ``budget`` bytes (:func:`driver_byte_budget`), else None.
 
-    This is the one "small graph → iterate on the driver" gate of the
-    fixpoint family (Pregelix's point: one logical superstep, a physical
-    plan chosen by data size).  Small means at most ``budget ÷ (8 B ×
-    len(cols))`` rows of :func:`driver_byte_budget` (655,360 two-column
-    edges at the 10 MiB / 1 GiB defaults).  A threshold of -1 disables the
-    regime.
+    This is the one small-input gate of the driver regimes (PageRank,
+    connected components, MinHash LSH pairs).  The rule:
 
-    The decision is an exact row count, not plan statistics (checkpoint
-    leaves carry inflated size estimates: a 62-row pairs leaf reports
-    ~1.6e20 bytes).  Callers pass a lineage-truncated frame
-    (:func:`truncate_if_needed`), and the count is one shuffle-free job
-    over it that also materializes a lazy checkpoint's blocks — the blocks
-    the driver collect, or the distributed path when the count is over the
-    cap, then reads.  So a graph over the cap pays one count scan of
-    materialized blocks and never ships a row to the driver.
+    1. **Types and budget.**  Every ``ints`` column is integral, every
+       ``texts`` column a string, and ``budget`` is positive; otherwise
+       None with no job (a cast would turn other ids into NULLs).
+    2. **Estimate.**  None with no job when the optimized plan's
+       ``sizeInBytes`` is over the budget and is not Long.MaxValue (Spark's
+       figure for a plan without statistics).  A lineage leaf
+       (:func:`is_lineage_truncated`) skips this step: a checkpoint leaf
+       inherits the estimate of the plan it cut (a leaf of 200 self-join
+       pairs, 3,200 B as int64, estimates 864,000 B), and counting it
+       costs nothing extra, because the distributed loop then reads the
+       blocks the count materializes.
+    3. **One observed noop write.**  The row count and the ``octet_length``
+       sum over ``texts`` are observed metrics of a noop write, so every
+       task scans in parallel and nothing shuffles (a global aggregate
+       under AQE is two jobs).  Over the budget at ``8 B × len(ints) ×
+       rows + Σ bytes``: None.  The write materializes a lazy checkpoint
+       leaf, so an over-budget edge list pays one scan of blocks its loop
+       reuses.  Text that dictionary-encodes well can be several times its
+       parquet estimate, so a frame may pay this scan and still go
+       distributed.
+    4. **One Arrow collect**, ``texts`` cast to binary (UTF-8 bytes).  It
+       scans ``df``'s plan a second time.
 
-    Returns None without running a job when any column is not integral (a
-    cast to long would turn other ids into NULLs) or the budget is not
-    positive, and after the count when the list is over the cap.  It also
-    returns None when a collected column holds a NULL: the driver kernels
-    assume NULL-free ids and weights, and the distributed loops already
-    give NULLs Spark's semantics.
+    NULLs are the caller's to handle.
     """
-    if not all(isinstance(edges.schema[c].dataType, IntegralType) for c in cols):
+    schema = df.schema
+    if budget <= 0 or not (
+        all(isinstance(schema[c].dataType, IntegralType) for c in ints)
+        and all(isinstance(schema[c].dataType, StringType) for c in texts)
+    ):
         return None
-    cap = driver_byte_budget(edges.sparkSession) // (8 * len(cols))
-    if cap <= 0 or edges._jdf.queryExecution().toRdd().count() > cap:
+    df = df.select(*ints, *texts)
+    if not is_lineage_truncated(df):
+        estimate = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if estimate > budget and estimate != (1 << 63) - 1:  # Long.MaxValue: no statistics
+            return None
+    parts = [F.count(F.lit(1)) * (8 * len(ints))] + [F.sum(F.octet_length(t)) for t in texts]
+    size = Observation()
+    observed = df.observe(size, *(p.alias(f"b{i}") for i, p in enumerate(parts)))
+    observed.write.format("noop").mode("overwrite").save()
+    if sum(v or 0 for v in size.get.values()) > budget:
         return None
-    table = edges.select(*cols).toArrow()
-    if any(table.column(c).null_count for c in cols):
-        return None
-    return tuple(table.column(c).to_numpy().astype(np.int64, copy=False) for c in cols)
+    return df.select(*ints, *(F.col(t).cast("binary").alias(t) for t in texts)).toArrow()

@@ -128,8 +128,8 @@ def main() -> int:
 
     from duckdb_age_spark.conf import apply_recommended_conf
 
-    # the sf10 corpus is far over the driver byte budget
-    # (iterate.driver_byte_budget), so this checks the distributed plan
+    # the sf10 corpus is far over the driver regimes' small-input gate
+    # (iterate.collect_small), so this checks the distributed plan
     spark = (
         apply_recommended_conf(
             SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")

@@ -52,9 +52,8 @@ FAMILY = [
 # (shuffle.partitions, files.maxPartitionBytes, autoBroadcastJoinThreshold)
 # — small byte splits shatter the parquet scan into many input partitions,
 # changing partial-sum order; a threshold of -1 turns off broadcast joins
-# and the driver regimes (operators/iterate.driver_byte_budget) of
-# connected components, PageRank and MinHash LSH, so their distributed
-# plans run
+# and the driver regimes (operators/iterate.collect_small) of connected
+# components, PageRank and MinHash LSH, so their distributed plans run
 CONFIGS = [
     ("2", "134217728", "10485760"),
     ("7", "1048576", "-1"),

@@ -12,28 +12,40 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
+    """The session users get (``conf.apply_recommended_conf``: AQE, the
+    join baseline, UTC and the fork-free ``file://``) on four cores."""
     from pyspark.sql import SparkSession
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
     spark = (
-        SparkSession.builder.master("local[4]")
+        apply_recommended_conf(SparkSession.builder.master("local[4]"), shuffle_partitions=8)
         .appName("duckdb-age-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
-        .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
     yield spark
 
 
+def count_jobs(spark, name: str, fn):
+    """``fn()`` run under the job group ``name`` (unique per call site):
+    returns its result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(name))
+
+
 @pytest.fixture()
 def broadcast_threshold(spark):
     """A setter for ``spark.sql.autoBroadcastJoinThreshold`` whose value is
-    restored when the test ends.  -1 turns off broadcast joins and the graph
-    operators' small-graph driver regime
-    (operators/iterate.collect_small_edges), so their distributed loops
-    run."""
+    restored when the test ends.  -1 turns off broadcast joins and every
+    driver regime (operators/iterate.collect_small), so the distributed
+    plans run."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         yield lambda value: spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)

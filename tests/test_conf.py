@@ -61,6 +61,7 @@ def test_harnesses_consume_the_engine_recipe():
         "scripts/check_oracle.py",
         "scripts/payload_sweep.py",
         "scripts/sweep_determinism.py",
+        "tests/conftest.py",
     ):
         src = open(os.path.join(REPO, rel)).read()
         assert "apply_recommended_conf" in src, rel

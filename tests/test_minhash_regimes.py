@@ -15,7 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_age_spark.operators import dedup
+from duckdb_age_spark.operators.iterate import collect_small
 from duckdb_age_spark.operators.similarity import _round_half_up
+from tests.conftest import count_jobs
 
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu".split()
 # Java's \s (space, \t, \n, \x0b, \f, \r) and Unicode spaces it does not
@@ -108,22 +110,12 @@ def test_est_jaccard_rounding_matches_spark_round(spark):
     assert got == [_round_half_up(k / n, 4) for k, n in vals]
 
 
-def _jobs(spark, name: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(name))
-
-
 def test_small_corpus_issues_at_most_two_jobs(spark, sf_dir):
     """On a parquet corpus under the budget the call runs the exact byte
     count and the Arrow collect, nothing else (the distributed plan runs
     16 jobs before the caller's action)."""
     corpus = dedup.planted_near_dup_corpus(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    out, jobs = _jobs(spark, "minhash-small-corpus", lambda: dedup.minhash_lsh_pairs(corpus))
+    out, jobs = count_jobs(spark, "minhash-small-corpus", lambda: dedup.minhash_lsh_pairs(corpus))
     assert not hasattr(out, "_pre_checkpoint_plan")
     assert 0 < jobs <= 2, jobs
 
@@ -134,10 +126,10 @@ def test_budget_under_plan_estimate_runs_no_gate_job(spark, sf_dir, broadcast_th
     distributed plan runs with the regime off."""
     corpus = dedup.planted_near_dup_corpus(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     broadcast_threshold("1")
-    out, gated = _jobs(spark, "minhash-over-estimate", lambda: dedup.minhash_lsh_pairs(corpus))
+    out, gated = count_jobs(spark, "minhash-over-estimate", lambda: dedup.minhash_lsh_pairs(corpus))
     assert hasattr(out, "_pre_checkpoint_plan")
     broadcast_threshold("-1")
-    _, off = _jobs(spark, "minhash-regime-off", lambda: dedup.minhash_lsh_pairs(corpus))
+    _, off = count_jobs(spark, "minhash-regime-off", lambda: dedup.minhash_lsh_pairs(corpus))
     assert gated == off, (gated, off)
 
 
@@ -147,7 +139,7 @@ def test_pairs_over_budget_fall_back_to_distributed(spark, broadcast_threshold):
     runs and returns the same rows."""
     corpus = _frame(spark, [(i, "lorem ipsum dolor") for i in range(40)])
     broadcast_threshold("2000")
-    assert dedup._collect_small_corpus(corpus, 2000) is not None, "the corpus must pass the byte gate"
+    assert collect_small(corpus, 2000, ("doc_id",), ("text",)) is not None, "the corpus must pass the byte gate"
     out = dedup.minhash_lsh_pairs(corpus)
     assert hasattr(out, "_pre_checkpoint_plan"), "the pair bound did not send the call to Spark"
     got = _result(out)
@@ -170,7 +162,7 @@ def test_list_built_corpus_without_size_estimate_takes_driver_regime(spark, broa
         junk + [(1000, base), (1001, base + " tonight")], "doc_id long, text string"
     )
     plan = corpus.select("doc_id", "text")._jdf.queryExecution().optimizedPlan()
-    assert plan.stats().sizeInBytes() == dedup._UNKNOWN_SIZE
+    assert plan.stats().sizeInBytes() == (1 << 63) - 1  # Long.MaxValue: no estimate
     driver = dedup.minhash_lsh_pairs(corpus)
     capped = dedup.minhash_lsh_pairs(corpus, max_bucket=10)
     assert not hasattr(driver, "_pre_checkpoint_plan"), "the driver regime did not run"

@@ -869,7 +869,7 @@ def test_connected_components_long_path_converges(spark):
 
 def test_connected_components_driver_and_loop_regimes_agree(spark, broadcast_threshold):
     """Below the session's broadcast threshold the min-label fixpoint runs
-    on the driver (iterate.collect_small_edges); with the threshold at -1
+    on the driver (iterate.collect_small); with the threshold at -1
     the distributed loop runs.  Both regimes must assign every node the
     exact minimum reachable id — pinned on a graph with merging chains
     (unions arriving in adverse order), a separate component, reversed
@@ -1320,7 +1320,7 @@ def _count_driver_runs(monkeypatch) -> dict[str, int]:
 def test_small_graph_regime_matches_distributed(
     spark, monkeypatch, broadcast_threshold, id_type, seed, with_nulls
 ):
-    """The small-graph driver regime (iterate.collect_small_edges + numpy
+    """The small-graph driver regime (iterate.collect_small + numpy
     kernels) returns the same rows AND schema as the distributed loops for
     pagerank_exact, weighted_pagerank and connected_components, on seeded
     random graphs with duplicate edges, self-loops, a dangling node,
@@ -1349,6 +1349,24 @@ def test_small_graph_regime_matches_distributed(
     assert ran == {"pagerank": 0 if with_nulls else 2, "cc": 1}
 
 
+def _derived_graph(spark):
+    """3,000 edges over 100 nodes, derived from a range (not a leaf), and
+    the node list."""
+    edges = spark.range(3000).select(
+        (F.col("id") % 100).alias("src"), ((F.col("id") * 7 + 1) % 100).alias("dst")
+    )
+    return edges, spark.range(100)
+
+
+def _pagerank_and_cc(edges, nodes):
+    from duckdb_age_spark.operators import dedup, graph
+
+    return [
+        _schema_and_rows(graph.pagerank_exact(edges)),
+        _schema_and_rows(dedup.connected_components(edges, nodes)),
+    ]
+
+
 def test_small_graph_cap_honours_max_result_size(spark, monkeypatch):
     """The gate's byte budget is clamped to half of spark.driver.maxResultSize:
     with maxResultSize (64 KiB) below the broadcast threshold (10 MiB), a
@@ -1357,10 +1375,7 @@ def test_small_graph_cap_honours_max_result_size(spark, monkeypatch):
     from duckdb_age_spark.operators import dedup, graph
 
     ran = _count_driver_runs(monkeypatch)
-    edges = spark.range(3000).select(
-        (F.col("id") % 100).alias("src"), ((F.col("id") * 7 + 1) % 100).alias("dst")
-    )
-    nodes = spark.range(100)
+    edges, nodes = _derived_graph(spark)
     conf = spark.sparkContext._jsc.sc().conf()
     prev = conf.get("spark.driver.maxResultSize", "1g")
     conf.set("spark.driver.maxResultSize", "64k")
@@ -1375,6 +1390,73 @@ def test_small_graph_cap_honours_max_result_size(spark, monkeypatch):
     graph.pagerank_exact(edges).collect()
     dedup.connected_components(edges, nodes).collect()
     assert ran == {"pagerank": 1, "cc": 1}
+
+
+def test_edge_gate_issues_at_most_two_jobs(spark, monkeypatch):
+    """Under the budget a connected_components or pagerank_exact call runs
+    the gate's observed count and its Arrow collect, nothing else (the
+    distributed loops run jobs every round before the caller's action)."""
+    from duckdb_age_spark.operators import dedup, graph
+    from tests.conftest import count_jobs
+
+    ran = _count_driver_runs(monkeypatch)
+    edges, nodes = _derived_graph(spark)
+    calls = {
+        "edge-gate-pagerank": lambda: graph.pagerank_exact(edges),
+        "edge-gate-cc": lambda: dedup.connected_components(edges, nodes),
+    }
+    for name, call in calls.items():
+        _, jobs = count_jobs(spark, name, call)
+        assert 0 < jobs <= 2, (name, jobs)
+    assert ran == {"pagerank": 1, "cc": 1}
+
+
+def test_edge_gate_over_budget_materializes_the_leaf(spark, monkeypatch, broadcast_threshold):
+    """Over the budget the gate's one count job materializes a lazy
+    checkpoint leaf, so the distributed loop reads those blocks rather than
+    re-deriving the edges, and the loops return their usual rows."""
+    from duckdb_age_spark.operators.iterate import collect_small, truncate_lineage
+
+    ran = _count_driver_runs(monkeypatch)
+    derived, nodes = _derived_graph(spark)
+    edges = truncate_lineage(derived)
+    blocks = edges._jdf.queryExecution().analyzed().rdd()
+    assert not blocks.isCheckpointed()
+    assert collect_small(edges, 1024, ("src", "dst")) is None
+    assert blocks.isCheckpointed()
+
+    broadcast_threshold("1024")
+    over = _pagerank_and_cc(edges, nodes)
+    assert ran == {"pagerank": 0, "cc": 0}
+    broadcast_threshold("-1")
+    assert over == _pagerank_and_cc(edges, nodes)
+
+
+def test_edge_gate_counts_a_leaf_despite_its_inherited_estimate(
+    spark, monkeypatch, broadcast_threshold
+):
+    """A checkpoint leaf inherits the size estimate of the plan it cut: a
+    self-join's 200 pairs (3,200 B of int64) estimate 864,000 B.  The gate
+    counts a leaf instead of trusting that estimate, so under a budget
+    between the two connected_components and pagerank_exact still run on
+    the driver, and return the distributed loops' rows."""
+    from duckdb_age_spark.operators.iterate import truncate_lineage
+
+    ran = _count_driver_runs(monkeypatch)
+    ids = spark.range(100).select((F.col("id") % 50).alias("k"), F.col("id").alias("v"))
+    pairs = ids.alias("a").join(ids.alias("b"), "k")
+    edges = truncate_lineage(pairs.select(F.col("a.v").alias("src"), F.col("b.v").alias("dst")))
+    nodes = spark.range(100)
+    budget = 8192
+    estimate = edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert budget < estimate < (1 << 63) - 1, estimate
+
+    broadcast_threshold(str(budget))
+    driver = _pagerank_and_cc(edges, nodes)
+    assert ran == {"pagerank": 1, "cc": 1}
+    broadcast_threshold("-1")
+    assert driver == _pagerank_and_cc(edges, nodes)
+    assert len(driver[1][1]) == 100
 
 
 def test_weighted_pagerank_overflow_takes_distributed_path(spark, monkeypatch, broadcast_threshold):
