@@ -22,6 +22,11 @@ from .functions import (
 from .register import register
 from .secrets import SecretManager, default_manager
 
+# last, so that its gc.freeze() also covers the package's own imports:
+# reused Python workers import the package while they unpickle a task's
+# closure, and this sets each of them up once
+from . import _worker  # noqa: E402, F401
+
 __version__ = "0.1.0"
 
 __all__ = [

@@ -329,8 +329,11 @@ def collect_small(
        ``texts`` column a string, and ``budget`` is positive; otherwise
        None with no job (a cast would turn other ids into NULLs).
     2. **Estimate.**  None with no job when the optimized plan's
-       ``sizeInBytes`` is over the budget and is not Long.MaxValue (Spark's
-       figure for a plan without statistics).  A lineage leaf
+       ``sizeInBytes`` is over the budget and under Long.MaxValue.  Spark
+       gives a leaf without statistics Long.MaxValue and adds and
+       multiplies that BigInt across a plan (a union of two such leaves
+       estimates 2^64 - 2 B), so any figure from Long.MaxValue up means no
+       estimate, and step 3 decides.  A lineage leaf
        (:func:`is_lineage_truncated`) skips this step: a checkpoint leaf
        inherits the estimate of the plan it cut (a leaf of 200 self-join
        pairs, 3,200 B as int64, estimates 864,000 B), and counting it
@@ -359,7 +362,7 @@ def collect_small(
     df = df.select(*ints, *texts)
     if not is_lineage_truncated(df):
         estimate = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if estimate > budget and estimate != (1 << 63) - 1:  # Long.MaxValue: no statistics
+        if budget < estimate < (1 << 63) - 1:  # from Long.MaxValue up: no statistics
             return None
     parts = [F.count(F.lit(1)) * (8 * len(ints))] + [F.sum(F.octet_length(t)) for t in texts]
     size = Observation()

@@ -34,18 +34,22 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf10"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scale", "sf10")
 
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
-        .appName("fuzzy-sf10-crosscheck")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
+            .appName("fuzzy-sf10-crosscheck"),
+            shuffle_partitions=32,
+        )
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

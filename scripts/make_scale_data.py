@@ -9,7 +9,7 @@ Document texts get a replica-tag prefix token so near-dup structure scales
 instead of exploding into cross-replica exact duplicates (hot-bucket caps
 exist for that; here we measure the LINEAR regime).
 
-Output goes to /root/repo/.scale/sf{X}/ (gitignored).  Never touches
+Output goes to .scale/sf{X}/ under the repo root (gitignored).  Never touches
 /root/testdata.
 
 Usage: python scripts/make_scale_data.py <replicas> [out_name]
@@ -23,7 +23,8 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 
@@ -46,14 +47,18 @@ OFFSETS = {
 def main() -> int:
     n = int(sys.argv[1])
     name = sys.argv[2] if len(sys.argv) > 2 else f"sf{n / 10:g}"
-    out_dir = f"/root/repo/.scale/{name}"
+    out_dir = os.path.join(REPO, ".scale", name)
 
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
-        .appName(f"make-scale-{name}")
-        .config("spark.sql.shuffle.partitions", "32")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
+            .appName(f"make-scale-{name}"),
+            shuffle_partitions=32,
+        )
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "false")
         # match the driver fixtures' int64-µs ts layout (Spark's default

@@ -65,7 +65,8 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_HASHES = 8
 BANDS = 4
@@ -122,7 +123,7 @@ def binomial_tolerance(ps: list[float], sigmas: float = 6.0) -> float:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf10"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scale", "sf10")
 
     from pyspark.sql import SparkSession, functions as F
 

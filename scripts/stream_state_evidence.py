@@ -44,14 +44,16 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
-        .appName("stream-state-evidence")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
+            .appName("stream-state-evidence"),
+            shuffle_partitions=32,
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .getOrCreate()
     )

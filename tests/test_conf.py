@@ -61,6 +61,12 @@ def test_harnesses_consume_the_engine_recipe():
         "scripts/check_oracle.py",
         "scripts/payload_sweep.py",
         "scripts/sweep_determinism.py",
+        "scripts/make_scale_data.py",
+        "scripts/stream_state_evidence.py",
+        "scripts/fuzzy_sf10_crosscheck.py",
+        "scripts/banded_sf10_crosscheck.py",
+        "scripts/minhash_sf10_crosscheck.py",
+        "scripts/stream_floor_profile.py",
         "tests/conftest.py",
     ):
         src = open(os.path.join(REPO, rel)).read()

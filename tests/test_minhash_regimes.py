@@ -173,3 +173,28 @@ def test_list_built_corpus_without_size_estimate_takes_driver_regime(spark, broa
     assert _result(driver) == _result(dist)
     assert _result(capped) == _result(dedup.minhash_lsh_pairs(corpus, max_bucket=10))
     assert [tuple(r)[:2] for r in capped.collect()] == [(1000, 1001)]
+
+
+def test_union_of_list_leaves_takes_driver_regime(spark, broadcast_threshold):
+    """Spark sums the Long.MaxValue estimates of leaves without statistics
+    into a BigInt past Long.MaxValue: the planted corpus over a 40-row list
+    unions two such leaves.  The gate reads that as no estimate too, so
+    its 44 docs run on the driver in at most two jobs and return the
+    distributed plan's rows."""
+    rng = random.Random(3)
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(WORDS) for _ in range(rng.randint(5, 12)))) for i in range(40)],
+        "doc_id long, text string",
+    )
+    corpus = dedup.planted_near_dup_corpus(docs)
+    plan = corpus.select("doc_id", "text")._jdf.queryExecution().optimizedPlan()
+    assert plan.stats().sizeInBytes() > (1 << 63) - 1
+    driver, jobs = count_jobs(spark, "minhash-list-union", lambda: dedup.minhash_lsh_pairs(corpus))
+    assert not hasattr(driver, "_pre_checkpoint_plan"), "the driver regime did not run"
+    assert 0 < jobs <= 2, jobs
+    broadcast_threshold("-1")
+    dist = dedup.minhash_lsh_pairs(corpus)
+    assert hasattr(dist, "_pre_checkpoint_plan"), "the distributed regime did not run"
+    want = _result(dist)
+    assert want[1], "the corpus must produce pairs"
+    assert _result(driver) == want
