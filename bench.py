@@ -332,19 +332,11 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
     )
     # The recipe put the JVM jar on the classpath (absent without a JDK), so
-    # size-based routing (SCALING.md, sources/encrypted.py) can engage for
-    # the large-payload sink queries; without it the bench runs the Python
-    # path.
+    # register() binds the JVM route too and size-based routing (SCALING.md,
+    # sources/encrypted.py) can engage for the large-payload sink queries;
+    # without it the bench runs the Python route.
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    jvm_registered = False
-    try:
-        from duckdb_age_spark.jvm import register_jvm_crypto
-
-        register_jvm_crypto(spark)
-        jvm_registered = True
-    except Exception:
-        pass
 
     import __spark_entry__ as entry_mod
 
@@ -353,14 +345,14 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     extra: dict[str, float] = {}
-    extra["jvm_crypto_registered"] = jvm_registered
 
     # Warm the Python worker pool once (first pandas-UDF stage pays ~100ms
     # per worker spawn across all cores; that's session setup, not a query).
     from duckdb_age_spark.contract import KP1 as _KP1
-    from duckdb_age_spark.register import register as _register
+    from duckdb_age_spark.register import jvm_route_bound, register as _register
 
     _register(spark)
+    extra["jvm_crypto_registered"] = jvm_route_bound(spark)
     spark.range(CPUS * 4).repartition(CPUS).select(
         F.call_function("age_encrypt", F.lit(b"warmup"), F.lit(_KP1.public_key))
     ).count()

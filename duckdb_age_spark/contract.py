@@ -5744,13 +5744,13 @@ def sink_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_encrypted_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-payload encrypted sink with SIZE-BASED crypto routing
     (VERDICT r8 item 7): 96 KiB blobs sit above the measured 64 KiB
-    Python/JVM crossover (SCALING.md), so ``crypto_path='auto'`` picks the
-    executor-JVM cipher when the session has it registered (the bench
-    session does — BENCH_extra.json records the chosen route) and falls
-    back to the Arrow-batched Python path otherwise.  Either way every
-    blob must round-trip bit-exact through parquet — the routing rule is
-    a throughput decision, never a correctness one, because both paths
-    emit the same age v1 wire format."""
+    Python/JVM crossover (SCALING.md), so the sink picks the executor-JVM
+    cipher whenever ``register()`` bound the session to it — any session
+    built from the recipe with a JDK present — and the Arrow-batched
+    Python route otherwise.  Either way every blob must round-trip
+    bit-exact through parquet — the routing rule is a throughput decision,
+    never a correctness one, because both routes emit the same age v1 wire
+    format."""
     from .sources.encrypted import read_encrypted, write_encrypted
 
     _prep(spark)

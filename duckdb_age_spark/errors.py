@@ -74,6 +74,5 @@ def secret_manager_mismatch(name: str) -> str:
     return (
         f"Secret name '{name}' was resolved against a different SecretManager "
         "than the one this session's JVM crypto is registered with; call "
-        "register_jvm_crypto(spark, manager) on the session that executes "
-        "this plan"
+        "register(spark, manager) on the session that executes this plan"
     )

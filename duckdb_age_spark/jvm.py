@@ -1,4 +1,5 @@
-"""JVM-side age crypto path: build + registration helpers.
+"""JVM-side age crypto route: the jar build, its registration and the
+Column helpers.
 
 The pure-Python crypto path tops out at ~30-64 MB/s/core for >=1 MiB
 payloads because every byte crosses JVM -> Arrow -> Python and back
@@ -14,12 +15,12 @@ Usage::
     # the recipe puts ensure_jar()'s jar (javac+jar once, mtime-cached) on
     # spark.jars and the driver and executor classpaths
     spark = apply_recommended_conf(SparkSession.builder).getOrCreate()
-    register_jvm_crypto(spark)               # age_encrypt_jvm / age_decrypt_jvm
+    register(spark)      # also age_encrypt_jvm / age_decrypt_jvm / _multi
 
-The jar must be on the DRIVER classpath at JVM launch for
-``registerJavaFunction`` to resolve the class, so registration cannot be
-retrofitted onto a running session — which is why this is a separate opt-in
-seam rather than part of ``register()``.
+``register()`` binds this route whenever the driver JVM loads the jar's
+classes (:func:`classes_load`).  The jar must be on the DRIVER classpath at
+JVM launch for ``registerJavaFunction`` to resolve the class, so a session
+started without it keeps only the Python route.
 
 Scope: the registered SQL functions take bech32 key literals OR secret
 NAMES (same dispatch prefixes as the Python path).  Names resolve inside
@@ -31,15 +32,15 @@ executors through the binary closure channel — never through plan text
 (VERDICT r10 item 3; before this, ``decrypt_col`` embedded the resolved
 ``AGE-SECRET-KEY-1...`` literal in the plan and relied on display
 redaction).  Mutating the SecretManager re-stages the registry and
-re-registers the three UDFs via a listener, mirroring register.py's
-Python-path protocol — and with the same already-analyzed-DataFrame
-semantics: a plan built before the mutation keeps the snapshot it was
-built with.  The Column helpers below — ``encrypt_col`` / ``decrypt_col``
-/ ``encrypt_multi_col`` — validate names eagerly against the driver-side
-snapshot (same error strings, surfaced at plan-build instead of
-execution) and pass the NAME through when it is current in the JVM
-registry, falling back to the resolved literal only when the helper is
-given a manager other than the JVM-registered one (VERDICT r8 item 4).
+re-registers the three UDFs through register.py's one listener, which
+re-registers the Python UDFs too — with the same already-analyzed-DataFrame
+semantics on both routes: a plan built before the mutation keeps the
+snapshot it was built with.  The Column helpers below — ``encrypt_col`` /
+``decrypt_col`` / ``encrypt_multi_col`` — resolve names against the manager
+bound to the active session, validate them eagerly (same error strings,
+surfaced at plan-build instead of execution) and pass the NAME through
+when that session's JVM route is bound, falling back to the resolved
+literal otherwise (VERDICT r8 item 4).
 
 Caveat vs the Python path: ``registerJavaFunction`` offers no
 nondeterminism flag, so Catalyst MAY collapse two syntactically identical
@@ -56,6 +57,11 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+
+from .register import jvm_route_bound, registered_manager
+# kept for callers written before register() bound both routes
+from .register import register as register_jvm_crypto  # noqa: F401
+from .secrets import default_manager
 
 _JVM_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jvm")
 JAR_PATH = os.path.join(_JVM_DIR, "age-spark-udf.jar")
@@ -104,21 +110,16 @@ def ensure_jar() -> str:
     return JAR_PATH
 
 
-# The SecretManager staged into the JVM registry, and the listener that
-# keeps it staged, live as attributes on the SparkSession object itself (as
-# register.py's marker does), so they die with the session: no module
-# dict pins stopped sessions, and a new session can never alias a stale
-# entry through a reused id().  The col helpers pass NAMES through only
-# when resolving against this exact manager (any other manager falls back
-# to literal resolution, else the executor snapshot would answer for the
-# wrong manager).
-_JVM_MANAGER_ATTR = "_duckdb_age_jvm_manager"
-_JVM_LISTENER_ATTR = "_duckdb_age_jvm_listener"
+def classes_load(spark) -> bool:
+    """True iff the driver JVM loads the jar's ``agespark`` classes, i.e.
+    the jar was on the driver classpath at launch (the session recipe puts
+    it there).  Any failure (no gateway, a stub session) reads as no."""
+    from py4j.java_gateway import JavaClass
 
-
-def _staged_manager(spark):
-    """The SecretManager whose snapshot is staged for ``spark``, or None."""
-    return getattr(spark, _JVM_MANAGER_ATTR, None)
+    try:
+        return isinstance(spark._jvm.agespark.AgeSecretRegistry, JavaClass)
+    except Exception:
+        return False
 
 
 def _manager_fingerprint(manager) -> str:
@@ -147,11 +148,12 @@ def _wrap_name(name: str, manager) -> str:
     return f"{_NAME_MARKER}{_manager_fingerprint(manager)}\x00{name}"
 
 
-def _stage_and_register(spark, manager) -> None:
+def stage_and_register(spark, manager) -> None:
     """Stage ``manager``'s snapshot into agespark.AgeSecretRegistry, then
     (re-)register the three UDFs.  Order matters: the UDF constructors
     snapshot the registry (map AND staging fingerprint), so staging must
-    precede registration."""
+    precede registration.  ``register()`` calls this at binding time and
+    from its secret-mutation listener."""
     from pyspark.sql.types import BinaryType
 
     reg = spark._jvm.agespark.AgeSecretRegistry
@@ -166,128 +168,56 @@ def _stage_and_register(spark, manager) -> None:
     )
 
 
-def register_jvm_crypto(spark, manager=None) -> None:
-    """Register age_encrypt_jvm / age_decrypt_jvm / age_encrypt_multi_jvm
-    SQL functions.  The jar must already be on the driver classpath (see
-    module docstring).
-
-    ``manager`` selects whose named secrets the JVM path serves (default:
-    the manager ``register(spark, ...)`` used for this session, else the
-    process default).  The snapshot is staged into the JVM registry before
-    registration and re-staged + re-registered on every secret mutation via
-    a manager listener — the exact protocol register.py uses for the Python
-    UDFs, so both paths track CREATE/DROP SECRET identically.
-
-    Also installs ``spark.sql.redaction.string.regex`` covering
-    ``AGE-SECRET-KEY-1...`` literals (shared helper with ``register()``) as
-    defense-in-depth for RAW identity literals users pass explicitly; named
-    secrets no longer need it — their plans carry only the name."""
-    from .register import install_identity_redaction, registered_manager
-    from .secrets import default_manager
-
-    manager = manager or registered_manager(spark) or default_manager
-    _stage_and_register(spark, manager)
-    if _staged_manager(spark) is not manager:
-        # Drop the previous binding's listener first (ADVICE r11): without
-        # this, re-binding a session A->B->A would leave a dead guarded
-        # listener on each manager per re-bind — duplicated re-stage work
-        # per mutation and stopped sessions pinned through the listener
-        # list of a long-lived (e.g. process-default) manager.
-        stale = getattr(spark, _JVM_LISTENER_ATTR, None)
-        if stale is not None:
-            old_mgr, old_fn = stale
-            old_mgr.remove_listener(old_fn)
-        setattr(spark, _JVM_MANAGER_ATTR, manager)
-
-        def _resync(mgr=manager):
-            # Guarded listener (code-review r11): (a) if the session has
-            # since been re-bound to a DIFFERENT manager, this manager's
-            # mutations must not clobber the registry — no-op instead of
-            # re-staging a stale snapshot; (b) never raise out of
-            # SecretManager._notify (a stopped session would otherwise
-            # break create/drop for listeners queued after this one).
-            if _staged_manager(spark) is not mgr:
-                return
-            try:
-                _stage_and_register(spark, mgr)
-            except Exception as exc:  # stopped/broken session
-                import warnings
-
-                warnings.warn(
-                    f"JVM crypto re-registration skipped (session unusable?): {exc}",
-                    stacklevel=2,
-                )
-
-        manager.add_listener(_resync)
-        setattr(spark, _JVM_LISTENER_ATTR, (manager, _resync))
-    install_identity_redaction(spark)
-
-
 # ---------------------------------------------------------------------------
-# named-secret dispatch for the JVM path
+# named-secret dispatch for the JVM route
 # ---------------------------------------------------------------------------
 #
 # Dispatch rule and error strings are byte-identical to the Python path
 # (functions.py:52-70): a key is a literal iff it carries the age1 /
-# AGE-SECRET-KEY-1 prefix, anything else is a secret name.  Names are
-# VALIDATED eagerly here (plan-build error parity — any resolution failure
-# raises the reference taxonomy's message immediately) but, when the
-# effective manager is the one whose snapshot is staged in the JVM registry
-# for the active session, the NAME itself is what goes into the plan; the
-# executor-side UDF snapshot resolves it, so plan text never carries key
-# material (VERDICT r10 item 3).  Only when a caller supplies a different
-# manager do we fall back to embedding the resolved literal (the executor
-# snapshot would answer for the wrong manager) — that fallback is what the
-# shared redaction regex still covers.
+# AGE-SECRET-KEY-1 prefix, anything else is a secret name.  Names resolve
+# against the manager ``register()`` bound to the session that runs the plan
+# (for the Column helpers: the ACTIVE session) and are VALIDATED eagerly here
+# (plan-build error parity — any resolution failure raises the reference
+# taxonomy's message immediately).  When that session's JVM route is bound,
+# its registry is staged from exactly that manager, so the NAME itself is
+# what goes into the plan; the executor-side UDF snapshot resolves it, and
+# plan text never carries key material (VERDICT r10 item 3).  Otherwise the
+# resolved literal is embedded — the fallback the shared redaction regex
+# still covers.
 
 
-def _effective_manager(manager=None):
-    """The manager a col-helper call resolves against: an explicit one
-    wins; otherwise the manager the ACTIVE session's JVM registry was
-    staged from (so the helpers agree with the SQL surface —
-    ``age_encrypt_jvm(col, 'name')`` resolves executor-side against that
-    same staging; code-review r11); otherwise the process default.
-    Thread caveat: PySpark's active session is thread-local — a plan built
-    from a thread with no active session falls back to default_manager."""
-    if manager is not None:
-        return manager
-    from pyspark.sql import SparkSession
-
-    from .secrets import default_manager
-
-    staged = _staged_manager(SparkSession.getActiveSession())
-    return default_manager if staged is None else staged
-
-
-def _snapshot(manager=None):
-    return _effective_manager(manager).snapshot()
-
-
-def _named_passthrough_ok(manager=None) -> bool:
-    """True iff a secret NAME can be sent through the plan as-is: the
-    active session's JVM registry was staged from exactly the manager this
-    call resolves against (the listener keeps that staging current).
-    When this returns False for a NAME, the caller embeds the resolved
-    literal instead — a documented, redaction-covered degradation that
-    :func:`_warn_literal_fallback` makes loud."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
+def _plan_key(key: str, resolve, spark=None) -> str:
+    """The plan literal for ``key`` in a plan that ``spark`` (default: the
+    active session) runs.  A literal passes through.  A secret NAME is
+    resolved with ``resolve(key, snapshot)`` against the manager bound to
+    that session (the process default when none is), then rides the plan as
+    a fingerprint envelope when the session's JVM route is bound — it
+    executes only against a session staged from that manager, and any other
+    staging fails loudly instead of resolving the name with the wrong key
+    (ADVICE r11) — else as the resolved key, with a warning.  Thread caveat:
+    PySpark's active session is thread-local — a plan built from a thread
+    with no active session resolves against default_manager and embeds
+    literals."""
     if spark is None:
-        return False
-    return _staged_manager(spark) is _effective_manager(manager)
+        from pyspark.sql import SparkSession
 
-
-def _warn_literal_fallback(name: str) -> None:
+        spark = SparkSession.getActiveSession()
+    manager = registered_manager(spark) or default_manager
+    resolved = resolve(key, manager.snapshot())
+    if resolved == key:  # a literal
+        return key
+    if jvm_route_bound(spark):
+        return _wrap_name(key, manager)
     import warnings
 
     warnings.warn(
-        f"secret name {name!r} resolved driver-side into a plan literal "
-        "(the active session's JVM registry is not staged from this "
-        "manager — call register_jvm_crypto(spark, manager) to keep key "
+        f"secret name {key!r} resolved driver-side into a plan literal "
+        "(the session has no JVM route bound — register(spark, manager) "
+        "binds one when the jar is on the driver classpath, keeping key "
         "material out of plan text); display redaction still applies",
         stacklevel=3,
     )
+    return resolved
 
 
 def _cse_salt(key_col):
@@ -307,7 +237,7 @@ def _cse_salt(key_col):
     return F.concat(key_col, F.expr("substring(uuid(), 1, 0)"))
 
 
-def encrypt_col(data, key: str, manager=None, fresh: bool = False):
+def encrypt_col(data, key: str, fresh: bool = False):
     """Column: JVM-side encrypt with secret-name dispatch.
     ``encrypt_col(F.col("payload"), "prod_key")`` validates ``prod_key``
     against the driver-side snapshot (eager error parity) and passes the
@@ -325,24 +255,13 @@ def encrypt_col(data, key: str, manager=None, fresh: bool = False):
 
     from .functions import resolve_recipient
 
-    mgr = _effective_manager(manager)
-    resolved = resolve_recipient(key, mgr.snapshot())
-    if resolved != key:  # a NAME (literals resolve to themselves)
-        if _named_passthrough_ok(manager):
-            # fingerprint envelope: executes only against a session staged
-            # from THIS manager; any other staging fails loudly instead of
-            # resolving the name with the wrong key (ADVICE r11)
-            key = _wrap_name(key, mgr)
-        else:
-            _warn_literal_fallback(key)
-            key = resolved
-    key_col = F.lit(key)
+    key_col = F.lit(_plan_key(key, resolve_recipient))
     if fresh:
         key_col = _cse_salt(key_col)
     return F.call_udf("age_encrypt_jvm", data, key_col)
 
 
-def decrypt_col(data, key: str, manager=None):
+def decrypt_col(data, key: str):
     """Column: JVM-side decrypt with secret-name dispatch.
 
     A secret NAME is validated driver-side (same eager error strings) and
@@ -353,29 +272,21 @@ def decrypt_col(data, key: str, manager=None):
     (VERDICT r10 item 3).  Raw identity LITERALS the caller passes
     explicitly do appear in the plan — exactly like the Python path — and
     remain covered by the shared redaction regex; the same applies to the
-    fallback when ``manager`` differs from the JVM-registered one
+    literal fallback when the active session has no JVM route bound
     (PARITY.md "JVM path: identity literals")."""
     from pyspark.sql import functions as F
 
     from .functions import resolve_identity
 
-    mgr = _effective_manager(manager)
-    resolved = resolve_identity(key, mgr.snapshot())
-    if resolved != key:  # a NAME (literals resolve to themselves)
-        if _named_passthrough_ok(manager):
-            key = _wrap_name(key, mgr)  # see encrypt_col (ADVICE r11)
-        else:
-            _warn_literal_fallback(key)
-            key = resolved
-    return F.call_udf("age_decrypt_jvm", data, F.lit(key))
+    return F.call_udf("age_decrypt_jvm", data, F.lit(_plan_key(key, resolve_identity)))
 
 
-def encrypt_multi_col(data, keys: list[str], manager=None, fresh: bool = False):
+def encrypt_multi_col(data, keys: list[str], fresh: bool = False):
     """Column: JVM-side multi-recipient encrypt (one file key, N stanzas).
     Per-element dispatch matches functions.py::encrypt_multi_kernel —
     ``age1``-prefixed elements are literals, the rest are secret names
-    (validated eagerly, passed through by NAME when the JVM registry is
-    staged from this manager), with the same error strings.  The empty-list
+    (validated eagerly, passed through by NAME when the active session's
+    JVM route is bound), with the same error strings.  The empty-list
     and parse-failure checks run JVM-side so their taxonomy also matches.
     ``fresh=True`` carries the same Project/Filter-only position
     restriction as :func:`encrypt_col`."""
@@ -388,21 +299,16 @@ def encrypt_multi_col(data, keys: list[str], manager=None, fresh: bool = False):
         # eager twin of the JVM-side check: F.array() of zero columns has
         # no element type, so the empty case cannot be deferred to the UDF
         raise errors.AgeError(errors.RECIPIENTS_EMPTY)
-    mgr = _effective_manager(manager)
-    snapshot = mgr.snapshot()
-    passthrough = _named_passthrough_ok(manager)
-    resolved: list[str] = []
-    for r in keys:
+
+    def resolve(r: str, snapshot) -> str:
         if age_keys.is_recipient_format(r):
-            resolved.append(r)
-            continue
+            return r
         entry = snapshot.get(r)
         if entry is None or entry.get("public_key") is None:
             raise errors.AgeError(errors.invalid_recipient(r))
-        if not passthrough:
-            _warn_literal_fallback(r)
-        resolved.append(_wrap_name(r, mgr) if passthrough else entry["public_key"])
-    key_cols = [F.lit(k) for k in resolved]
+        return entry["public_key"]
+
+    key_cols = [F.lit(_plan_key(r, resolve)) for r in keys]
     if fresh:
         # salting one element is enough to defeat CSE for the whole call
         key_cols[0] = _cse_salt(key_cols[0])

@@ -5,7 +5,7 @@ import org.apache.spark.sql.api.java.UDF2;
 /**
  * age_encrypt_jvm(data BINARY, keyOrName STRING) -&gt; BINARY — JVM-side
  * single-recipient encrypt.  Registered via
- * spark.udf.registerJavaFunction by duckdb_age_spark.jvm.register_jvm_crypto;
+ * spark.udf.registerJavaFunction by duckdb_age_spark.register.register;
  * payload bytes never cross into Python (VERDICT r7 item 3).  Fresh file
  * key per call, so results are nondeterministic like the Python path.
  * Dispatch matches functions.py::resolve_recipient (ref

@@ -5,7 +5,7 @@ package agespark;
  *
  * <p>Secret NAMES must never appear resolved in plan text (explain, UI SQL
  * tab, event logs) — VERDICT r10 item 3.  The mechanism that keeps them out:
- * duckdb_age_spark.jvm.register_jvm_crypto pushes the Python SecretManager
+ * duckdb_age_spark.register.register pushes the Python SecretManager
  * snapshot into this static registry over py4j, then registers the UDF
  * classes.  {@code registerJavaFunction} constructs each UDF instance
  * DRIVER-SIDE via its no-arg constructor — the constructors here snapshot
@@ -15,9 +15,10 @@ package agespark;
  * Python path's UDF closures use (register.py docstring), and the SQL plan
  * only ever contains the secret NAME literal.
  *
- * <p>Mutation protocol mirrors register.py: any change to the manager
- * re-pushes the snapshot and RE-REGISTERS the three UDFs, because an
- * already-registered UDF instance holds an immutable snapshot.  That makes
+ * <p>Mutation protocol (register.py's one listener per session): any
+ * change to the manager re-pushes the snapshot and RE-REGISTERS the three
+ * UDFs, because an already-registered UDF instance holds an immutable
+ * snapshot.  That makes
  * the statics here pure staging — executors never read them (their copy is
  * the instance field), so this class being per-JVM is correct on a real
  * multi-JVM cluster, not just on local[*].
@@ -77,8 +78,8 @@ public final class AgeSecretRegistry {
             throw new IllegalArgumentException(
                     "Secret name '" + name + "' was resolved against a different "
                             + "SecretManager than the one this session's JVM crypto "
-                            + "is registered with; call register_jvm_crypto(spark, "
-                            + "manager) on the session that executes this plan");
+                            + "is registered with; call register(spark, manager) "
+                            + "on the session that executes this plan");
         }
         return name;
     }

@@ -80,13 +80,17 @@ def kernel_us_per_row(payload_bytes: int) -> float:
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
+    # AQE may stay on: every timed stage reads a cached repartition(n), and
+    # AQE never coalesces an explicit partition count
     spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("crypto-shapes")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{CPUS}]").appName("crypto-shapes"),
+            shuffle_partitions=CPUS,
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "false")  # keep partition counts exact
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

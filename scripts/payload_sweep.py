@@ -57,11 +57,9 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    age.register(spark)  # python path + the measured arrow batch tuning
-    from duckdb_age_spark.jvm import register_jvm_crypto
+    age.register(spark)  # both crypto routes + the measured arrow batch tuning
     from duckdb_age_spark.secrets import default_manager
 
-    register_jvm_crypto(spark)
     default_manager.create_secret(
         "sweepkey", public_key=PUB, private_key=PRIV, replace=True
     )

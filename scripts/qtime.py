@@ -41,12 +41,6 @@ def main() -> int:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try:
-        from duckdb_age_spark.jvm import register_jvm_crypto
-
-        register_jvm_crypto(spark)
-    except Exception:
-        pass
 
     from duckdb_age_spark import contract
 

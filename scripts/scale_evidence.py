@@ -53,11 +53,15 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from duckdb_age_spark.conf import apply_recommended_conf
+
     builder = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]")
-        .appName("scale-evidence")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(
+                f"local[{os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))}]"
+            ).appName("scale-evidence"),
+            shuffle_partitions=32,
+        )
         .config("spark.driver.memory", "24g")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(UI_PORT))

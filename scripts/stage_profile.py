@@ -35,12 +35,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    from duckdb_age_spark.conf import apply_recommended_conf
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())))
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
+        apply_recommended_conf(
+            SparkSession.builder.master(f"local[{cpus}]").appName("stage-profile"),
+            shuffle_partitions=cpus,
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.port", str(UI_PORT))
         .config("spark.ui.retainedStages", "5000")

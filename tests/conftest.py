@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import importlib
 import os
 import sys
+from types import SimpleNamespace
 
 import pytest
 
@@ -38,6 +40,27 @@ def count_jobs(spark, name: str, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+class StubSession:
+    """A stand-in SparkSession for ``register()``: conf writes are dropped,
+    each Python UDF registration is recorded as ``(name, udf)``, and it has
+    no ``_jvm``, so the class probe finds no ``agespark`` classes."""
+
+    def __init__(self):
+        self.registered = []
+        self.conf = SimpleNamespace(set=lambda key, value: None, get=lambda key, default=None: default)
+        self.udf = SimpleNamespace(register=lambda name, udf: self.registered.append((name, udf)))
+
+
+@pytest.fixture()
+def snapshot_udfs(monkeypatch):
+    """``register()`` builds one stand-in UDF per registration, the secret
+    snapshot it closes over, so a ``StubSession`` records whose secrets each
+    registration served.  Returns the register module."""
+    register_mod = importlib.import_module("duckdb_age_spark.register")
+    monkeypatch.setattr(register_mod, "build_udfs", lambda snapshot: {"age_encrypt": snapshot})
+    return register_mod
 
 
 @pytest.fixture()

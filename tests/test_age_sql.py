@@ -256,19 +256,11 @@ def test_keygen_from_seed_sql_deterministic(spark):
 
 def test_register_tunes_arrow_batch_size(spark):
     """register() sets the measured-fast Arrow batch size (2.4-4.1x encrypt
-    throughput at >=10k rows/partition — ROADMAP item 1) and honors the
-    arrow_batch_size=None opt-out."""
+    throughput at >=10k rows/partition — ROADMAP item 1)."""
     from duckdb_age_spark.register import register
     from duckdb_age_spark.secrets import SecretManager
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     spark.conf.set(key, "10000")
     register(spark, SecretManager())
-    assert spark.conf.get(key) == "1000"
-
-    spark.conf.set(key, "7777")
-    register(spark, SecretManager(), arrow_batch_size=None)
-    assert spark.conf.get(key) == "7777"
-
-    register(spark, SecretManager())  # restore tuned default for the session
     assert spark.conf.get(key) == "1000"

@@ -67,6 +67,9 @@ def test_harnesses_consume_the_engine_recipe():
         "scripts/banded_sf10_crosscheck.py",
         "scripts/minhash_sf10_crosscheck.py",
         "scripts/stream_floor_profile.py",
+        "scripts/bench_crypto_shapes.py",
+        "scripts/scale_evidence.py",
+        "scripts/stage_profile.py",
         "tests/conftest.py",
     ):
         src = open(os.path.join(REPO, rel)).read()

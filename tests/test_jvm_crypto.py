@@ -1,12 +1,12 @@
-"""JVM-side age crypto path (jvm/src/agespark) — wire-format interop with
-the Python path, and the Spark registerJavaFunction seam.
+"""JVM-side age crypto route (jvm/src/agespark) — wire-format interop with
+the Python route, and its registration by ``register()``.
 
 The Java implementation must be byte-compatible with crypto/format.py in
 BOTH directions: Java-encrypted files decrypt under the Python path and
 vice versa, including multi-chunk (>64 KiB) payloads.  The Spark-session
-test runs in a subprocess because the jar must be on the driver classpath
-at JVM launch (registerJavaFunction resolves the class on the driver), and
-the suite's shared session was started without it.
+tests run in subprocesses: they stop sessions, rebind them between managers
+and restage the JVM's process-wide secret registry, none of which may touch
+the suite's shared session.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ def jar():
     import shutil
 
     if shutil.which("javac") is None or shutil.which("java") is None:
-        pytest.skip("JDK not available — JVM crypto path is opt-in")
+        pytest.skip("JDK not available: no jar, so no JVM crypto route")
     from duckdb_age_spark.jvm import ensure_jar
 
     try:
@@ -150,7 +150,6 @@ import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 import duckdb_age_spark as age
-from duckdb_age_spark.jvm import register_jvm_crypto
 
 jar = {jar!r}
 spark = (SparkSession.builder.master("local[2]")
@@ -160,7 +159,6 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "2")
          .config("spark.ui.enabled", "false").getOrCreate())
 age.register(spark)
-register_jvm_crypto(spark)
 PUB, PRIV = {pub!r}, {priv!r}
 
 # cross-path inside ONE query: JVM encrypt -> Python decrypt, and the reverse
@@ -363,7 +361,7 @@ col_s1 = encrypt_col(F.col("pt"), "jvmkey")
 s2 = spark.newSession()
 m2 = SecretManager()
 m2.create_secret("jvmkey", public_key=PUB2, private_key=PRIV2)
-register_jvm_crypto(s2, m2)
+age.register(s2, m2)
 df2 = s2.range(1).select(F.encode(F.lit("named"), "UTF-8").alias("pt"))
 try:
     df2.select(col_s1.alias("ct")).collect()
@@ -372,25 +370,18 @@ except Exception as e:
     assert "was resolved against a different SecretManager" in str(e), str(e)[-500:]
     assert "jvmkey" in str(e)
     print("MISMATCH-GUARD-OK")
-# same name through s2's OWN helpers still works (envelope — or literal
-# fallback, depending on which session is thread-active — matches s2's
-# staging either way; only the Python-path UDFs are unregistered on s2)
-out2 = df2.select(decrypt_col(encrypt_col(F.col("pt"), "jvmkey", manager=m2),
-                              "jvmkey", manager=m2).alias("d")).first()
-assert bytes(out2.d) == b"named", out2.d
-print("MISMATCH-OWN-SESSION-OK")
 
 # --- listener hygiene (ADVICE r11): re-registering the same binding adds
 # no listener; re-binding a session removes the old manager's listener
 from duckdb_age_spark.secrets import default_manager as _dm2
 n0 = len(_dm2._listeners)
-register_jvm_crypto(spark)           # same (session, manager): no-op add
+age.register(spark)                  # same (session, manager): no-op add
 assert len(_dm2._listeners) == n0, (n0, len(_dm2._listeners))
 m3 = SecretManager()
-register_jvm_crypto(spark, m3)       # rebind: default loses its listener...
+age.register(spark, m3)              # rebind: default loses its listener...
 assert len(_dm2._listeners) == n0 - 1
 assert len(m3._listeners) == 1       # ...m3 gains exactly one
-register_jvm_crypto(spark)           # rebind back
+age.register(spark)                  # rebind back
 assert len(_dm2._listeners) == n0
 assert len(m3._listeners) == 0
 print("LISTENER-DEDUP-OK")
@@ -403,7 +394,6 @@ import sys, tempfile
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 import duckdb_age_spark as age
-from duckdb_age_spark.jvm import register_jvm_crypto
 from duckdb_age_spark.sources.encrypted import read_encrypted, write_encrypted
 
 jar = {jar!r}
@@ -414,7 +404,6 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "2")
          .config("spark.ui.enabled", "false").getOrCreate())
 age.register(spark)
-register_jvm_crypto(spark)
 PUB, PRIV = {pub!r}, {priv!r}
 
 base = tempfile.mkdtemp(prefix="age_route_test_")
@@ -428,14 +417,7 @@ assert r_big == {{"payload": "jvm"}}, r_big
 assert r_small == {{"payload": "python"}}, r_small
 print("ROUTE-BIG-JVM-OK"); print("ROUTE-SMALL-PY-OK")
 
-# cross-path readability: the JVM-encrypted file decrypts on the forced
-# Python path and vice versa — routing is throughput-only, never format
 exp_big = {{r.id: r.payload for r in big.collect()}}
-back_py = read_encrypted(spark, base + "/big", ["payload"], PRIV, crypto_path="python")
-assert {{r.id: r.payload for r in back_py.collect()}} == exp_big
-back_jvm = read_encrypted(spark, base + "/small", ["payload"], PRIV, crypto_path="jvm")
-assert {{r.id: r.payload for r in back_jvm.collect()}} == {{r.id: r.payload for r in small.collect()}}
-print("ROUTE-CROSS-READ-OK")
 
 # --- named-secret routing under a NON-DEFAULT manager (ADVICE r9): the
 # JVM route must resolve names against the manager registered for this
@@ -452,21 +434,43 @@ r_named = write_encrypted(big, base + "/named", ["payload"], "routekey")
 assert r_named == {{"payload": "jvm"}}, r_named
 back_named = read_encrypted(spark, base + "/named", ["payload"], "routekey")
 assert {{r.id: r.payload for r in back_named.collect()}} == exp_big
-# explicit manager= wins over the registered one, on the python route too
-r_exp = write_encrypted(small, base + "/explicit", ["payload"], "routekey", manager=custom)
-assert r_exp == {{"payload": "python"}}, r_exp
-back_exp = read_encrypted(spark, base + "/explicit", ["payload"], "routekey",
-                          manager=custom, crypto_path="python")
-assert {{r.id: r.payload for r in back_exp.collect()}} == {{r.id: r.payload for r in small.collect()}}
 print("ROUTE-MANAGER-OK")
+
+# a DataFrame of ANOTHER session resolves names against THAT session's
+# manager, not the active session's: `spark` (bound to `custom`) stays
+# active while s2's manager binds the same name to another keypair
+import warnings
+from duckdb_age_spark.crypto.keys import keygen_from_seed
+kp2 = keygen_from_seed(b"route-other-session")
+own = SecretManager()
+own.create_secret("routekey", public_key=kp2.public_key, private_key=kp2.private_key)
+s2 = spark.newSession()
+age.register(s2, own)
+big2 = s2.range(6).select("id", F.concat(F.lit("B"), F.expr("repeat('x', 70000)"),
+                                         F.col("id").cast("string")).alias("payload"))
+assert SparkSession.getActiveSession() is spark
+with warnings.catch_warnings(record=True) as caught:
+    warnings.simplefilter("always")
+    r_s2 = write_encrypted(big2, base + "/s2", ["payload"], "routekey")
+    back_s2 = read_encrypted(s2, base + "/s2", ["payload"], "routekey")
+    assert {{r.id: r.payload for r in back_s2.collect()}} == exp_big
+assert r_s2 == {{"payload": "jvm"}}, r_s2
+assert not [w for w in caught if "plan literal" in str(w.message)]  # the NAME rode the plan
+try:
+    read_encrypted(spark, base + "/s2", ["payload"], PRIV).collect()
+    print("NO-OTHER-SESSION-KEY")  # encrypted to the active session's key
+except Exception:
+    pass
+print("ROUTE-OTHER-SESSION-OK")
 spark.stop()
 """
 
 
 def test_encrypted_sink_size_based_routing(jar):
-    """End-to-end auto-routing with the jar present: 70 KB payloads route
-    to the JVM cipher, tiny ones stay on Python, and either file decrypts
-    under the OTHER path (same wire format)."""
+    """End-to-end routing with the jar present: 70 KB payloads route to the
+    JVM cipher, tiny ones stay on Python, and on the JVM route a secret
+    name resolves against the manager bound to the DataFrame's session,
+    even when another session is the active one."""
     script = _ROUTING_SCRIPT.format(repo=REPO, jar=jar, pub=PUB, priv=PRIV)
     proc = subprocess.run(
         [sys.executable, "-c", script], capture_output=True, text=True, cwd=REPO, timeout=600
@@ -475,10 +479,11 @@ def test_encrypted_sink_size_based_routing(jar):
     for marker in (
         "ROUTE-BIG-JVM-OK",
         "ROUTE-SMALL-PY-OK",
-        "ROUTE-CROSS-READ-OK",
         "ROUTE-MANAGER-OK",
+        "ROUTE-OTHER-SESSION-OK",
     ):
         assert marker in proc.stdout
+    assert "NO-OTHER-SESSION-KEY" not in proc.stdout
 
 
 def test_spark_registered_jvm_udfs_cross_path(jar):
@@ -520,7 +525,6 @@ def test_spark_registered_jvm_udfs_cross_path(jar):
     assert "ROTATION-OK" in proc.stdout
     # the multi-session fingerprint guard and listener hygiene (ADVICE r11)
     assert "MISMATCH-GUARD-OK" in proc.stdout
-    assert "MISMATCH-OWN-SESSION-OK" in proc.stdout
     assert "LISTENER-DEDUP-OK" in proc.stdout
     # no-raise regressions must FAIL, not silently print-and-continue
     # (ADVICE r11 low: each expected-error probe prints a NO-* marker on
@@ -537,37 +541,35 @@ def test_spark_registered_jvm_udfs_cross_path(jar):
         assert bad not in proc.stdout, f"expected-error probe did not raise: {bad}"
 
 
-def test_jvm_registration_lives_on_the_session(monkeypatch):
-    """The staged manager and its listener are attributes of the session
-    object: two sessions never share an entry, and a dropped session is
+def test_jvm_registration_lives_on_the_session(snapshot_udfs, monkeypatch):
+    """The binding (manager, routes, listener) is an attribute of the
+    session object: two sessions never share one, and a dropped session is
     not pinned by module state (no JVM needed — staging is stubbed)."""
     import gc
-    import importlib
     import weakref
 
     from duckdb_age_spark import jvm
     from duckdb_age_spark.secrets import SecretManager
+    from tests.conftest import StubSession
 
-    register_mod = importlib.import_module("duckdb_age_spark.register")
-    monkeypatch.setattr(jvm, "_stage_and_register", lambda spark, manager: None)
-    monkeypatch.setattr(register_mod, "install_identity_redaction", lambda spark: None)
+    monkeypatch.setattr(jvm, "classes_load", lambda spark: True)
+    monkeypatch.setattr(jvm, "stage_and_register", lambda spark, manager: None)
+    bound = snapshot_udfs.registered_manager
 
-    class _FakeSpark:
-        pass
-
-    a, b, m1, m2 = _FakeSpark(), _FakeSpark(), SecretManager(), SecretManager()
-    jvm.register_jvm_crypto(a, m1)
-    assert jvm._staged_manager(a) is m1
-    assert jvm._staged_manager(b) is None
-    jvm.register_jvm_crypto(b, m2)
-    assert (jvm._staged_manager(a), jvm._staged_manager(b)) == (m1, m2)
+    a, b, m1, m2 = StubSession(), StubSession(), SecretManager(), SecretManager()
+    snapshot_udfs.register(a, m1)
+    assert bound(a) is m1 and snapshot_udfs.jvm_route_bound(a)
+    assert bound(b) is None and not snapshot_udfs.jvm_route_bound(b)
+    snapshot_udfs.register(b, m2)
+    assert (bound(a), bound(b)) == (m1, m2)
     # re-binding a session moves its one listener to the new manager
-    jvm.register_jvm_crypto(a, m2)
-    assert jvm._staged_manager(a) is m2 and jvm._staged_manager(b) is m2
+    snapshot_udfs.register(a, m2)
+    assert bound(a) is m2 and bound(b) is m2
+    assert (len(m1._listeners), len(m2._listeners)) == (0, 2)
 
     # once the caller drops sessions and managers, nothing keeps them alive
     gone = weakref.ref(a)
     del a, b, m1, m2
     gc.collect()
     assert gone() is None
-    assert jvm._staged_manager(_FakeSpark()) is None
+    assert bound(StubSession()) is None

@@ -585,43 +585,14 @@ def test_encrypted_sink_roundtrip(spark, tmp_path, manager, docs):
 
 
 def test_crypto_routing_rule():
-    """Pure routing decision (sources/encrypted.py): explicit request
-    wins; auto takes the JVM path iff registered AND median payload is at
-    or above the measured 64 KiB crossover; asking for an unregistered
-    JVM path is a loud error, never a silent fallback."""
-    import pytest as _pytest
-
+    """The routing rule (sources/encrypted.py): the JVM route iff the
+    session is bound to it and the median payload is at or above the
+    measured 64 KiB crossover."""
     from duckdb_age_spark.sources.encrypted import JVM_CROSSOVER_BYTES, choose_crypto_path
 
-    assert choose_crypto_path("auto", True, JVM_CROSSOVER_BYTES) == "jvm"
-    assert choose_crypto_path("auto", True, JVM_CROSSOVER_BYTES - 1) == "python"
-    assert choose_crypto_path("auto", False, 10 * JVM_CROSSOVER_BYTES) == "python"
-    assert choose_crypto_path("python", True, 10 * JVM_CROSSOVER_BYTES) == "python"
-    assert choose_crypto_path("jvm", True, 0) == "jvm"
-    with _pytest.raises(RuntimeError, match="not registered"):
-        choose_crypto_path("jvm", False, 10 * JVM_CROSSOVER_BYTES)
-    with _pytest.raises(ValueError):
-        choose_crypto_path("fast", True, 0)
-
-
-def test_effective_manager_resolution_order():
-    """Manager dispatch for the routed sink (ADVICE r9): explicit wins,
-    then the session's registered manager, then None (-> downstream
-    default).  Uses plain objects — the session-attribute marker (ADVICE
-    r15: aliasing-proof, unlike the old id()-keyed dict) needs no real
-    session."""
-    from duckdb_age_spark.register import _REGISTERED_ATTR
-    from duckdb_age_spark.sources.encrypted import _effective_manager
-
-    class _FakeSpark:
-        pass
-
-    fake_spark, explicit, registered = _FakeSpark(), object(), object()
-    assert _effective_manager(fake_spark, explicit) is explicit
-    assert _effective_manager(fake_spark, None) is None
-    setattr(fake_spark, _REGISTERED_ATTR, registered)
-    assert _effective_manager(fake_spark, None) is registered
-    assert _effective_manager(fake_spark, explicit) is explicit
+    assert choose_crypto_path(True, JVM_CROSSOVER_BYTES) == "jvm"
+    assert choose_crypto_path(True, JVM_CROSSOVER_BYTES - 1) == "python"
+    assert choose_crypto_path(False, 10 * JVM_CROSSOVER_BYTES) == "python"
 
 
 def test_register_marker_cannot_alias_new_session():
@@ -637,44 +608,48 @@ def test_register_marker_cannot_alias_new_session():
     assert registered_manager(a) is None  # fresh object: never pre-registered
 
 
-def test_python_crypto_expr_resolves_only_with_explicit_manager(spark, manager):
-    """Python-route expression building: without an explicit manager the
-    secret NAME rides the plan (the registered UDF resolves it — keeps
-    identities out of plan text); with one, resolution happens driver-side
-    against THAT manager's snapshot."""
+def test_encrypted_sink_routes_python_without_jvm(spark, tmp_path, monkeypatch, docs):
+    """A session whose driver JVM loads no ``agespark`` classes binds only
+    the Python route: a 70 KB column routes there without a size probe and
+    round-trips."""
+    from duckdb_age_spark import jvm
     from duckdb_age_spark.contract import KP1
+    from duckdb_age_spark.register import jvm_route_bound, register
     from duckdb_age_spark.secrets import SecretManager
-    from duckdb_age_spark.sources.encrypted import _python_crypto_expr
-    from pyspark.sql import functions as F
+    from duckdb_age_spark.sources import encrypted
 
-    own = SecretManager()
-    own.create_secret("pxkey", public_key=KP1.public_key, private_key=KP1.private_key)
-    data = F.lit(b"x")
-    # name preserved when manager is None
-    assert "pxkey" in str(_python_crypto_expr("age_encrypt", data, "pxkey", None))
-    # resolved against the explicit manager otherwise (encrypt -> public,
-    # decrypt -> private)
-    assert KP1.public_key in str(_python_crypto_expr("age_encrypt", data, "pxkey", own))
-    assert KP1.private_key in str(_python_crypto_expr("age_decrypt", data, "pxkey", own))
-    # raw keys pass through under either mode
-    raw = str(_python_crypto_expr("age_encrypt", data, KP1.public_key, own))
-    assert KP1.public_key in raw
+    def no_probe(df, columns):
+        raise AssertionError("a Python-only session probed payload sizes")
 
-
-def test_encrypted_sink_routes_python_without_jvm(spark, tmp_path, manager, docs):
-    """In a session without the JVM functions, auto-routing must pick the
-    Python path for every payload size and skip the probe (no extra job
-    beyond the write itself is required for correctness here — just the
-    route)."""
-    from duckdb_age_spark.contract import KP1
-    from duckdb_age_spark.sources import write_encrypted
-
-    manager.create_secret("route_key", public_key=KP1.public_key, replace=True)
-    from pyspark.sql import functions as F
+    monkeypatch.setattr(jvm, "classes_load", lambda spark: False)
+    monkeypatch.setattr(encrypted, "_median_payload_bytes", no_probe)
+    m = register(spark, SecretManager())
+    assert not jvm_route_bound(spark)
+    m.create_secret("route_key", public_key=KP1.public_key, private_key=KP1.private_key)
 
     big = docs.limit(4).select("doc_id", F.rpad("text", 70000, "x").alias("text"))
-    routes = write_encrypted(big, str(tmp_path / "enc_route"), ["text"], recipient="route_key")
-    assert routes == {"text": "python"}
+    path = str(tmp_path / "enc_route")
+    assert encrypted.write_encrypted(big, path, ["text"], recipient="route_key") == {"text": "python"}
+    back = encrypted.read_encrypted(spark, path, ["text"], identity="route_key")
+    assert {r.doc_id: r.text for r in back.collect()} == {r.doc_id: r.text for r in big.collect()}
+
+
+def test_encrypted_sink_routes_blobs_to_jvm(spark, tmp_path, manager, docs):
+    """In the suite session (the recipe plus register() alone) a 96 KiB
+    column takes the JVM route on write and read, and round-trips."""
+    from duckdb_age_spark.conf import local_fs_conf
+    from duckdb_age_spark.contract import KP1
+    from duckdb_age_spark.sources import read_encrypted, write_encrypted
+
+    if not local_fs_conf():
+        pytest.skip("no JDK: the recipe session carries no jar")
+    manager.create_secret("blob_key", public_key=KP1.public_key, private_key=KP1.private_key)
+    blobs = docs.limit(4).select("doc_id", F.rpad("text", 96 * 1024, "x").alias("text"))
+    path = str(tmp_path / "enc_blobs")
+    assert write_encrypted(blobs, path, ["text"], recipient="blob_key") == {"text": "jvm"}
+    back = read_encrypted(spark, path, ["text"], identity="blob_key")
+    assert "age_decrypt_jvm" in back._jdf.queryExecution().analyzed().toString()
+    assert {r.doc_id: r.text for r in back.collect()} == {r.doc_id: r.text for r in blobs.collect()}
 
 
 def test_hash_sample_is_stable_and_stratified(docs):
